@@ -171,7 +171,33 @@ object GenTable {
       if (gens.keySet.forall(files.contains))
         Some(gens.keySet.toSeq.map(files).sum)
       else None
+    /** This commit with the `replaced` partitions swapped for what `s`
+      * landed: a landed partition takes the staged generation and the
+      * manifest lines read back from its files; a replaced partition that
+      * landed nothing leaves the manifest. The commit id is the staged
+      * generation even when nothing landed (a rewrite that empties every
+      * partition it touched), so ids stay strictly increasing.
+      */
+    private[sources] def fold(replaced: Iterable[String], s: Staged,
+        extraMeta: Map[String, String] = Map.empty): Commit = copy(
+      gens = gens -- replaced ++ s.sizes.keys.map(_ -> s.gen),
+      minGen = math.max(minGen, s.gen),
+      stats = stats -- replaced ++ s.stats,
+      meta = meta ++ s.meta ++ extraMeta,
+      sizes = sizes -- replaced ++ s.sizes,
+      rows = rows -- replaced ++ s.rows,
+      files = files -- replaced ++ s.files)
   }
+
+  /** What one [[stageGen]] landed at generation `gen`, per landed
+    * partition: bytes, exact rows, data files and skip bands, all read
+    * back from the written files; `meta` carries the written schema and
+    * the bloom column set with its sizing.
+    */
+  private[sources] final case class Staged(gen: Long,
+      sizes: Map[String, Long], rows: Map[String, Long],
+      files: Map[String, Long], stats: Map[String, Map[String, (Long, Long)]],
+      meta: Map[String, String])
 
   /** Reserved meta key carrying the committed schema (see object doc). */
   private val SchemaMetaKey = "table_schema"
@@ -1316,10 +1342,12 @@ object GenTable {
     */
   def stage(rows: DataFrame, dir: String, partitionCol: PartitionCols,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomExpectedItems: Long = 50000L): Commit =
-    stagePinned(rows, dir, partitionCol,
-      readCommit(dir).getOrElse(Commit(partitionCol.cols, Map.empty)),
-      statsCols, bloomCols, bloomExpectedItems)
+      bloomExpectedItems: Long = 50000L): Commit = {
+    val prev = readCommit(dir).getOrElse(Commit(partitionCol.cols, Map.empty))
+    val st = stagePinned(rows, dir, partitionCol, prev, statsCols, bloomCols,
+      bloomExpectedItems)
+    prev.fold(st.sizes.keys, st)
+  }
 
   /** Guard for every stale-orphan delete: removing a `gen=N` directory is
     * only safe while that generation is UNCOMMITTED (a crashed previous
@@ -1355,19 +1383,17 @@ object GenTable {
     * slip under the publish guard (the staged rewrite, derived from the
     * stale base, would silently drop the interleaved commit's changes
     * from every partition it rewrites). Pinned, any such interleave
-    * makes [[publish]] fail loud instead — the OCC retry's hook.
+    * makes [[publish]] fail loud instead — the OCC retry's hook. The
+    * staged schema is the running union of `prev`'s and `rows`'.
     */
   private def stagePinned(rows: DataFrame, dir: String,
       partitionCol: PartitionCols, prev: Commit,
       statsCols: Seq[String], bloomCols: Seq[String],
       bloomExpectedItems: Long,
-      // r16: when the caller already knows the staged frame's partition
-      // set (upsertBatch derives it from the batch before reading the
-      // existing partitions), passing it skips one distinct+collect job
-      // per commit. MUST be exactly the frame's partition set — the
-      // commit maps are keyed on it.
-      touchedOpt: Option[Seq[String]] = None): Commit = {
-    val (f, root) = fsRoot(dir)
+      // when the caller already knows the frame's partition set (upsertBatch
+      // derives it from the batch), passing it skips one distinct+collect
+      // job; the stage checks it against what landed
+      touchedOpt: Option[Seq[String]] = None): Staged = {
     val pcols = partitionCol.cols
     require(prev.partitionCols == pcols,
       s"table is partitioned by ${prev.partitionCol}, not " +
@@ -1382,85 +1408,152 @@ object GenTable {
         pathsOf(dir, prev)).schema)
     }
     val merged = prevSchema.fold(rows.schema)(p => mergeSchemas(p, rows.schema))
-    // validate skip-column encodability BEFORE any file lands: a refused
-    // write must leave no orphan generation behind
-    (statsCols ++ prev.trackedStatsCols).distinct
-      .filter(rows.columns.contains).foreach(rangeEncoded(rows.schema, _))
-    (bloomCols ++ bloomTrackOf(prev)).distinct
-      .filter(rows.columns.contains).foreach(keyEncoded(rows.schema, _))
-    val newGen = prev.tableGen + 1
     // NULL partition values are refused inside touchedKeys — fail loud
     // before any file lands
-    val touched = touchedOpt.getOrElse(touchedKeys(rows, pcols))
-    requireUncommitted(dir, touched, newGen)
-    touched.foreach { k =>
-      val orphan = genDir(root, pcols, k, newGen)
+    val touched = touchedOpt.getOrElse(touchedKeys(rows, pcols)).toSet
+    val st = stageGen(rows, dir, pcols, prev, touched, exact = true,
+      statsCols, bloomCols, bloomExpectedItems)
+    st.copy(meta = st.meta + (SchemaMetaKey -> merged.json))
+  }
+
+  /** The ONE staging path behind every data commit ([[stagePinned]],
+    * [[compact]], [[repartitionTable]], [[commitRewrite]]). In order:
+    *  1. guard and sweep orphan `gen=N` directories of the `declared`
+    *     partitions ([[requireUncommitted]]), N = `base.tableGen + 1`;
+    *  2. write `rows` under generation N, spread one task per declared
+    *     directory — or, with `compactTo = (files, maxRecordsPerFile)`,
+    *     in compaction layout — sorted by `clusterBy` within each task;
+    *  3. in that same write job, observe the partitions that landed
+    *     (`collect_set`: a retried or speculated task re-adds the same
+    *     keys) and check them against `declared`: equal when `exact`,
+    *     else a subset (a rewrite may empty partitions);
+    *  4. read the landed files' footers ([[genMeta]]): bytes, rows,
+    *     files, and the bands of footer-provable tracked columns;
+    *  5. build the bloom sidecars and every other tracked band
+    *     (timestamp, float/double, wide decimal, partition columns) in ONE
+    *     aggregate over the just-written generation directories.
+    * Every manifest field thus describes what landed, and nothing reads
+    * `rows` after the write: no caller freezes its frame for the stage's
+    * sake, and a frame that re-derives differently on a retried task
+    * still commits a manifest equal to its files. Tracked columns are
+    * `base`'s sticky sets plus `statsCols`/`bloomCols` — once a column is
+    * tracked anywhere, every rewrite of a touched partition re-derives it
+    * — restricted to the columns `rows` carries.
+    */
+  private def stageGen(rows: DataFrame, dir: String, pcols: Seq[String],
+      base: Commit, declared: Set[String], exact: Boolean,
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      bloomExpectedItems: Long = 50000L,
+      compactTo: Option[(Int, Long)] = None,
+      clusterBy: Seq[String] = Nil): Staged = {
+    val (f, root) = fsRoot(dir)
+    val schema = rows.schema
+    val track = (statsCols ++ base.trackedStatsCols).distinct
+      .filter(rows.columns.contains)
+    val bloomTrack = (bloomCols ++ bloomTrackOf(base)).distinct
+      .filter(rows.columns.contains)
+    // validate skip-column encodability BEFORE any file lands: a refused
+    // write must leave no orphan generation behind
+    track.foreach(rangeEncoded(schema, _))
+    bloomTrack.foreach(keyEncoded(schema, _))
+    val gen = base.tableGen + 1
+    requireUncommitted(dir, declared.toSeq, gen)
+    declared.foreach { k =>
+      val orphan = genDir(root, pcols, k, gen)
       if (f.exists(orphan)) f.delete(orphan, true)
     }
-    // The dynamic-partition write otherwise funnels through however many
-    // partitions the staged frame happens to have — often ONE after AQE's
-    // bytes-derived coalescing — and a single task then writes every
-    // touched dir SERIALLY (r17 profile: a 31-day upsert spent 1.1 s in
-    // one write task opening 31 parquet writers). Hash-spread by the
-    // partition columns with one slot per touched dir: each dir's rows
-    // land in exactly one task (one file per dir per batch — the
-    // compaction-friendly layout), write parallelism follows the batch's
-    // dir count at any scale, and the shuffle moves only this batch.
-    val spread = if (touched.size > 1)
-      rows.repartition(touched.size, pcols.map(col): _*) else rows
-    spread.withColumn("gen", lit(newGen))
-      .write.mode(SaveMode.Append)
-      .partitionBy(pcols :+ "gen": _*)
-      .parquet(dir)
-    // stats are STICKY: once a column is tracked anywhere, every rewrite
-    // of a touched partition re-derives it, so skipping keeps working
-    // without each writer re-declaring the column set
-    val track = (statsCols ++ prev.trackedStatsCols).distinct
-      .filter(rows.columns.contains)
-    // r17: provable tracked types ride the footer pass genMeta already
-    // pays (zero extra Spark jobs); the rest keep the aggregate scan
-    val footerStats = footerStatable(rows.schema, pcols, track)
-    // bloom sidecars follow the same sticky discipline (column set and
-    // sizing ride the manifest meta; the filters themselves are gen-named
-    // immutable sidecars, so they need no extra atomicity)
-    val items = prev.meta.get(BloomItemsKey).map(_.toLong)
-      .getOrElse(bloomExpectedItems)
-    val bloomTrack = (bloomCols ++ bloomTrackOf(prev)).distinct
-      .filter(rows.columns.contains)
-    if (bloomTrack.nonEmpty)
-      writeBlooms(rows, dir, pcols, newGen, bloomTrack, items)
-    val bloomMeta =
-      if (bloomTrack.isEmpty) Map.empty[String, String]
-      else Map(BloomColsKey -> bloomTrack.mkString(","),
-        BloomItemsKey -> items.toString)
-    val newMeta = touched.map(k =>
-      k -> genMeta(f, root, pcols, k, newGen,
-        if (footerStats) track.map(c => c -> rows.schema(c).dataType)
-        else Nil)).toMap
-    val newStats =
-      if (track.isEmpty) Map.empty[String, Map[String, (Long, Long)]]
-      else if (footerStats) newMeta.view.mapValues(_._4).toMap
-      else computeStats(rows, pcols, track)
-    // touchedOpt is TRUSTED for which partitions to register — verify it
-    // against what actually landed (newMeta is already listed, so this is
-    // free): a batch that violates the stable-partition-per-key contract
-    // can leave a trusted partition with zero files (its keys' winners all
-    // live elsewhere), which would otherwise commit an empty generation —
-    // a silent delete of that partition's published rows.
-    if (touchedOpt.isDefined) {
-      val empty = touched.filter(k => newMeta(k)._3 == 0L)
-      require(empty.isEmpty,
-        s"staged batch wrote no files for declared partition(s) " +
-          s"${empty.take(3).mkString(", ")} — the batch violates the " +
-          s"stable-partition-per-key contract (a key's rows moved to a " +
-          s"different partition); nothing was published")
+    val landed = if (declared.isEmpty) Set.empty[String] else {
+      // The dynamic-partition write otherwise funnels through however many
+      // partitions the frame happens to have — often ONE after AQE's
+      // bytes-derived coalescing, and a single task then writes every dir
+      // serially (profiled: a 31-day upsert spent 1.1 s in one task
+      // opening 31 parquet writers). One hash slot per declared dir: each
+      // dir's rows land in one task (one file per dir per batch), and
+      // write parallelism follows the batch's dir count at any scale.
+      val slots = compactTo.fold(declared.size)(_._1)
+      val withGen = rows.withColumn("gen", lit(gen))
+      val laid =
+        if (compactTo.isDefined && clusterBy.isEmpty) withGen.repartition(slots)
+        else if (slots > 1 || clusterBy.nonEmpty)
+          withGen.repartition(slots, pcols.map(col): _*)
+        else withGen
+      val obs = org.apache.spark.sql.Observation()
+      val out = laid.observe(obs, collect_set(struct(
+          pcols.map(p => col(p).cast("string").as(p)): _*)).as("_parts"))
+      // gen joins the cluster sort, so the writer's required ordering
+      // (partition columns, gen) already holds and it does not re-sort
+      val w = (if (clusterBy.isEmpty) out else out.sortWithinPartitions(
+        (pcols ++ Seq("gen") ++ clusterBy).map(col): _*)).write
+      compactTo.fold(w)(t => w.option("maxRecordsPerFile", t._2))
+        .mode(SaveMode.Append).partitionBy(pcols :+ "gen": _*).parquet(dir)
+      val parts = obs.get("_parts")
+        .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
+      require(parts.forall(r => pcols.indices.forall(!r.isNullAt(_))),
+        s"stage under $dir wrote rows with NULL partition value(s) — " +
+          s"GenTable partition values must be non-null; nothing was " +
+          s"published (the staged generation is orphaned and will be swept)")
+      parts.map(r => partKey(pcols.indices.map(r.getString))).toSet
     }
-    Commit(pcols, prev.gens ++ touched.map(_ -> newGen),
-      stats = (prev.stats -- touched) ++ newStats,
-      meta = prev.meta + (SchemaMetaKey -> merged.json) ++ bloomMeta,
-      sizes = (prev.sizes -- touched) ++ newMeta.view.mapValues(_._1).toMap,
-      rows = (prev.rows -- touched) ++ newMeta.view.mapValues(_._2).toMap,
-      files = (prev.files -- touched) ++ newMeta.view.mapValues(_._3).toMap)
+    val empty = if (exact) declared -- landed else Set.empty[String]
+    val undeclared = landed -- declared
+    require(empty.isEmpty && undeclared.isEmpty,
+      s"stage under $dir landed no rows in declared partition(s) " +
+        s"[${empty.take(3).mkString(", ")}] and rows in undeclared " +
+        s"partition(s) [${undeclared.take(3).mkString(", ")}] — a key's " +
+        s"rows moved to a different partition (the stable-partition-per-" +
+        s"key contract); nothing was published")
+    val footerTrack = track.filter(footerProvable(schema, pcols, _))
+    val metas = landed.map(k => k -> genMeta(f, root, pcols, k, gen,
+      footerTrack.map(c => c -> schema(c).dataType))).toMap
+    val aggTrack = track.filterNot(footerTrack.contains)
+    val items = base.meta.get(BloomItemsKey).map(_.toLong)
+      .getOrElse(bloomExpectedItems)
+    val aggBands: Map[String, Map[String, (Long, Long)]] =
+      if (landed.isEmpty || (aggTrack.isEmpty && bloomTrack.isEmpty)) Map.empty
+      else {
+        // Bloom sidecars insert values as longs via [[keyEncoded]], sized
+        // for `items` distinct values at 1% fpp (~60 KB per sidecar at the
+        // 50k default); an over-filled filter only skips less (no false
+        // negatives at any fill). Bands encode via [[rangeEncoded]].
+        graft.plans.GraftExtensions.register(rows.sparkSession)
+        val numBits = math.max(64L, math.ceil(
+          -items * math.log(0.01) / (math.log(2) * math.log(2))).toLong)
+        val aggs = aggTrack.flatMap(c => Seq(
+          min(rangeEncoded(schema, c)).as(s"_mn_$c"),
+          max(rangeEncoded(schema, c)).as(s"_mx_$c"))) ++
+          bloomTrack.map(c => call_function("bloom_agg", keyEncoded(schema, c),
+            lit(items), lit(numBits)).as(s"_bf_$c"))
+        if (bloomTrack.nonEmpty) f.mkdirs(new HPath(root, "_filters"))
+        rows.sparkSession.read.option("basePath", dir).schema(schema)
+          .parquet(landed.toSeq.sorted.map(genPath(dir, pcols, _, gen)): _*)
+          .groupBy(pcols.map(c => col(c).cast("string")): _*)
+          .agg(aggs.head, aggs.tail: _*)
+          .collect().map { r => // bounded: partitions per batch
+            val k = partKey(pcols.indices.map(r.getString))
+            bloomTrack.foreach { c =>
+              val bytes = r.getAs[Array[Byte]](s"_bf_$c")
+              // an all-null group aggregates to null: no sidecar, read
+              // conservatively
+              if (bytes != null)
+                writeBytes(f, bloomPath(root, k, c, gen), bytes)
+            }
+            // an all-null group gets no band (read conservatively)
+            k -> aggTrack.flatMap { c =>
+              val mn = r.getAs[Any](s"_mn_$c")
+              val mx = r.getAs[Any](s"_mx_$c")
+              if (mn == null || mx == null) None
+              else Some(c -> (mn.asInstanceOf[Long], mx.asInstanceOf[Long]))
+            }.toMap
+          }.toMap
+      }
+    Staged(gen, metas.map { case (k, m) => k -> m._1 },
+      metas.map { case (k, m) => k -> m._2 },
+      metas.map { case (k, m) => k -> m._3 },
+      metas.map { case (k, m) =>
+        k -> (m._4 ++ aggBands.getOrElse(k, Map.empty)) }.filter(_._2.nonEmpty),
+      Map(SchemaMetaKey -> schema.json) ++ (if (bloomTrack.isEmpty) Map.empty
+        else Map(BloomColsKey -> bloomTrack.mkString(","),
+          BloomItemsKey -> items.toString)))
   }
 
   /** Bytes AND exact row count of the data files under one generation
@@ -1476,13 +1569,12 @@ object GenTable {
     * [[graft.plans.GenTableMetadataAggregate]]) instead of a table scan.
     *
     * When `track` is non-empty (every column pre-vetted by
-    * [[footerStatable]]), the SAME parsed footers also yield the skip
-    * tier's encoded min/max bands — the r17 replacement for the
-    * [[computeStats]] aggregate job, which re-scanned the whole staged
-    * batch once per tracked commit just to re-derive what the writers
-    * already recorded. A column whose footer evidence is not airtight in
-    * some file (missing chunk, missing statistics with non-null rows, an
-    * unexpected physical type) gets NO band — the conservative direction:
+    * [[footerProvable]]), the SAME parsed footers also yield the skip
+    * tier's encoded min/max bands at zero extra Spark jobs; [[stageGen]]
+    * aggregates only the columns the footers cannot prove. A column
+    * whose footer evidence is not airtight in some file (missing chunk,
+    * missing statistics with non-null rows, an unexpected physical type)
+    * gets NO band — the conservative direction:
     * readers open the partition instead of trusting a band we cannot
     * prove, and the metadata-only aggregate falls back to the scan.
     */
@@ -1533,7 +1625,7 @@ object GenTable {
     * statistics are missing while non-null rows exist, or the physical
     * type is not one [[footerEncoded]] recognizes) — the whole column
     * then records no band for this partition. All-null chunks contribute
-    * nothing, exactly like [[computeStats]]' null-ignoring min/max.
+    * nothing, exactly like the aggregate tier's null-ignoring min/max.
     */
   private def fileBand(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
       name: String, dt: DataType): (Boolean, Option[(Long, Long)]) = {
@@ -1568,7 +1660,7 @@ object GenTable {
     * dates, truncation-toward-zero for in-long-range decimals), and for
     * a monotone f, `min f(x) == f(min x)` — so the footer's exact value
     * bounds encode to exactly the aggregate's band. Types that break the
-    * proof never reach here ([[footerStatable]] routes them to the
+    * proof never reach here ([[footerProvable]] routes them to the
     * aggregate): timestamps land as INT96 (no usable statistics under
     * Spark's default `outputTimestampType`), float/double stats are NaN-
     * contaminated UNDETECTABLY (parquet-java's `<` comparisons skip a
@@ -1606,25 +1698,22 @@ object GenTable {
   private def decTruncToLong(unscaled: Long, scale: Int): Long =
     java.math.BigDecimal.valueOf(unscaled, scale).toBigInteger.longValue()
 
-  /** True iff EVERY tracked column's encoded band is provably derivable
+  /** True iff tracked column `c`'s encoded band is provably derivable
     * from the parquet footers the commit already opens for row counts —
-    * the gate that decides, per commit, whether skip stats ride the
-    * footer pass (zero extra Spark jobs) or the [[computeStats]]
-    * aggregate (one extra scan of the staged batch). See
+    * the per-column gate between the footer pass (zero extra Spark jobs)
+    * and [[stageGen]]'s aggregate over the written files. See
     * [[footerEncoded]] for why each type is in or out; partition columns
     * are out because `partitionBy` moves them into directory names (no
     * column chunk to read).
     */
-  private def footerStatable(schema: StructType, pcols: Seq[String],
-      track: Seq[String]): Boolean = {
+  private def footerProvable(schema: StructType, pcols: Seq[String],
+      c: String): Boolean = {
     import org.apache.spark.sql.types._
-    track.forall { c =>
-      !pcols.contains(c) && (schema(c).dataType match {
-        case ByteType | ShortType | IntegerType | LongType | DateType => true
-        case d: DecimalType => d.precision - d.scale <= 18
-        case _ => false
-      })
-    }
+    !pcols.contains(c) && (schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType | DateType => true
+      case d: DecimalType => d.precision - d.scale <= 18
+      case _ => false
+    })
   }
 
   // ------------------------------------------------- skip-tier encoding
@@ -1705,62 +1794,6 @@ object GenTable {
         new java.io.ByteArrayInputStream(readRaw(f, p)))
       keys.exists(bf.mightContainLong)
     }
-  }
-
-  /** Per-(partition, column) Bloom sidecars at generation `gen`, built in
-    * ONE grouped aggregate over `rows` (bounded by partitions-per-batch ×
-    * tracked columns, like [[computeStats]]). Values insert as longs via
-    * [[keyEncoded]] (integrals/dates/timestamps in the stats tier's
-    * semantics; strings as `xxhash64`); an over-filled filter degrades
-    * toward more false positives — weaker skipping, never a wrong result,
-    * because Bloom filters have no false negatives at any fill. Sized for
-    * `expectedItems` distinct values at 1% fpp (~60 KB per sidecar at the
-    * 50k default).
-    */
-  private def writeBlooms(rows: DataFrame, dir: String, pcols: Seq[String],
-      gen: Long, track: Seq[String], expectedItems: Long): Unit = {
-    if (track.isEmpty) return
-    val (f, root) = fsRoot(dir)
-    f.mkdirs(new HPath(root, "_filters"))
-    graft.plans.GraftExtensions.register(rows.sparkSession)
-    val numBits = math.max(64L, math.ceil(
-      -expectedItems * math.log(0.01) / (math.log(2) * math.log(2))).toLong)
-    val aggs = track.map(c => call_function("bloom_agg",
-      keyEncoded(rows.schema, c), lit(expectedItems), lit(numBits)).as(s"_bf_$c"))
-    rows.groupBy(pcols.map(c => col(c).cast("string")): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().foreach { r => // bounded: partitions per batch
-        val k = partKey(pcols.indices.map(r.getString))
-        track.foreach { c =>
-          val bytes = r.getAs[Array[Byte]](s"_bf_$c")
-          // all-null group aggregates to null: no sidecar, read conservatively
-          if (bytes != null) writeBytes(f, bloomPath(root, k, c, gen), bytes)
-        }
-      }
-  }
-
-  /** Per-partition min/max of `track` columns over `rows` in one
-    * map-side-combined aggregate; bounded by partitions-per-batch ×
-    * tracked columns. Values encode via [[rangeEncoded]] (timestamps as
-    * epoch seconds, dates as epoch days); all-null partitions get no
-    * entry (read conservatively by [[readRange]]).
-    */
-  private def computeStats(rows: DataFrame, pcols: Seq[String],
-      track: Seq[String]): Map[String, Map[String, (Long, Long)]] = {
-    if (track.isEmpty) return Map.empty
-    val aggs = track.flatMap(c => Seq(
-      min(rangeEncoded(rows.schema, c)).as(s"_mn_$c"),
-      max(rangeEncoded(rows.schema, c)).as(s"_mx_$c")))
-    rows.groupBy(pcols.map(c => col(c).cast("string")): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        partKey(pcols.indices.map(r.getString)) -> track.flatMap { c =>
-          val mn = r.getAs[Any](s"_mn_$c")
-          val mx = r.getAs[Any](s"_mx_$c")
-          if (mn == null || mx == null) None
-          else Some(c -> (mn.asInstanceOf[Long], mx.asInstanceOf[Long]))
-        }.toMap
-      }.toMap
   }
 
   /** Stats-pruned range read: partitions whose tracked `[min, max]` for
@@ -1917,52 +1950,32 @@ object GenTable {
         .fold(batch)(_.unionByName(batch, allowMissingColumns = true))
       // orderCols is the caller's total-order-per-key contract; if a batch
       // violates it (two rows tie), a whole-row hash breaks the tie
-      // DETERMINISTICALLY — without it, the r16 removal of the pre-stage
-      // localCheckpoint would let a retried write task pick a different
-      // winner than the one the commit maps were derived from. Under the
-      // contract the hash never decides anything (no ties reach it).
+      // DETERMINISTICALLY — the merge is not frozen, so without it a
+      // retried task could pick a different winner than its first
+      // attempt. Under the contract the hash never decides anything.
       val w = Window.partitionBy(col(keyCol))
         .orderBy(orderCols.map(col(_).desc) :+
           xxhash64(unioned.columns.toSeq.map(col): _*).desc: _*)
+      // The merge is computed inside the write job itself (the stage reads
+      // nothing back from it): the committed inputs are immutable and
+      // `readPaths` pins explicit gen<=N paths while staging appends
+      // gen=N+1 files.
       val merged = unioned
         .withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1).drop("_rn")
-      // Materialize before staging ONLY when staging reads the frame more
-      // than once (tracked stats/bloom sidecars re-aggregate it after the
-      // write). The committed inputs are immutable and `readPaths` pins
-      // explicit gen<=N paths while staging appends gen=N+1 files, so a
-      // single-consumer merge is safe to compute inside the write job
-      // itself — r16: this drops one materialize+reread cycle from every
-      // untracked upsert commit (most of the e-family lifecycle).
-      // row_number's order is total per key (orderCols is the caller's
-      // uniqueness contract), so a retried write task re-derives the
-      // identical winner.
-      // r17: footer-provable tracked stats no longer re-read the frame
-      // (stagePinned derives them from the written files' footers), so
-      // only an aggregate-tier stats column or a bloom sidecar forces
-      // the freeze
-      val statsTrack = (statsCols ++ prev.trackedStatsCols).distinct
-        .filter(merged.columns.contains)
-      val reused =
-        (statsTrack.nonEmpty &&
-          !footerStatable(merged.schema, pcols, statsTrack)) ||
-        (bloomCols ++ bloomTrackOf(prev)).distinct
-          .exists(merged.columns.contains)
-      val frozen = if (reused) merged.localCheckpoint(true) else merged
       try {
         // test hook: deterministically publish a concurrent writer in the
         // pre-stage window (the orphan-delete guard's scenario)
         preStageHook.foreach { h => preStageHook = None; h() }
-        val staged = stagePinned(frozen, dir, partitionCol, prev,
+        val staged = stagePinned(merged, dir, partitionCol, prev,
           statsCols, bloomCols, bloomExpectedItems,
-          touchedOpt = Some(touchedVals.toSeq.sorted))
+          touchedOpt = Some(touchedVals.toSeq))
         // test hook: deterministically interleave another writer between
         // stage and publish (the OCC conflict window)
         interleaveHook.foreach { h => interleaveHook = None; h() }
-        publish(dir, staged.copy(meta =
-          staged.meta ++ opMeta("upsert") ++
-            writeDefaultsMeta(keyCol, orderCols, statsCols, bloomCols) ++
-            extraMeta))
+        publish(dir, prev.fold(touchedVals, staged, opMeta("upsert") ++
+          writeDefaultsMeta(keyCol, orderCols, statsCols, bloomCols) ++
+          extraMeta))
         committed = true
       } catch {
         case e: IllegalArgumentException
@@ -1992,7 +2005,7 @@ object GenTable {
               s"serialize writers per key range or re-run the batch " +
               s"against the new head deliberately", e)
           prev = newHead // commutative: rebase and retry
-      } finally frozen.unpersist()
+      }
     }
   }
 
@@ -2085,27 +2098,15 @@ object GenTable {
     try {
       val prevC = readCommit(dir)
         .getOrElse(Commit(partitionCol.cols, Map.empty))
-      val prevGen = prevC.tableGen
-      val touched = touchedKeys(frozen, partitionCol.cols).toSet
-      // r17: hand the frame-derived set to stagePinned — it re-derived the
-      // same distinct+collect over the same pinned frame (one job less)
       val staged = stagePinned(frozen, dir, partitionCol, prevC,
         statsCols, bloomCols, 50000L,
-        touchedOpt = Some(touched.toSeq.sorted))
+        touchedOpt = Some(touchedKeys(frozen, partitionCol.cols)))
       // an empty replace still commits (meta-only, e.g. an empty view's
-      // marker) — minGen forces a fresh commit id in that case. Replace
+      // marker) under the staged generation's fresh commit id. Replace
       // semantics: the schema is exactly `rows`' (no union with history —
       // every surviving partition was rewritten from `rows`).
-      Commit(partitionCol.cols,
-        staged.gens.filter { case (v, _) => touched(v) },
-        math.max(staged.tableGen, prevGen + 1),
-        staged.stats.filter { case (v, _) => touched(v) },
-        Map(SchemaMetaKey -> frozen.schema.json) ++
-          staged.meta.view.filterKeys(
-            k => k == BloomColsKey || k == BloomItemsKey).toMap,
-        staged.sizes.filter { case (v, _) => touched(v) },
-        staged.rows.filter { case (v, _) => touched(v) },
-        staged.files.filter { case (v, _) => touched(v) })
+      Commit(partitionCol.cols, Map.empty).fold(Nil, staged,
+        Map(SchemaMetaKey -> frozen.schema.json))
     } finally frozen.unpersist()
   }
 
@@ -2213,23 +2214,12 @@ object GenTable {
       val d = writeDefaultsOf(c)
       val staged = stagePinned(frozen, dir, PartitionCols(pcols), c,
         (statsCols ++ d.statsCols).distinct,
-        (bloomCols ++ d.bloomCols).distinct, 50000L)
-      val touched = batchKeys.toSet
+        (bloomCols ++ d.bloomCols).distinct, 50000L,
+        touchedOpt = Some(batchKeys))
       // region partitions drop unless restaged; everything else carries
-      publish(dir, Commit(pcols,
-        (c.gens -- committedMatch) ++
-          staged.gens.view.filterKeys(touched).toMap,
-        c.tableGen + 1,
-        (c.stats -- committedMatch) ++
-          staged.stats.view.filterKeys(touched).toMap,
-        staged.meta ++ opMeta("replace_where") ++ extraMeta,
-        (c.sizes -- committedMatch) ++
-          staged.sizes.view.filterKeys(touched).toMap,
-        (c.rows -- committedMatch) ++
-          staged.rows.view.filterKeys(touched).toMap,
-        (c.files -- committedMatch) ++
-          staged.files.view.filterKeys(touched).toMap))
-      (committedMatch ++ touched).size.toLong
+      publish(dir, c.fold(committedMatch ++ batchKeys, staged,
+        opMeta("replace_where") ++ extraMeta))
+      (committedMatch ++ batchKeys).size.toLong
     } finally frozen.unpersist()
   }
 
@@ -2420,54 +2410,27 @@ object GenTable {
   def compact(spark: SparkSession, dir: String, targetRecordsPerFile: Long,
       clusterBy: Seq[String] = Nil): (Long, Long) = {
     require(targetRecordsPerFile > 0, "targetRecordsPerFile must be positive")
-    val (fsys, root) = fsRoot(dir)
     val c = readCommit(dir).getOrElse(
       throw new IllegalStateException(s"no committed generation under $dir"))
-    def committedFiles(cm: Commit): Long = cm.gens.map { case (k, g) =>
-      listDir(fsys, genDir(root, cm.partitionCols, k, g))
-        .count(_.getName.endsWith(".parquet")).toLong
-    }.sum
-    val before = committedFiles(c)
     val df = read(spark, dir).get
-    val n = df.count()
-    val files = math.max(1L, (n + targetRecordsPerFile - 1) / targetRecordsPerFile)
-    val newGen = c.tableGen + 1
-    requireUncommitted(dir, c.gens.keys.toSeq, newGen)
-    c.gens.keys.foreach { k =>
-      val orphan = genDir(root, c.partitionCols, k, newGen)
-      if (fsys.exists(orphan)) fsys.delete(orphan, true)
+    // row and file counts come from the manifest's #rows/#files lines; a
+    // count job and a listing serve only manifests that predate them
+    val n = c.totalRows.getOrElse(df.count())
+    val before = c.totalFiles.getOrElse {
+      val (fsys, root) = fsRoot(dir)
+      c.gens.map { case (k, g) =>
+        listDir(fsys, genDir(root, c.partitionCols, k, g))
+          .count(_.getName.endsWith(".parquet")).toLong
+      }.sum
     }
-    // gen is added BEFORE the cluster sort so the writer's required
-    // ordering (partition columns, gen) is already satisfied and it does
-    // not re-sort — a writer-side re-sort would destroy the cluster order
-    val base = df.withColumn("gen", lit(newGen))
-    val staged =
-      if (clusterBy.isEmpty) base.repartition(files.toInt)
-      else base.repartition(files.toInt, c.partitionCols.map(col): _*)
-        .sortWithinPartitions(
-          (c.partitionCols ++ Seq("gen") ++ clusterBy).map(col): _*)
-    staged
-      .write.mode(SaveMode.Append)
-      .option("maxRecordsPerFile", targetRecordsPerFile)
-      .partitionBy(c.partitionCols :+ "gen": _*)
-      .parquet(dir)
-    // contents are unchanged by compaction, so stats/meta carry over
-    // (plus the schema, derived once here for legacy tables); bloom
-    // sidecars regenerate at the new generation — skipping survives the
-    // rewrite
-    writeBlooms(df, dir, c.partitionCols, newGen,
-      bloomTrackOf(c).filter(df.columns.contains),
-      c.meta.get(BloomItemsKey).map(_.toLong).getOrElse(50000L))
-    val compactMeta = c.gens.keys.map(k =>
-      k -> genMeta(fsys, root, c.partitionCols, k, newGen)).toMap
-    val next = Commit(c.partitionCols,
-      c.gens.map { case (v, _) => v -> newGen }, stats = c.stats,
-      meta = c.meta ++ opMeta("compact") + (SchemaMetaKey -> df.schema.json),
-      sizes = compactMeta.view.mapValues(_._1).toMap,
-      rows = compactMeta.view.mapValues(_._2).toMap,
-      files = compactMeta.view.mapValues(_._3).toMap)
-    publish(dir, next)
-    (before, committedFiles(next))
+    val files = math.max(1L, (n + targetRecordsPerFile - 1) / targetRecordsPerFile)
+    // contents are unchanged by compaction; every manifest field (bands
+    // and bloom sidecars included) is re-read from the rewritten files
+    val staged = stageGen(df, dir, c.partitionCols, c, c.gens.keySet,
+      exact = true, compactTo = Some((files.toInt, targetRecordsPerFile)),
+      clusterBy = clusterBy)
+    publish(dir, c.fold(c.gens.keys, staged, opMeta("compact")))
+    (before, staged.files.values.sum)
   }
 
   /** PARTITION EVOLUTION: atomically re-key the table onto a different
@@ -2491,7 +2454,6 @@ object GenTable {
     */
   def repartitionTable(spark: SparkSession, dir: String,
       newPartitionCol: PartitionCols, clusterBy: Seq[String] = Nil): Long = {
-    val (f, root) = fsRoot(dir)
     val pcols = newPartitionCol.cols
     val c = readCommit(dir).getOrElse(
       throw new IllegalStateException(s"no committed GenTable under $dir"))
@@ -2501,50 +2463,14 @@ object GenTable {
     val df = read(spark, dir).get
     pcols.foreach(p => require(df.columns.contains(p),
       s"new partition column '$p' is not a column of $dir"))
+    // frozen: the new partition set must be known before the write
     val frozen = df.localCheckpoint(true)
     try {
-      val newGen = c.tableGen + 1
-      val touched = touchedKeys(frozen, pcols) // bounded: new partitions
-      requireUncommitted(dir, touched, newGen)
-      touched.foreach { k =>
-        val orphan = genDir(root, pcols, k, newGen)
-        if (f.exists(orphan)) f.delete(orphan, true)
-      }
-      val base = frozen.withColumn("gen", lit(newGen))
-      val staged =
-        if (clusterBy.isEmpty) {
-          // spread the dynamic-partition write across the touched dirs
-          // (see stagePinned: one post-AQE partition otherwise writes
-          // every dir serially through a single task)
-          if (touched.size > 1)
-            base.repartition(touched.size, pcols.map(col): _*) else base
-        }
-        else base.repartition(pcols.map(col): _*)
-          .sortWithinPartitions(
-            (pcols ++ Seq("gen") ++ clusterBy).map(col): _*)
-      staged.write.mode(SaveMode.Append)
-        .partitionBy(pcols :+ "gen": _*)
-        .parquet(dir)
-      val track = c.trackedStatsCols.toSeq.filter(frozen.columns.contains)
-      val footerStats = footerStatable(frozen.schema, pcols, track)
-      writeBlooms(frozen, dir, pcols, newGen,
-        bloomTrackOf(c).filter(frozen.columns.contains),
-        c.meta.get(BloomItemsKey).map(_.toLong).getOrElse(50000L))
-      val newMeta = touched.map(k =>
-        k -> genMeta(f, root, pcols, k, newGen,
-          if (footerStats) track.map(cn => cn -> frozen.schema(cn).dataType)
-          else Nil)).toMap
-      publish(dir, Commit(pcols,
-        touched.map(_ -> newGen).toMap, newGen,
-        if (track.isEmpty) Map.empty
-        else if (footerStats) newMeta.view.mapValues(_._4).toMap
-        else computeStats(frozen, pcols, track),
-        c.meta ++ opMeta("repartition") +
-          (SchemaMetaKey -> frozen.schema.json),
-        newMeta.view.mapValues(_._1).toMap,
-        newMeta.view.mapValues(_._2).toMap,
-        newMeta.view.mapValues(_._3).toMap))
-      newGen
+      val staged = stageGen(frozen, dir, pcols, c,
+        touchedKeys(frozen, pcols).toSet, exact = true, clusterBy = clusterBy)
+      publish(dir, Commit(pcols, Map.empty, meta = c.meta)
+        .fold(Nil, staged, opMeta("repartition")))
+      staged.gen
     } finally frozen.unpersist()
   }
 
@@ -2573,26 +2499,14 @@ object GenTable {
       .agg(count(lit(1)).as("_n")).collect()
     if (touchedRows.isEmpty) return 0L
     val deleted = touchedRows.map(_.getLong(nCols)).sum
-    val matched = touchedRows
-      .map(r => partKey((0 until nCols).map(r.getString)) -> r.getLong(nCols))
-      .toMap
-    val touchedVals = matched.keySet
+    val touchedVals = touchedRows
+      .map(r => partKey((0 until nCols).map(r.getString))).toSet
     val touchedPaths = c.gens.filter { case (k, _) => touchedVals(k) }
       .toSeq.sortBy(_._1)
       .map { case (k, g) => genPath(dir, c.partitionCols, k, g) }
     val survivors = readPaths(spark, dir, c, touchedPaths)
       .filter(!coalesce(predicate, lit(false)))
-    // survivor partitions derive from the find-scan's per-partition match
-    // counts against the manifest's EXACT per-partition row counts
-    // (parquet-footer-derived at commit time): a partition keeps rows iff
-    // matches < rows. Saves the post-stage distinct+collect probe; legacy
-    // manifests without row counts fall back to it.
-    val survivorValsOpt =
-      if (touchedVals.forall(c.rows.contains))
-        Some(touchedVals.filter(k => matched(k) < c.rows(k)))
-      else None
-    commitRewrite(spark, dir, c, touchedVals, survivors, opMeta("delete"),
-      survivorValsOpt, deterministicSurvivors = true)
+    commitRewrite(dir, c, touchedVals, survivors, opMeta("delete"))
     deleted
   }
 
@@ -2651,13 +2565,7 @@ object GenTable {
         when(hit, v.cast(part.schema(n).dataType)).otherwise(col(n)).as(n)
       }
     }: _*)
-    // UPDATE keeps every row, so the survivor set IS the touched set — no
-    // probe needed. The rewrite is only retry-deterministic when every RHS
-    // is (a nondeterministic SET keeps the pre-stage freeze).
-    commitRewrite(spark, dir, c, touchedVals, rewritten, opMeta("update"),
-      survivorValsOpt = Some(touchedVals),
-      deterministicSurvivors = set.forall { case (_, v) =>
-        !org.apache.spark.sql.GraftSqlShim.expr(v).exists(!_.deterministic) })
+    commitRewrite(dir, c, touchedVals, rewritten, opMeta("update"))
     updated
   }
 
@@ -2695,8 +2603,8 @@ object GenTable {
     // them is the same order as the broadcast the join pays anyway). The
     // keys then join as a LITERAL LocalRelation, so the anti-join
     // re-derives identical survivors on a retried task no matter what
-    // lineage produced `keys` — which is what lets the rewrite skip the
-    // pre-stage freeze (r17).
+    // lineage produced `keys`, and the return value counts exactly the
+    // rows the rewrite removes.
     val keyRows = keys.select(col(keyCol)).distinct()
       .select(col(keyCol) +:
         partitionExprs.zipWithIndex.map { case (e, i) =>
@@ -2719,26 +2627,12 @@ object GenTable {
       .toSeq.sortBy(_._1)
       .map { case (kk, g) => genPath(dir, c.partitionCols, kk, g) }
     val part = readPaths(spark, dir, c, touchedPaths)
-    val nCols = c.partitionCols.length
-    // matched counts PER PARTITION (same scan the plain count paid):
-    // deleted rows for the return value, and the survivor-partition set
-    // for the rewrite — matches == manifest rows means the partition
-    // empties (footer-exact counts, the deleteWhere derivation)
-    val matchedRows = part.join(broadcast(localKeys), Seq(keyCol), "left_semi")
-      .groupBy(c.partitionCols.map(p => col(p).cast("string")): _*)
-      .agg(count(lit(1)).as("_n")).collect()
-    val deleted = matchedRows.map(_.getLong(nCols)).sum
+    val deleted = part.join(broadcast(localKeys), Seq(keyCol), "left_semi")
+      .count()
     if (deleted == 0L) return 0L
-    val matched = matchedRows
-      .map(r => partKey((0 until nCols).map(r.getString)) -> r.getLong(nCols))
-      .toMap
-    val survivorValsOpt =
-      if (touchedVals.forall(c.rows.contains))
-        Some(touchedVals.filter(kk => matched.getOrElse(kk, 0L) < c.rows(kk)))
-      else None
-    commitRewrite(spark, dir, c, touchedVals,
+    commitRewrite(dir, c, touchedVals,
       part.join(broadcast(localKeys), Seq(keyCol), "left_anti"),
-      opMeta("delete_keys"), survivorValsOpt, deterministicSurvivors = true)
+      opMeta("delete_keys"))
     deleted
   }
 
@@ -2777,10 +2671,9 @@ object GenTable {
         // read above, so an interleaved bootstrap fails loud at publish
         // instead of being built on silently.
         if (ups.isEmpty) return
-        val staged = stagePinned(ups, dir, partitionCol,
-          head.getOrElse(Commit(pcols, Map.empty)), Nil, Nil, 50000L)
-        publish(dir, staged.copy(meta =
-          staged.meta ++ opMeta("cdc_apply") ++ extraMeta))
+        val base = head.getOrElse(Commit(pcols, Map.empty))
+        val staged = stagePinned(ups, dir, partitionCol, base, Nil, Nil, 50000L)
+        publish(dir, base.fold(Nil, staged, opMeta("cdc_apply") ++ extraMeta))
       case Some(c) =>
         require(c.partitionCols == pcols,
           s"table is partitioned by ${c.partitionCol}, not " +
@@ -2808,11 +2701,10 @@ object GenTable {
           .getOrElse(ups.withColumn("_pri", lit(1)))
         // a keyed table has at most one row per (key, _pri) so priority is
         // total — but a dup-key target (seeded outside the keyed paths)
-        // would tie at _pri=0, and with the pre-stage freeze gone
-        // (commitRewrite's observed-survivors path computes this merge
-        // inside the write job) a retried task must re-derive the SAME
-        // winner: the whole-row hash makes the order total, like
-        // upsertBatch's tiebreaker
+        // would tie at _pri=0, and the rewrite computes this merge inside
+        // the write job, so a retried task must re-derive the SAME winner:
+        // the whole-row hash makes the order total, like upsertBatch's
+        // tiebreaker
         val w = Window.partitionBy(col(keyCol)).orderBy(col("_pri").desc,
           xxhash64(tagged.columns.toSeq.map(col): _*).desc)
         val merged = tagged
@@ -2820,7 +2712,7 @@ object GenTable {
           .filter(col("_rn") === 1).drop("_rn", "_pri")
         val delKeys = dels.select(col(keyCol)).distinct()
         val survivors = merged.join(broadcast(delKeys), Seq(keyCol), "left_anti")
-        commitRewrite(spark, dir, c, touchedVals, survivors,
+        commitRewrite(dir, c, touchedVals, survivors,
           opMeta("cdc_apply") ++ extraMeta)
     }
     } finally diff.unpersist()
@@ -3017,11 +2909,9 @@ object GenTable {
         }
         // arm conditions and SET right-hand sides are usually
         // deterministic (the SQL doorway's always are); an exotic
-        // nondeterministic one re-evaluates inside the write job now that
-        // the rewrite no longer freezes by default (observed-survivors
-        // path), so pin the frame in that case — a retried task must
-        // commit the same rows the stats counted. Same treatment as
-        // updateWhere's nondeterministic SET.
+        // nondeterministic one would re-evaluate inside the write job, so
+        // pin the frame in that case — a retried task must commit the
+        // same rows the MergeStats counted.
         val allDeterministic =
           (updateWhen.toSeq ++ deleteWhen ++ insertWhen ++
             updateSet.map(_._2)).forall(cnd =>
@@ -3030,7 +2920,7 @@ object GenTable {
         val result =
           if (allDeterministic) result0 else result0.localCheckpoint(true)
         try {
-          commitRewrite(spark, dir, c, touchedVals, result,
+          commitRewrite(dir, c, touchedVals, result,
             opMeta("merge") ++ extraMeta)
         } finally if (!allDeterministic) result.unpersist()
         stats
@@ -3038,137 +2928,14 @@ object GenTable {
     } finally frozenSrc.unpersist()
   }
 
-  /** Shared delete tail: stage the survivors of the touched partitions
-    * at the next generation, drop partitions the rewrite emptied, and
-    * publish once. `minGen` pins the commit id even when the rewrite
-    * removes every max-generation partition.
+  /** Shared rewrite tail: stage the survivors of the touched partitions
+    * at the next generation (partitions the rewrite emptied land nothing
+    * and leave the manifest) and publish once.
     */
-  private def commitRewrite(spark: SparkSession, dir: String, c: Commit,
-      touchedVals: Set[String], survivors: DataFrame,
-      extraMeta: Map[String, String] = Map.empty,
-      // r17: when the caller already knows which touched partitions keep
-      // rows (derivable from its find-scan counts + the manifest's exact
-      // per-partition row counts), the set is used directly and VERIFIED
-      // against what lands (phantom guard below). MUST be exactly the
-      // survivor frame's partition set — gens/stats/sizes key on it.
-      // When None, the set is observed from the write itself (zero extra
-      // jobs, in sync with the landed rows by construction).
-      survivorValsOpt: Option[Set[String]] = None,
-      // r17: the caller asserts its survivor frame re-derives identical
-      // rows on a retried task (deterministic filter/anti-join over
-      // committed immutable inputs). Only then may a DERIVED survivor set
-      // skip the pre-stage localCheckpoint — same single-consumer argument
-      // as upsertBatch (committed inputs are immutable; the staged write
-      // appends gen=N+1 files while the survivor scan pins gen<=N paths).
-      deterministicSurvivors: Boolean = false): Unit = {
-    val (fsys, root) = fsRoot(dir)
-    val pcols = c.partitionCols
-    val track = c.trackedStatsCols.toSeq.filter(survivors.columns.contains)
-    // r17: provable tracked types ride the footer pass genMeta already
-    // pays — no post-write re-read, so they no longer force the freeze
-    val footerStats = footerStatable(survivors.schema, pcols, track)
-    // post-write re-reads of the survivor frame: tracked stats the
-    // footers cannot prove, or bloom re-aggregates
-    val reread = (track.nonEmpty && !footerStats) ||
-      bloomTrackOf(c).exists(survivors.columns.contains)
-    // freeze before staging ONLY when something re-reads the frame after
-    // the write, or when a CALLER-DERIVED survivor set must stay in sync
-    // with a frame that could re-derive differently on task retry. When
-    // the caller could not derive the set, it now rides the WRITE itself
-    // (observe below) — always in sync with what landed, so determinism
-    // is not needed for map-correctness on that path.
-    val reused = reread ||
-      (survivorValsOpt.isDefined && !deterministicSurvivors)
-    val frozen = if (reused) survivors.localCheckpoint(true) else survivors
-    try {
-      val newGen = c.tableGen + 1
-      requireUncommitted(dir, touchedVals.toSeq, newGen)
-      touchedVals.foreach { k =>
-        val orphan = genDir(root, pcols, k, newGen)
-        if (fsys.exists(orphan)) fsys.delete(orphan, true)
-      }
-      val survivorVals = survivorValsOpt match {
-        case Some(vals) =>
-          if (vals.nonEmpty) {
-            // spread the rewrite across the surviving dirs (see stagePinned)
-            val spread = if (vals.size > 1)
-              frozen.repartition(vals.size, pcols.map(col): _*)
-            else frozen
-            spread.withColumn("gen", lit(newGen))
-              .write.mode(SaveMode.Append)
-              .partitionBy(pcols :+ "gen": _*)
-              .parquet(dir)
-          }
-          vals
-        case None =>
-          // r17: the survivor-partition probe rides the WRITE itself — a
-          // CollectMetrics observation over the staged frame yields
-          // exactly the partitions whose rows landed, in the same job
-          // (was: one distinct+collect probe job BEFORE the write, which
-          // also forced the pre-stage freeze as a second consumer).
-          // collect_set is retry-safe here: a speculated/retried write
-          // task re-adds the same keys and the set collapses them. The
-          // orphan-cleanup protocol is unaffected — it runs on
-          // touchedVals (a superset, known up front).
-          val obs = org.apache.spark.sql.Observation()
-          val spread = if (touchedVals.size > 1)
-            frozen.repartition(touchedVals.size, pcols.map(col): _*)
-          else frozen
-          spread
-            .observe(obs, collect_set(struct(
-              pcols.map(p => col(p).cast("string").as(p)): _*)).as("_parts"))
-            .withColumn("gen", lit(newGen))
-            .write.mode(SaveMode.Append)
-            .partitionBy(pcols :+ "gen": _*)
-            .parquet(dir)
-          val parts = obs.get("_parts")
-            .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
-          // defensive: no current caller can stage a NULL partition value
-          // (survivors derive from committed non-null partitions and
-          // touchedKeys-validated batches), but a violation must fail
-          // loud before the manifest swap, like everywhere else
-          require(parts.forall(r => pcols.indices.forall(!r.isNullAt(_))),
-            s"rewrite staged rows with NULL partition value(s) under $dir" +
-              s" — GenTable partition values must be non-null; nothing " +
-              s"was published (the staged generation is orphaned and " +
-              s"will be swept)")
-          parts.map(r => partKey(pcols.indices.map(r.getString))).toSet
-      }
-      val emptied = touchedVals -- survivorVals
-      // rewritten partitions re-derive their tracked stats off the
-      // survivors; emptied ones drop theirs with the partition; bloom
-      // sidecars regenerate for the surviving rewritten partitions
-      writeBlooms(frozen, dir, c.partitionCols, newGen,
-        bloomTrackOf(c).filter(frozen.columns.contains),
-        c.meta.get(BloomItemsKey).map(_.toLong).getOrElse(50000L))
-      val survivorMeta = survivorVals.map(k =>
-        k -> genMeta(fsys, root, c.partitionCols, k, newGen,
-          if (footerStats) track.map(cn => cn -> frozen.schema(cn).dataType)
-          else Nil)).toMap
-      // derived survivor sets are verified against what actually landed
-      // (survivorMeta is already listed, so this is free): a survivor
-      // partition with zero staged files would publish a generation whose
-      // directory does not exist — fail loud before the manifest swap.
-      if (survivorValsOpt.isDefined) {
-        val phantom = survivorVals.filter(k => survivorMeta(k)._3 == 0L)
-        require(phantom.isEmpty,
-          s"rewrite derived survivor partition(s) " +
-            s"${phantom.take(3).mkString(", ")} but staged no files for " +
-            s"them — survivor derivation out of sync with the data; " +
-            s"nothing was published")
-      }
-      publish(dir, Commit(c.partitionCols,
-        (c.gens -- emptied) ++ survivorVals.map(_ -> newGen), newGen,
-        (c.stats -- touchedVals) ++ (
-          if (track.isEmpty) Map.empty[String, Map[String, (Long, Long)]]
-          else if (footerStats) survivorMeta.view.mapValues(_._4).toMap
-          else computeStats(frozen, c.partitionCols, track)),
-        c.meta + (SchemaMetaKey -> frozen.schema.json) ++ extraMeta,
-        (c.sizes -- touchedVals) ++ survivorMeta.view.mapValues(_._1).toMap,
-        (c.rows -- touchedVals) ++ survivorMeta.view.mapValues(_._2).toMap,
-        (c.files -- touchedVals) ++ survivorMeta.view.mapValues(_._3).toMap))
-    } finally frozen.unpersist()
-  }
+  private def commitRewrite(dir: String, c: Commit, touchedVals: Set[String],
+      survivors: DataFrame, extraMeta: Map[String, String]): Unit =
+    publish(dir, c.fold(touchedVals, stageGen(survivors, dir,
+      c.partitionCols, c, touchedVals, exact = false), extraMeta))
 
   /** Change-data-capture between two archived commits (ids from
     * [[commits]]; `fromId = 0` = the empty table). Immutable generations
