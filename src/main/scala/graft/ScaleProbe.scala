@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Scale-probe main (dev evidence tool, SCALE.md §8/§11): replicates the
   * fixture `factor`x into a probe dir with SHIFTED KEYS (join graph
-  * preserved), then times probe queries through the same
-  * `SparkEntry.queries` path the driver uses.
+  * preserved), then times registered queries, cold then warm, through the
+  * same `SparkEntry.queries` path `Verify` and `Bench` use.
   *
   * Replication policy — built to keep per-operator DENSITY realistic at
   * scale, so the probe measures the operator's asymptote rather than a
@@ -50,7 +50,7 @@ object ScaleProbe {
     * factor > 26 the replicas with i ≡ j (mod 26) shared their letter
     * map and every DIGIT-FREE document came out byte-identical across
     * them — 720k genuine exact-dup pairs at 100x that looked like
-    * signature false families until diagnosed (d03_diag). Independent
+    * signature false families until diagnosed (SCALE.md). Independent
     * per-replica permutations make coincident token sets vanishingly
     * unlikely at any factor.
     */
@@ -155,451 +155,7 @@ object ScaleProbe {
     // cold + warm timing per query; warm is the SCALE.md number (matches
     // the bench protocol, where plans/codegen are already cached)
     queryNames.foreach { name =>
-      // special probe: s04's operator in its self-scaling LSH-bucket mode
-      // (the registered query's label blocking is by-design quadratic in
-      // block size — at factor>=10 the prescribed mitigation is this mode
-      // or a finer blockCol, so this is the number that matters at scale)
-      val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-        if (name == "d08_probe") { (s, d) =>
-          // experiment behind d08's bound: of the exact near-identical
-          // pairs (3-shingle Jaccard >= 0.8), how many fall within each
-          // hamming cutoff? (fixture: [25 exact, 15 @h<=3, 25 @h<=6,
-          // 25 @h<=10, max 5] -> gate at h<=6, bound 0.9)
-          val docs = graft.sources.Tables(s, d).documents
-            .filter(col("doc_id") < 500)
-          val exact = graft.operators.Dedup.jaccardPairs(
-            docs, "text", "doc_id", k = 3, minJaccard = 0.8)
-            .select("id_a", "id_b")
-          val sigs = graft.operators.Dedup.simhashSignatures(docs, "text", "doc_id")
-          exact
-            .join(sigs.select(col("id").as("id_a"), col("simhash").as("sh_a")), Seq("id_a"))
-            .join(sigs.select(col("id").as("id_b"), col("simhash").as("sh_b")), Seq("id_b"))
-            .select(graft.functions.TextFunctions.hamming64(col("sh_a"), col("sh_b")).as("h"))
-            .agg(count(lit(1)).as("n_exact"),
-              sum(when(col("h") <= 3, 1).otherwise(0)).as("h3"),
-              sum(when(col("h") <= 6, 1).otherwise(0)).as("h6"),
-              sum(when(col("h") <= 10, 1).otherwise(0)).as("h10"),
-              max(col("h")).as("h_max"))
-        } else if (name == "d09_operator") { (s, d) =>
-          // incremental near-dup at corpus scale: a PARITY split (even
-          // doc_ids = persisted signature history, odd = incoming batch)
-          // so the fixture's within-replica near-dup families straddle
-          // the boundary and the estimator leg runs on real candidates —
-          // a doc_id-range split would put every family on one side now
-          // that the permutation cipher makes replicas fully disjoint.
-          // The d09 query itself pins accuracy on a constant block; this
-          // measures the operator's cost shape
-          val docs = graft.sources.Tables(s, d).documents
-          graft.operators.Dedup.incrementalNearDup(
-            graft.operators.Dedup.minhashSignatures(
-              docs.filter(col("doc_id") % 2 === 1), "text", "doc_id"),
-            graft.operators.Dedup.minhashSignatures(
-              docs.filter(col("doc_id") % 2 === 0), "text", "doc_id"))
-        } else if (name == "s04_lsh_mode") { (s, d) =>
-          graft.operators.SimilaritySearch.cosineNearDupPairs(
-            graft.sources.Tables(s, d).embeddings, "vec_id", "embedding",
-            dim = 64, minCosine = 0.95, planes = 14, blockCol = None)
-        } else if (name == "d03_diag") { (s, d) =>
-          // diagnosis for the minTokens floor: bucket the hamming<=3 pair
-          // set by the SMALLER endpoint's token count — if false families
-          // concentrate in low-token docs, the floor removes them
-          val docs = graft.sources.Tables(s, d).documents
-          val toks = docs.select(col("doc_id").as("id"),
-            size(graft.functions.TextFunctions.tokens(
-              graft.functions.TextFunctions.normalizeText(col("text")))).as("n_tok"))
-          val pairs = graft.operators.Dedup.simhashNearDupPairs(
-            docs, "text", "doc_id", maxHamming = 3)
-          pairs
-            .join(toks.select(col("id").as("id_a"), col("n_tok").as("ta")), Seq("id_a"))
-            .join(toks.select(col("id").as("id_b"), col("n_tok").as("tb")), Seq("id_b"))
-            .withColumn("mt", least(col("ta"), col("tb")))
-            .withColumn("same_base", col("id_a") % 5000 === col("id_b") % 5000)
-            .withColumn("same_lrot",
-              (col("id_a") / 5000).cast("long") % 26 ===
-                (col("id_b") / 5000).cast("long") % 26)
-            .groupBy(
-              when(col("mt") < 15, "10-14").when(col("mt") < 25, "15-24")
-                .when(col("mt") < 50, "25-49").otherwise("50+").as("min_tok_bucket"))
-            .agg(count(lit(1)).as("n_pairs"),
-              sum(when(col("hamming") === 0, 1).otherwise(0)).as("n_ham0"),
-              sum(when(col("same_base") && col("same_lrot"), 1).otherwise(0))
-                .as("n_samebase_samelrot"),
-              sum(when(col("same_base"), 1).otherwise(0)).as("n_samebase"))
-            .orderBy(col("min_tok_bucket"))
-        } else if (name == "d03_guarded") { (s, d) =>
-          graft.operators.Dedup.simhashNearDupPairs(
-            graft.sources.Tables(s, d).documents, "text", "doc_id",
-            maxHamming = 3, minTokens = 25)
-        } else if (name == "c17_lsh_500k") { (s, d) =>
-          // contrastive mining at 500k docs through the LSH-bucket block:
-          // the whole pipeline (tokenize -> md5 band buckets -> skew-
-          // guarded candidates -> unigram-Jaccard verify -> elections),
-          // aggregated to the triplet count
-          graft.operators.Corpus.contrastivePairsLsh(
-            graft.sources.Tables(s, d).documents, "doc_id", "text")
-            .agg(count(lit(1)).as("n_triplets"))
-        } else if (name == "c17_block_census") { (s, d) =>
-          // why lang-blocking cannot scale: candidate-pair totals per
-          // blocking scheme computed ARITHMETICALLY (sum of n*(n-1)/2
-          // over blocks) — no pair formation. lang yields a handful of
-          // giant blocks; the md5-band buckets are shingle-fine and
-          // capped by the maxBucket guard.
-          import graft.functions.TextFunctions.{tokens, normalizeText, shingles}
-          val docs = graft.sources.Tables(s, d).documents
-          val lang = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
-            .agg(sum(col("n") * (col("n") - 1) / 2).as("cand_pairs"),
-              max(col("n")).as("max_block"))
-            .select(lit("lang").as("scheme"), col("cand_pairs"), col("max_block"))
-          val toksDf = docs
-            .select(col("doc_id").as("id"),
-              tokens(normalizeText(col("text"))).as("toks"))
-          def bandCensus(k: Int) = toksDf
-            .select(col("id"),
-              array_distinct(shingles(col("toks"), k)).as("sh"))
-            .filter(size(col("sh")) > 0)
-            .select(col("id"),
-              explode(transform(sequence(lit(0), lit(3)),
-                b => array_min(transform(col("sh"),
-                  x => md5(concat(b.cast("string"), lit("|"), x)))))).as("bucket"))
-            .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-            .agg(sum(when(col("n") <= 1000, col("n") * (col("n") - 1) / 2)
-                .otherwise(0)).as("cand_pairs"),
-              max(col("n")).as("max_block"))
-            .select(lit(s"md5_bands_k$k").as("scheme"), col("cand_pairs"),
-              col("max_block"))
-          lang.unionByName(bandCensus(2)).unionByName(bandCensus(3))
-        } else if (name == "d05_pipeline") { (s, d) =>
-          // the complete user-facing near-dup pipeline at corpus scale:
-          // MinHash signatures -> banded candidates -> exact-Jaccard
-          // verify -> connected components -> min-id survivor per cluster
-          // (pair set is output-sized, so CC takes the bounded union-find
-          // path here; d05_cc_distributed covers the >5M distributed path)
-          val docs = graft.sources.Tables(s, d).documents
-          graft.operators.Dedup.dedupNearDups(docs, "text", "doc_id")
-            .agg(count(lit(1)).as("n_survivors"))
-        } else if (name == "d05_cc_distributed") { (s, d) =>
-          // the one iterative-join operator at scale: a synthetic 8M-edge
-          // graph of 1000-node chains — diameter 1000 is the worst case
-          // for diameter-bound label propagation, and ~8M pairs crosses
-          // the 5M union-find threshold, so connectedComponents dispatches
-          // to the distributed large-star/small-star path (verbose: one
-          // [cc] line per round with the round's edge count = its shuffle
-          // size). Ground truth is exact: 8,000 components x 1,000 nodes.
-          val edges = s.range(8000000L).toDF("id_a")
-            .filter(col("id_a") % 1000 =!= 999)
-            .withColumn("id_b", col("id_a") + lit(1L))
-          graft.operators.Dedup.connectedComponents(edges, verbose = true)
-            .agg(countDistinct(col("component")).as("n_components"),
-              count(lit(1)).as("n_nodes"))
-        } else if (name == "s07_float_topk") { (s, d) =>
-          // float-path contrast for the int8 probe: same query set, same
-          // corpus, native codegen'd float cosine
-          val emb = graft.sources.Tables(s, d).embeddings
-          graft.operators.SimilaritySearch.bruteForceTopK(
-            emb.filter(col("vec_id") < 32), emb, "vec_id", "embedding", k = 10)
-        } else if (name == "s07_int8_topk") { (s, d) =>
-          // the packed-int8 scan at corpus scale: pack on the fly (at 100 TB
-          // the corpus would be PERSISTED packed — s07_storage measures that
-          // form's on-disk footprint), score via the native int8_cosine
-          val emb = graft.sources.Tables(s, d).embeddings
-          graft.operators.SimilaritySearch.int8TopKPacked(
-            emb.filter(col("vec_id") < 32), emb, "vec_id", "embedding", k = 10)
-        } else if (name == "s07_storage") { (s, d) =>
-          // what the 4x claim is actually about: bytes the scan/shuffle/cache
-          // carry. Write the corpus in both forms, report on-disk sizes
-          // (snappy parquet both sides; gaussian floats and int8 codes are
-          // both ~incompressible, so the ratio is the format ratio)
-          graft.plans.GraftExtensions.register(s)
-          val emb = graft.sources.Tables(s, d).embeddings
-            .select(col("vec_id"), col("embedding"))
-          val tmp = java.nio.file.Files.createTempDirectory("graft_s07store_").toString
-          emb.write.mode("overwrite").parquet(s"$tmp/float")
-          emb.select(col("vec_id"),
-            graft.plans.GraftExtensions.int8Pack(col("embedding")).as("codes"))
-            .write.mode("overwrite").parquet(s"$tmp/int8")
-          def dirBytes(p: String): Long = {
-            val dir = new java.io.File(p)
-            dir.listFiles.filter(_.isFile).map(_.length).sum
-          }
-          val fb = dirBytes(s"$tmp/float"); val ib = dirBytes(s"$tmp/int8")
-          println(f"[probe]   s07 storage: float=${fb / 1024 / 1024}%d MB " +
-            f"int8=${ib / 1024 / 1024}%d MB ratio=${fb.toDouble / ib}%.2f")
-          s.read.parquet(s"$tmp/int8")
-        } else if (name == "c08_store_100x") { (s, d) =>
-          // the incremental store at 100x eval scale: ~2.1M union grams
-          // under a 2^22 capacity budget (the registered query's 2^18
-          // budget REFUSES here by design — loud, not silently degraded;
-          // a 2^22 budget needs ~121 Mbit filters, past the 2^26-bit conf
-          // clamp sizedBloomFilter guards against). Two per-release stores
-          // built, merged, parquet round-tripped, then the 450k-doc train
-          // side probed from the merged store.
-          val t = graft.sources.Tables(s, d)
-          val evalA = t.documents.filter(pmod(col("doc_id"), lit(20)) === 0)
-          val evalB = t.documents.filter(pmod(col("doc_id"), lit(20)) === 10)
-          val train = t.documents.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-          val cap = 1L << 22
-          val merged = graft.operators.Corpus.mergeContaminationStores(
-            graft.operators.Corpus.contaminationStore(evalA, "doc_id", "text", capacity = cap),
-            graft.operators.Corpus.contaminationStore(evalB, "doc_id", "text", capacity = cap))
-          val tmp = java.nio.file.Files.createTempDirectory("graft_c08probe_").toString
-          merged.write.parquet(s"$tmp/store")
-          val stored = s.read.parquet(s"$tmp/store")
-          println(s"[probe]   c08 store: n_grams=${stored.head.getAs[Long]("n_grams")} " +
-            s"bytes/filter=${stored.head.getAs[Array[Byte]]("bf1").length}")
-          graft.operators.Corpus.bloomFlagsFromStore(train, stored, "doc_id", "text")
-            .agg(count(when(col("contaminated"), 1)).as("n_flagged"),
-              count(lit(1)).as("n_train"))
-        } else if (name == "c09_budget_100x") { (s, d) =>
-          // token-budget selection at 500k docs: pass 1 (tokenize + per-
-          // partition totals) scans the corpus once; pass 2 touches ONLY
-          // partitions that intersect the budget prefix (empty iterators
-          // elsewhere). A 1M-token budget selects ~2% of the corpus, so
-          // the second pass is budget-bound, not corpus-bound.
-          graft.operators.Corpus.tokenBudgetSelect(
-            graft.sources.Tables(s, d).documents, "doc_id", "text",
-            orderCol = "n_chars", budgetTokens = 1000000L)
-            .agg(count(lit(1)).as("n_docs"), max(col("start_tokens")).as("last_start"))
-        } else if (name == "c10_sample_100x") { (s, d) =>
-          // integer-exact weighted sampling is a map-only filter: the probe
-          // pins that its cost is one corpus scan
-          graft.operators.Corpus.weightedBernoulliSample(
-            graft.sources.Tables(s, d).documents, "doc_id", "n_chars",
-            fullWeight = 1000L, seed = 7L)
-            .agg(count(lit(1)).as("n_sampled"))
-        } else if (name == "s09_centroid_100x") { (s, d) =>
-          // nearest-centroid at 200k vectors: training shuffles labels x dim
-          // aggregated longs; assignment is map-only over the corpus
-          graft.operators.SimilaritySearch.nearestCentroid(
-            graft.sources.Tables(s, d).embeddings, "vec_id", "embedding", "label")
-            .groupBy(col("label")).agg(count(lit(1)).as("n_assigned"))
-        } else if (name == "d10_policy_100x") { (s, d) =>
-          // policy dedup at 667k rows (500k docs + 167k planted mirrors):
-          // one fingerprint hash-agg with map-side min_by combine
-          val base = graft.sources.Tables(s, d).documents
-            .select(col("doc_id"), col("source"), col("text"))
-          val mirrors = base.filter(pmod(col("doc_id"), lit(3)) === 0)
-            .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-              lit("mirror").as("source"), col("text"))
-          graft.operators.Dedup.canonicalByPolicy(
-            base.unionByName(mirrors), "text", "doc_id",
-            priority = when(col("source") === "mirror", 0).otherwise(1))
-            .agg(count(lit(1)).as("n_survivors"),
-              sum(when(col("source") === "mirror", 1).otherwise(0)).as("n_mirror_wins"))
-        } else if (name == "c11_manifest_100x") { (s, d) =>
-          // shard manifest at 500k docs: tokenize + one aggregate
-          graft.operators.Corpus.shardManifest(
-            graft.sources.Tables(s, d).documents, "doc_id", "text",
-            numShards = 256, seed = 3L)
-            .agg(count(lit(1)).as("n_shards"),
-              (max(col("n_docs")) * 100L / min(col("n_docs"))).as("maxmin_pct"))
-        } else if (name == "e02_stateful_10m") { (s, d) =>
-          // streaming sessionization state at 10M events / 100x users:
-          // file-stream catch-up replay through flatMapGroupsWithState
-          // (AvailableNow), parquet sink; prints the state store's max
-          // row count and memory from the query progress — the state
-          // growth curve a 100 TB pipeline must bound via watermarks
-          import s.implicits._
-          val tmp = java.nio.file.Files.createTempDirectory("graft_e02probe_").toString
-          val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-          val stream = graft.streaming.EventStreams.readEventStream(
-            s, s"$d/events.parquet", maxFilesPerTrigger = 16)
-          val sessions = graft.streaming.EventStreams.statefulSessions(
-            stream.withWatermark("ts", "1 hour")
-              .as[graft.streaming.EventStreams.Event])
-          val q = sessions.writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .outputMode("append").start()
-          q.awaitTermination()
-          val state = q.recentProgress.toSeq
-            .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
-          if (state.nonEmpty) println(
-            f"[probe]   e02 state: batches=${q.recentProgress.length}%d " +
-              f"maxRows=${state.map(_.numRowsTotal).max}%,d " +
-              f"maxMemMB=${state.map(_.memoryUsedBytes).max / 1024 / 1024}%d")
-          s.read.parquet(out)
-        } else if (name == "t6_tws_10m") { (s, d) =>
-          // transformWithState + RocksDB at 10M events / 100x users (the
-          // e02 probe's twin for the modern typed-state API): runningSpend
-          // keeps ONE double per user in a RocksDB ValueState, replayed as
-          // an AvailableNow file-stream catch-up. State rows == distinct
-          // users (no watermark eviction needed for a per-key scalar) and
-          // RocksDB keeps it off-heap — the number an executor is sized by
-          // is the reported memory, not rows x JVM-object overhead. The
-          // noop sink isolates state-update cost from sink I/O.
-          import s.implicits._
-          val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-          s.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          try {
-            val tmp = java.nio.file.Files.createTempDirectory("graft_twsprobe_").toString
-            val stream = graft.streaming.EventStreams.readEventStream(
-              s, s"$d/events.parquet", maxFilesPerTrigger = 16)
-            val spend = graft.streaming.EventStreams.runningSpend(
-              stream.as[graft.streaming.EventStreams.Event], alertAt = 10000.0)
-            val q = spend.toDF("user_id", "total_spend", "alert").writeStream
-              .format("noop")
-              .option("checkpointLocation", s"$tmp/ckpt")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .outputMode("update").start()
-            q.awaitTermination()
-            val progress = q.recentProgress.toSeq
-            val state = progress.flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
-            if (state.nonEmpty) println(
-              f"[probe]   t6 tws state: batches=${progress.length}%d " +
-                f"maxRows=${state.map(_.numRowsTotal).max}%,d " +
-                f"maxMemMB=${state.map(_.memoryUsedBytes).max / 1024 / 1024}%d " +
-                f"medBatchMs=${progress.map(_.batchDuration).sorted.apply(progress.length / 2)}%d")
-            s.range(1).toDF() // probe result is the printed state line
-          } finally prev match {
-            case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-            case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
-        } else if (name == "t11_lm_500k") { (s, d) =>
-          // unigram LM quality scoring at 500k docs / ~27M tokens: train
-          // (one token shuffle + bounded scalar stats) then score every
-          // doc (token join + doc-keyed agg). The permutation cipher
-          // multiplies vocab by ~factor (each replica's tokens are
-          // disjoint), so this also exercises a vocab 100x the sf0.1 one
-          val docs = graft.sources.Tables(s, d).documents
-          val (lm, oov) = graft.operators.LanguageModel.unigramLm(docs, "text")
-          println(s"[probe]   t11 vocab=${lm.count()} oov_micro=$oov")
-          graft.operators.LanguageModel.scoreNll(docs, "text", "doc_id", lm, oov)
-            .agg(count(lit(1)).as("n_docs"),
-              (sum(col("nll_micro")) / sum(col("n_tokens")) / 1e6).as("avg_nll"))
-        } else if (name == "bpe_500k") { (s, d) =>
-          // tokenizer induction at 500k docs: training = one word-count
-          // shuffle + a driver loop over the 3012-type histogram (the
-          // minWordFreq knob bounds that collect at real scale);
-          // application = map-only over the corpus with the merge table
-          // in the closure
-          val docs = graft.sources.Tables(s, d).documents
-          val t1 = System.nanoTime()
-          val merges = graft.operators.Bpe.learnMerges(docs, "text",
-            numMerges = 500, minWordFreq = 5)
-          println(f"[probe]   bpe learn=${(System.nanoTime() - t1) / 1e9}%.2f s " +
-            f"merges=${merges.size}%d")
-          graft.operators.Bpe.segment(docs, "text", "doc_id", merges)
-            .agg(count(lit(1)).as("n_docs"),
-              sum(col("n_tokens")).as("tokens"),
-              sum(col("n_subwords")).as("subwords"))
-        } else if (name == "x06_mg_500k") { (s, d) =>
-          // MG-gated exact top-25 at 27M tokens; on this quasi-uniform
-          // 3012-token vocab every token clears N/mgK so candidates =
-          // vocab (the gate's win appears when vocab >> mgK) — the probe
-          // pins the bounded-summary pass's cost, not the gate's win
-          graft.operators.Sketches.topKTokens(
-            graft.sources.Tables(s, d).documents, "text", topK = 25)
-        } else if (name == "x05_cms_500k") { (s, d) =>
-          // CMS at 27M tokens / 3012 vocab: real collision pressure (mean
-          // row excess ~ N/w = 3.3k). Reports the actual est-exact gap
-          // distribution over the exact top-25 — observation, not a gate:
-          // the registered query's bound booleans stay the gate at sf<=0.1
-          import graft.functions.TextFunctions.{normalizeText, tokens}
-          val docs = graft.sources.Tables(s, d).documents
-          val toks = docs.select(explode(tokens(normalizeText(col("text")))).as("tok"))
-          val exact = toks.groupBy("tok").agg(count(lit(1)).as("n"))
-            .orderBy(col("n").desc, col("tok").asc).limit(25)
-          val sketch = graft.operators.Sketches.countMinSketch(docs, "text")
-          graft.operators.Sketches.cmsEstimate(sketch, exact.select("tok"))
-            .join(exact, Seq("tok"))
-            .agg(count(lit(1)).as("n_tokens"),
-              max(col("est") - col("n")).as("max_overcount"),
-              avg(col("est") - col("n")).as("avg_overcount"),
-              sum(when(col("est") < col("n"), 1).otherwise(0)).as("n_undercount"))
-        } else if (name == "t11_incremental_500k") { (s, d) =>
-          // incremental LM retrain at 500k docs: even docs' counts are the
-          // persisted store (parquet round-trip included), the odd half is
-          // the new batch — merge + quantize must cost vocab-sized work on
-          // the store side (the batch's own count shuffle is the only
-          // corpus-scale step), vs the 500k-doc full retrain at ~3 s
-          val docs = graft.sources.Tables(s, d).documents
-          val tmp = java.nio.file.Files.createTempDirectory("graft_lmprobe_").toString
-          graft.operators.LanguageModel.tokenCounts(
-            docs.filter(col("doc_id") % 2 === 0), "text")
-            .write.parquet(s"$tmp/store")
-          val t1 = System.nanoTime()
-          val merged = graft.operators.LanguageModel.mergeTokenCounts(
-            s.read.parquet(s"$tmp/store"),
-            graft.operators.LanguageModel.tokenCounts(
-              docs.filter(col("doc_id") % 2 === 1), "text"))
-          val (lm, oov) =
-            graft.operators.LanguageModel.unigramLmFromCounts(merged)
-          println(f"[probe]   t11inc merge+quantize=" +
-            f"${(System.nanoTime() - t1) / 1e9}%.2f s vocab=${lm.count()}%d " +
-            f"oov=$oov%d")
-          lm
-        } else if (name == "t12_bigram_500k") { (s, d) =>
-          // bigram LM at 500k docs: pair-type space is ~vocab^2/replica x
-          // 100 replicas (disjoint cipher alphabets) — the probe pins that
-          // training stays two count shuffles and scoring two lookup
-          // joins + one doc agg as the pair table grows
-          val docs = graft.sources.Tables(s, d).documents
-          val m = graft.operators.LanguageModel.bigramLm(docs, "text")
-          println(s"[probe]   t12 pair_types=${m.pairLp.count()} " +
-            s"vocab=${m.uniLp.count()}")
-          graft.operators.LanguageModel.scoreBigramNll(docs, "text", "doc_id", m)
-            .agg(count(lit(1)).as("n_docs"),
-              (sum(col("nll_micro")) / sum(col("n_tokens")) / 1e6).as("avg_nll"))
-        } else if (name == "e12_stream_500k") { (s, d) =>
-          // streaming near-dup at 500k docs in 5 catch-up micro-batches of
-          // ~100k: each batch's signatures probe the store built by the
-          // previous batches, so the verbose [neardup] lines trace the
-          // per-batch cost curve as history grows 0 -> 400k signatures —
-          // the growth shape that decides whether continuous ingestion
-          // holds up at 100 TB
-          val docs = graft.sources.Tables(s, d).documents
-            .select(col("doc_id"), col("text"))
-          val tmp = java.nio.file.Files.createTempDirectory("graft_e12probe_").toString
-          val inDir = s"$tmp/in"
-          docs.repartitionByRange(5, col("doc_id")).write.parquet(inDir)
-          graft.streaming.DedupStreams.nearDupDetectAvailableNow(
-            s.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", "1").parquet(inDir),
-            "text", "doc_id", s"$tmp/store", s"$tmp/out", s"$tmp/ckpt",
-            verbose = true)
-          s.read.parquet(s"$tmp/out")
-        } else if (name == "e11_upsert_10m") { (s, d) =>
-          // keyed-upsert sink at 10M events: 3 time-ordered catch-up
-          // batches build the table (64 bucket partitions), then a 1,000-
-          // row single-bucket batch proves the merge rewrite is bounded
-          // by TOUCHED partitions, not table size (verbose [upsert] lines
-          // carry per-batch touched counts and seconds)
-          val t = graft.sources.Tables(s, d)
-          val tmp = java.nio.file.Files.createTempDirectory("graft_e11probe_").toString
-          val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-          val slice = t.events
-            .withColumn("bucket", pmod(col("user_id"), lit(64)).cast("int"))
-          slice.repartitionByRange(3, col("ts")).write.parquet(inDir)
-          def replay(): Unit =
-            graft.streaming.EventStreams.upsertForeachBatchAvailableNow(
-              s.readStream.schema(slice.schema)
-                .option("maxFilesPerTrigger", "1").parquet(inDir),
-              outDir, ckpt, keyCol = "user_id",
-              orderCols = Seq("ts", "event_id"), partitionCol = "bucket",
-              verbose = true)
-          replay() // full load: 3 batches, each touching all 64 buckets
-          slice.filter(col("bucket") === 0).limit(1000)
-            .coalesce(1).write.mode("append").parquet(inDir)
-          replay() // incremental: 1 batch, 1 touched bucket
-          s.read.parquet(outDir)
-        } else if (name == "g02_sketch") { (s, d) =>
-          // the TRUE sketch regime: full probe graph (500k nodes / 1.5M
-          // edges), k=64 << ball sizes — the HyperANF shape where the
-          // registered query's exact-regime gate cannot reach. Reports
-          // corpus-level ball statistics (the neighborhood function).
-          val nodes = graft.sources.Tables(s, d).documents
-            .select(col("doc_id").as("idx"))
-          val n = nodes.count()
-          val edges = graft.operators.LinkGraph.syntheticEdges(nodes, n)
-          graft.operators.LinkGraph.kmvNeighborhood(nodes, edges,
-            radius = 3, k = 64)
-            .agg(count(lit(1)).as("n_nodes"),
-              avg(col("n_1")).as("avg_ball_1"),
-              avg(col("n_2")).as("avg_ball_2"),
-              avg(col("n_3")).as("avg_ball_3"),
-              max(col("n_3")).as("max_ball_3"))
-        } else SparkEntry.queries(name)
+      val fn = SparkEntry.queries(name)
       def once(): Double = {
         val t0 = System.nanoTime()
         val df = fn(spark, probeDir)

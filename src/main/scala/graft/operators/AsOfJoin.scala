@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -212,7 +212,7 @@ object AsOfJoin {
     val l2 = left.withColumn(ltName, col(leftTime).cast("timestamp"))
     val r2 = right.withColumn(rtName, col(rightTime).cast("timestamp"))
     def ex(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.GraftSqlShim.expr(c)
+      GraftSqlShim.expr(c)
     val valExprs = rightVals.map { case (src, _) => ex(r2.col(src)) }
     // output attributes carried explicitly (never as Aliases — the
     // analyzer's CleanupAliases would strip them from a custom node)
@@ -228,7 +228,7 @@ object AsOfJoin {
       // tie hash takes the RAW right-time column — composed-`_tb` parity
       // even when the time column isn't TimestampType yet
       tieTime = Some(ex(r2.col(rightTime))))
-    org.apache.spark.sql.GraftSqlShim.ofRows(spark, node).drop(ltName)
+    GraftSqlShim.ofRows(spark, node).drop(ltName)
   }
 
   private def asof(

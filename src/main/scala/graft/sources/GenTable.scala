@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -453,7 +453,7 @@ object GenTable {
     * missing rows in partitions the first evaluation skipped entirely).
     */
   private def requireDeterministic(predicate: Column, op: String): Unit =
-    require(!org.apache.spark.sql.GraftSqlShim.expr(predicate)
+    require(!GraftSqlShim.expr(predicate)
         .exists(!_.deterministic),
       s"$op predicates must be deterministic (the find-scan and the " +
         s"rewrite evaluate them in separate jobs); materialize random " +
@@ -590,14 +590,6 @@ object GenTable {
     */
   private val foldedCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Seq[String]), Commit]()
-
-  /** Measurement hook (ProbeManifest cold-path timings): drop both
-    * manifest caches. Correctness-neutral — both caches key on
-    * immutable identities.
-    */
-  private[graft] def clearManifestCaches(): Unit = {
-    shardCache.clear(); foldedCache.clear()
-  }
 
   private def renderShard(d: ShardData): Array[Byte] = {
     val statLines = d.stats.toSeq.sortBy(_._1).flatMap { case (k, cols) =>
@@ -1159,10 +1151,21 @@ object GenTable {
 
   // ----------------------------------------------------------- reads
 
-  private def pathsOf(dir: String, c: Commit): Seq[String] =
-    c.gens.toSeq.sortBy(_._1).map { case (k, g) =>
+  private def pathsOf(dir: String, c: Commit,
+      keep: String => Boolean = _ => true): Seq[String] =
+    c.gens.toSeq.filter(kg => keep(kg._1)).sortBy(_._1).map { case (k, g) =>
       genPath(dir, c.partitionCols, k, g)
     }
+
+  /** The committed rows of `c`'s partitions that `keep` names — the base
+    * every merge and rewrite re-reads. None when none of them is
+    * committed.
+    */
+  private def readPartitions(spark: SparkSession, dir: String, c: Commit,
+      keep: String => Boolean): Option[DataFrame] = {
+    val paths = pathsOf(dir, c, keep)
+    if (paths.isEmpty) None else Some(readPaths(spark, dir, c, paths))
+  }
 
   private[graft] def schemaOf(c: Commit): Option[StructType] =
     c.meta.get(SchemaMetaKey).map(DataType.fromJson(_).asInstanceOf[StructType])
@@ -1782,8 +1785,7 @@ object GenTable {
 
   /** Might ANY of `keys` be present in partition `v`'s sidecar for
     * `column` at generation `g`? Missing sidecar reads conservatively
-    * (true). Shared by [[readEquals]] and the Catalyst-integrated scan
-    * ([[GenTableFileIndex]]) so both prune identically.
+    * (true).
     */
   private[sources] def bloomSurvives(f: FileSystem, root: HPath, v: String,
       column: String, g: Long, keys: Seq[Long]): Boolean = {
@@ -1795,6 +1797,49 @@ object GenTable {
       keys.exists(bf.mightContainLong)
     }
   }
+
+  /** One skip-tier probe on a column, in the writer's long encoding: a
+    * closed range, or a set of keys.
+    */
+  private[sources] sealed trait Skip { def column: String }
+  private[sources] case class RangeSkip(column: String, lo: Long, hi: Long)
+      extends Skip
+  private[sources] case class KeySkip(column: String, keys: Seq[Long])
+      extends Skip
+
+  /** The ONE skip decision behind both read doorways (the explicit
+    * [[readRanges]] / [[readEquals]] and the Catalyst-integrated
+    * [[GenTableFileIndex]]):
+    * may partition `v` of `c`, at generation `g`, hold a row `s` matches?
+    * A partition without a band for the column is kept; a key probe on a
+    * bloom-tracked column (`blooms`) must also pass the sidecar.
+    */
+  private[sources] def survives(f: FileSystem, root: HPath, c: Commit,
+      blooms: Set[String], v: String, g: Long, s: Skip): Boolean = {
+    val band = c.stats.get(v).flatMap(_.get(s.column))
+    s match {
+      case RangeSkip(_, lo, hi) =>
+        band.forall { case (mn, mx) => mx >= lo && mn <= hi }
+      case KeySkip(column, keys) =>
+        band.forall { case (mn, mx) => keys.exists(k => k >= mn && k <= mx) } &&
+          (!blooms(column) || bloomSurvives(f, root, v, column, g, keys))
+    }
+  }
+
+  /** Open only the partitions every skip in `skips` lets through, then
+    * apply `resid`; everything pruned gives a schema-correct empty frame.
+    */
+  private def readSkipping(spark: SparkSession, dir: String,
+      skips: Seq[Skip], resid: DataFrame => DataFrame): Option[DataFrame] =
+    readCommit(dir).filter(_.gens.nonEmpty).map { c =>
+      val (f, root) = fsRoot(dir)
+      val blooms = bloomTrackOf(c).toSet
+      val keep = c.gens.filter { case (v, g) =>
+        skips.forall(survives(f, root, c, blooms, v, g, _))
+      }.keySet
+      resid(readPartitions(spark, dir, c, keep)
+        .getOrElse(readPaths(spark, dir, c, pathsOf(dir, c)).limit(0)))
+    }
 
   /** Stats-pruned range read: partitions whose tracked `[min, max]` for
     * `statsCol` cannot intersect `[lo, hi]` are never opened (manifest
@@ -1818,27 +1863,11 @@ object GenTable {
   def readRanges(spark: SparkSession, dir: String,
       ranges: Map[String, (Long, Long)]): Option[DataFrame] = {
     require(ranges.nonEmpty, "need at least one (column, range)")
-    readCommit(dir).filter(_.gens.nonEmpty).map { c =>
-      val resid = (df: DataFrame) => ranges.foldLeft(df) {
-        case (d, (sc, (lo, hi))) =>
-          d.filter(rangeEncoded(d.schema, sc).between(lo, hi))
-      }
-      val keep = c.gens.toSeq.filter { case (v, _) =>
-        ranges.forall { case (sc, (lo, hi)) =>
-          c.stats.get(v).flatMap(_.get(sc)) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None => true
-          }
-        }
-      }.sortBy(_._1)
-      if (keep.isEmpty) {
-        // everything pruned: schema-correct empty frame off the full view
-        resid(read(spark, dir).get).limit(0)
-      } else {
-        val paths = keep.map { case (k, g) => genPath(dir, c.partitionCols, k, g) }
-        resid(readPaths(spark, dir, c, paths))
-      }
-    }
+    readSkipping(spark, dir,
+      ranges.toSeq.map { case (sc, (lo, hi)) => RangeSkip(sc, lo, hi) },
+      df => ranges.foldLeft(df) { case (d, (sc, (lo, hi))) =>
+        d.filter(rangeEncoded(d.schema, sc).between(lo, hi))
+      })
   }
 
   /** Bloom-pruned point lookup — the skip [[readRange]]'s min/max bands
@@ -1860,7 +1889,7 @@ object GenTable {
   def readEquals(spark: SparkSession, dir: String, column: String,
       keys: Seq[Long]): Option[DataFrame] = {
     require(keys.nonEmpty, "need at least one key")
-    readPruned(spark, dir, column, keys,
+    readSkipping(spark, dir, Seq(KeySkip(column, keys)),
       df => df.filter(rangeEncoded(df.schema, column).isin(keys: _*)))
   }
 
@@ -1874,29 +1903,9 @@ object GenTable {
   def readEqualsStrings(spark: SparkSession, dir: String, column: String,
       keys: Seq[String]): Option[DataFrame] = {
     require(keys.nonEmpty, "need at least one key")
-    readPruned(spark, dir, column, keys.map(xxhash64String),
+    readSkipping(spark, dir, Seq(KeySkip(column, keys.map(xxhash64String))),
       df => df.filter(col(column).isin(keys: _*)))
   }
-
-  private def readPruned(spark: SparkSession, dir: String, column: String,
-      encodedKeys: Seq[Long],
-      resid: DataFrame => DataFrame): Option[DataFrame] =
-    readCommit(dir).filter(_.gens.nonEmpty).map { c =>
-      val (f, root) = fsRoot(dir)
-      val keep = c.gens.toSeq.filter { case (v, g) =>
-        val mmKeep = c.stats.get(v).flatMap(_.get(column)) match {
-          case Some((mn, mx)) => encodedKeys.exists(k => k >= mn && k <= mx)
-          case None => true
-        }
-        mmKeep && bloomSurvives(f, root, v, column, g, encodedKeys)
-      }.sortBy(_._1)
-      if (keep.isEmpty) {
-        resid(read(spark, dir).get).limit(0)
-      } else {
-        val paths = keep.map { case (k, g) => genPath(dir, c.partitionCols, k, g) }
-        resid(readPaths(spark, dir, c, paths))
-      }
-    }
 
   /** Atomic upsert of one batch: merge latest-per-key into the touched
     * partitions and commit. This is the transactional replacement for the
@@ -1939,12 +1948,7 @@ object GenTable {
       schemaOf(prev).foreach(p => mergeSchemas(p, batch.schema))
       val touchedVals = touchedKeys(batch, pcols).toSet
       if (touchedVals.isEmpty) return
-      val existingPaths = prev.gens.filter { case (k, _) => touchedVals(k) }
-        .toSeq.sortBy(_._1)
-        .map { case (k, g) => genPath(dir, prev.partitionCols, k, g) }
-      val existing =
-        if (existingPaths.isEmpty) None
-        else Some(readPaths(spark, dir, prev, existingPaths))
+      val existing = readPartitions(spark, dir, prev, touchedVals)
       import org.apache.spark.sql.expressions.Window
       val unioned = existing
         .fold(batch)(_.unionByName(batch, allowMissingColumns = true))
@@ -2501,10 +2505,7 @@ object GenTable {
     val deleted = touchedRows.map(_.getLong(nCols)).sum
     val touchedVals = touchedRows
       .map(r => partKey((0 until nCols).map(r.getString))).toSet
-    val touchedPaths = c.gens.filter { case (k, _) => touchedVals(k) }
-      .toSeq.sortBy(_._1)
-      .map { case (k, g) => genPath(dir, c.partitionCols, k, g) }
-    val survivors = readPaths(spark, dir, c, touchedPaths)
+    val survivors = readPartitions(spark, dir, c, touchedVals).get
       .filter(!coalesce(predicate, lit(false)))
     commitRewrite(dir, c, touchedVals, survivors, opMeta("delete"))
     deleted
@@ -2548,10 +2549,7 @@ object GenTable {
     val updated = touchedRows.map(_.getLong(nCols)).sum
     val touchedVals = touchedRows
       .map(r => partKey((0 until nCols).map(r.getString))).toSet
-    val touchedPaths = c.gens.filter { case (k, _) => touchedVals(k) }
-      .toSeq.sortBy(_._1)
-      .map { case (k, g) => genPath(dir, c.partitionCols, k, g) }
-    val part = readPaths(spark, dir, c, touchedPaths)
+    val part = readPartitions(spark, dir, c, touchedVals).get
     val hit = coalesce(predicate, lit(false))
     val assigned = set.toMap
     // ONE select so every RHS reads the pre-update row. Each RHS is CAST
@@ -2576,9 +2574,10 @@ object GenTable {
     * derives the touched partitions directly from the keys, so both the
     * scan and the rewrite are bounded by the partitions the keys map
     * to — at 100 TB a thousand-user takedown reads a handful of
-    * buckets, never the table. `keys` is broadcast into the anti-join
-    * (takedown lists are small by nature). Keys mapping to absent
-    * partitions, or absent from their partition, delete nothing.
+    * buckets, never the table. `keys` is collected to the driver and
+    * filters as a literal `IN` set (takedown lists are small by nature).
+    * NULL keys, keys mapping to absent partitions and keys absent from
+    * their partition delete nothing.
     * Returns rows deleted (0 = no commit).
     */
   def deleteKeys(keys: DataFrame, dir: String, keyCol: String,
@@ -2599,12 +2598,10 @@ object GenTable {
         s"(${c.partitionCol}); got ${partitionExprs.length} partition " +
         s"expression(s)")
     // ONE job collects the distinct keys WITH their mapped partition
-    // tuples (takedown lists are broadcast-sized by contract — collecting
-    // them is the same order as the broadcast the join pays anyway). The
-    // keys then join as a LITERAL LocalRelation, so the anti-join
-    // re-derives identical survivors on a retried task no matter what
-    // lineage produced `keys`, and the return value counts exactly the
-    // rows the rewrite removes.
+    // tuples (takedown lists are small by contract). The keys then filter
+    // as a LITERAL `IN` set, so the rewrite re-derives identical
+    // survivors on a retried task no matter what lineage produced `keys`,
+    // and the return value counts exactly the rows the rewrite removes.
     val keyRows = keys.select(col(keyCol)).distinct()
       .select(col(keyCol) +:
         partitionExprs.zipWithIndex.map { case (e, i) =>
@@ -2617,22 +2614,13 @@ object GenTable {
       }.toSet
       .filter(c.gens.contains) // bounded: partitions the key list maps to
     if (touchedVals.isEmpty) return 0L
-    val keySchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(keyCol,
-        keys.schema(keyCol).dataType, nullable = true)))
-    val localKeys = spark.createDataFrame(
-      java.util.Arrays.asList(keyRows.map(r =>
-        org.apache.spark.sql.Row(r.get(0))): _*), keySchema)
-    val touchedPaths = c.gens.filter { case (v, _) => touchedVals(v) }
-      .toSeq.sortBy(_._1)
-      .map { case (kk, g) => genPath(dir, c.partitionCols, kk, g) }
-    val part = readPaths(spark, dir, c, touchedPaths)
-    val deleted = part.join(broadcast(localKeys), Seq(keyCol), "left_semi")
-      .count()
+    // a NULL key matches nothing, as in an equi-join
+    val hit = col(keyCol).isin(keyRows.map(_.get(0)).filter(_ != null): _*)
+    val part = readPartitions(spark, dir, c, touchedVals).get
+    val deleted = part.filter(hit).count()
     if (deleted == 0L) return 0L
     commitRewrite(dir, c, touchedVals,
-      part.join(broadcast(localKeys), Seq(keyCol), "left_anti"),
-      opMeta("delete_keys"))
+      part.filter(!coalesce(hit, lit(false))), opMeta("delete_keys"))
     deleted
   }
 
@@ -2686,12 +2674,7 @@ object GenTable {
             if (vals.contains(null)) None else Some(partKey(vals))
           }.toSet
         if (touchedVals.isEmpty) return
-        val existingPaths = c.gens
-          .filter { case (v, _) => touchedVals(v) }.toSeq.sortBy(_._1)
-          .map { case (k, g) => genPath(dir, pcols, k, g) }
-        val existing =
-          if (existingPaths.isEmpty) None
-          else Some(readPaths(spark, dir, c, existingPaths))
+        val existing = readPartitions(spark, dir, c, touchedVals)
         // post-image beats the stored row by PRIORITY, not data order
         import org.apache.spark.sql.expressions.Window
         val tagged = existing
@@ -2830,12 +2813,7 @@ object GenTable {
           s"default them first)")
       val touchedVals = card.getSeq[org.apache.spark.sql.Row](4)
         .map(r => partKey(pc.indices.map(r.getString))).toSet
-      val existingPaths = c.gens.filter { case (v, _) => touchedVals(v) }
-        .toSeq.sortBy(_._1)
-        .map { case (k, g) => genPath(dir, c.partitionCols, k, g) }
-      val existing =
-        if (existingPaths.isEmpty) None
-        else Some(readPaths(spark, dir, c, existingPaths))
+      val existing = readPartitions(spark, dir, c, touchedVals)
       // one keyed probe decides matched-ness for every arm at once
       val flagged = (existing match {
         case Some(ex) => frozenSrc.join(
@@ -2915,7 +2893,7 @@ object GenTable {
         val allDeterministic =
           (updateWhen.toSeq ++ deleteWhen ++ insertWhen ++
             updateSet.map(_._2)).forall(cnd =>
-            !org.apache.spark.sql.GraftSqlShim.expr(cnd)
+            !GraftSqlShim.expr(cnd)
               .exists(!_.deterministic))
         val result =
           if (allDeterministic) result0 else result0.localCheckpoint(true)

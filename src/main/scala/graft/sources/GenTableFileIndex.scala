@@ -3,7 +3,7 @@ package graft.sources
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -11,6 +11,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import GenTable.{KeySkip, RangeSkip, Skip}
 
 /** Manifest-driven [[FileIndex]] over one committed [[GenTable.Commit]] —
   * the piece that plugs the lake tier into Catalyst's own scan planning
@@ -137,11 +139,6 @@ final class GenTableFileIndex(
 
   // ---------------------------------------------------- filter extraction
 
-  /** One prunable conjunct: a range band or a key set on a data column. */
-  private sealed trait Skip
-  private case class RangeSkip(col: String, lo: Long, hi: Long) extends Skip
-  private case class KeySkip(col: String, keys: Seq[Long]) extends Skip
-
   /** Column reference in the stats writer's long semantics; integral
     * widening casts are transparent (same long value), anything else is
     * not ours to decide.
@@ -227,20 +224,6 @@ final class GenTableFileIndex(
     case _ => Nil // unknown shape: decides nothing, prunes nothing
   }
 
-  private def survives(v: String, g: Long, s: Skip): Boolean = s match {
-    case RangeSkip(c, lo, hi) =>
-      commit.stats.get(v).flatMap(_.get(c)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true // untracked here: conservative
-      }
-    case KeySkip(c, keys) =>
-      val band = commit.stats.get(v).flatMap(_.get(c)) match {
-        case Some((mn, mx)) => keys.exists(k => k >= mn && k <= mx)
-        case None => true
-      }
-      band && (!bloomCols(c) || GenTable.bloomSurvives(fs, root, v, c, g, keys))
-  }
-
   private def evalPartitionFilter(f: Expression, row: InternalRow): Boolean = {
     // a filter referencing anything but partition columns is not ours to
     // decide: conservative keep (Spark re-applies every predicate anyway)
@@ -259,7 +242,7 @@ final class GenTableFileIndex(
     commit.gens.toSeq.sortBy(_._1).flatMap { case (v, g) =>
       val row = partitionRows(v)
       val keep = partitionFilters.forall(evalPartitionFilter(_, row)) &&
-        skips.forall(survives(v, g, _))
+        skips.forall(GenTable.survives(fs, root, commit, bloomCols, v, g, _))
       if (keep) Some(PartitionDirectory(row, filesOf(v, g))) else None
     }
   }
@@ -644,7 +627,7 @@ final class GenTableSink(path: String, keyCol: String,
     val marker = Map(GenTableSink.BatchKey -> batchId.toString)
     // the engine hands a streaming-tagged frame; the merge runs its own
     // jobs on it, so re-wrap the planned batch RDD (ForeachBatchSink's move)
-    val raw = org.apache.spark.sql.GraftSqlShim.asBatchFrame(data)
+    val raw = GraftSqlShim.asBatchFrame(data)
     // `.option("expect", <bool expr>)` — the declarative pipeline's
     // quality gate ([[Expectations]] semantics: TRUE passes, NULL fails).
     // In cdc mode the gate judges post-images only: a delete pre-image

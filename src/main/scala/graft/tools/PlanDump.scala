@@ -1,21 +1,21 @@
 package graft.tools
 
-/** Dev scratch (round 16): dump `.explain("formatted")` for every declared
-  * query to plans/r16/<name>_<suffix>.txt. Not API.
+/** Dump `.explain("formatted")` for every declared query (or only the
+  * named ones) to <outDir>/<name>_<suffix>.txt. Not API.
   *
-  * Usage: runMain graft.tools.PlanDump16 <sfDir> <outDir> <suffix> [only...]
+  * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [only...]
   * Building a lifecycle query's DataFrame executes its table lifecycle
   * (that's the closure, not the final action), so a full dump costs about
   * one bench pass.
   */
-object PlanDump16 {
+object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     val suffix = args(2)
     val only: Set[String] = args.drop(3).toSet
     java.nio.file.Files.createDirectories(outDir)
-    val spark = graft.Sessions.local("plandump16", 32)
+    val spark = graft.Sessions.local("plandump", 32)
     spark.sparkContext.setLogLevel("ERROR")
     val names = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }

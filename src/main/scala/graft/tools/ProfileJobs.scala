@@ -3,21 +3,22 @@ package graft.tools
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
-/** Dev scratch (round 16): per-Spark-job wall breakdown of one query —
-  * where inside a lifecycle gate the seconds actually go. Not API.
+/** Per-Spark-job wall breakdown of one query — where inside a lifecycle
+  * gate the seconds actually go. Not API.
   *
-  * Usage: runMain graft.tools.ProfileJobs16 <sfDir> <query[,query...]> [reps]
-  * Prints one line per job (duration, #tasks, description/callsite) plus
-  * the closure-build vs count split, to /tmp/profile_jobs.out.
+  * Usage: runMain graft.tools.ProfileJobs <sfDir> <query[,query...]> [reps]
+  * Prints to stdout one line per job (duration, driver gap since the
+  * previous job, #tasks, description/callsite) plus the closure-build vs
+  * count split.
   */
-object ProfileJobs16 {
+object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val qname = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = graft.Sessions.local("profilejobs16", 32)
+    val spark = graft.Sessions.local("profilejobs", 32)
     spark.sparkContext.setLogLevel("ERROR")
-    val out = new java.io.PrintWriter("/tmp/profile_jobs.out")
+    val out = Console.out
 
     case class Job(id: Int, t0: Long, var t1: Long = -1L,
       var tasks: Int = 0, desc: String)
@@ -66,7 +67,6 @@ object ProfileJobs16 {
       }
       out.flush()
     }
-    out.close()
     spark.stop()
   }
 }

@@ -19,7 +19,7 @@ class GenTableJobCountSpec extends SparkSpec {
 
   // measured: each commit stage is the write plus one aggregate over the
   // written files (the bloom sidecar and the timestamp band together)
-  private val Budget = Map("upsert" -> 7, "merge" -> 13, "deleteKeys" -> 10,
+  private val Budget = Map("upsert" -> 7, "merge" -> 13, "deleteKeys" -> 8,
     "deleteWhere" -> 6, "compact" -> 4)
 
   /** The Spark jobs `f` submits, picked out of the listener bus by a job
