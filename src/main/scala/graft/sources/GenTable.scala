@@ -65,12 +65,13 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * by [[vacuum]].
   *
   * Scale: staging cost is bounded by the partitions a batch touches
-  * (the upsert contract), never table size; the manifest is one small
-  * object (one line per partition — fine for the thousands-of-partitions
-  * regime; beyond that, real table formats shard the manifest, which is
-  * orthogonal to this protocol). Old generations stay on disk until
-  * [[vacuum]], giving readers snapshot isolation for the retention
-  * window.
+  * (the upsert contract), never table size. The manifest has one line
+  * grammar (see [[renderBody]]): one [[Cell]] per partition (its
+  * generation, bands, bytes, rows and files); heads add `#tgen`, `#meta`
+  * and — past [[shardCellThreshold]] cells — `#shard` lines naming
+  * immutable delta shards, which add `#drop` tombstones. Old generations
+  * stay on disk until [[vacuum]], giving readers snapshot isolation for
+  * the retention window.
   *
   * Schema evolution: the table schema rides the manifest
   * (`#meta=table_schema`). A batch may ADD columns — the committed schema
@@ -116,41 +117,58 @@ object GenTable {
     implicit def fromSeq(cs: Seq[String]): PartitionCols = PartitionCols(cs)
   }
 
-  /** A committed table state: each partition KEY maps to its committed
-    * generation. A key is the partition's value tuple in canonical form —
-    * each component's string rendering URL-encoded, components joined
-    * with ',' ([[partKey]]); for a single-column table this is exactly
-    * the directory-name value, so the manifest format is unchanged from
-    * the single-column era. `minGen` floors [[tableGen]] so commit ids
-    * stay strictly increasing even when a commit removes the
-    * highest-generation partitions entirely (a [[deleteWhere]] that
-    * empties them) — without it the next commit id could collide with an
-    * archived one.
+  /** One partition's committed state — its manifest CELL: the generation
+    * directory readers open, the skip tier's encoded min/max band per
+    * tracked column (empty when none is provable), and the bytes, exact
+    * rows and data files read back from that generation's files (None in
+    * manifests that predate their tracking).
     */
-  final case class Commit(partitionCols: Seq[String], gens: Map[String, Long],
-      minGen: Long = 0L,
-      stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
-      meta: Map[String, String] = Map.empty,
-      sizes: Map[String, Long] = Map.empty,
-      rows: Map[String, Long] = Map.empty,
-      files: Map[String, Long] = Map.empty) {
+  final case class Cell(gen: Long,
+      stats: Map[String, (Long, Long)] = Map.empty,
+      bytes: Option[Long] = None, rows: Option[Long] = None,
+      files: Option[Long] = None)
+
+  /** A committed table state: one [[Cell]] per partition KEY. A key is
+    * the partition's value tuple in canonical form — each component's
+    * string rendering URL-encoded, components joined with ','
+    * ([[partKey]]); for a single-column table this is exactly the
+    * directory-name value, so the manifest format is unchanged from the
+    * single-column era. `minGen` floors [[tableGen]] so commit ids stay
+    * strictly increasing even when a commit removes the highest-generation
+    * partitions entirely (a [[deleteWhere]] that empties them) — without
+    * it the next commit id could collide with an archived one.
+    */
+  final case class Commit(partitionCols: Seq[String],
+      cells: Map[String, Cell] = Map.empty, minGen: Long = 0L,
+      meta: Map[String, String] = Map.empty) {
+    /** Per-field views of [[cells]]: `stats` holds only partitions with a
+      * band, `sizes`/`rows`/`files` only partitions that recorded one.
+      */
+    lazy val gens: Map[String, Long] = cells.map { case (k, c) => k -> c.gen }
+    lazy val stats: Map[String, Map[String, (Long, Long)]] =
+      cells.collect { case (k, c) if c.stats.nonEmpty => k -> c.stats }
+    lazy val sizes: Map[String, Long] =
+      cells.flatMap { case (k, c) => c.bytes.map(k -> _) }
+    lazy val rows: Map[String, Long] =
+      cells.flatMap { case (k, c) => c.rows.map(k -> _) }
+    lazy val files: Map[String, Long] =
+      cells.flatMap { case (k, c) => c.files.map(k -> _) }
     /** Display form of the partition columns (the single column's name
       * for single-column tables).
       */
     def partitionCol: String = partitionCols.mkString(",")
     def tableGen: Long =
-      if (gens.isEmpty) minGen else math.max(minGen, gens.values.max)
+      if (cells.isEmpty) minGen
+      else math.max(minGen, cells.valuesIterator.map(_.gen).max)
     /** Columns any partition tracks min/max for (the sticky stats set). */
-    def trackedStatsCols: Set[String] = stats.values.flatMap(_.keys).toSet
+    def trackedStatsCols: Set[String] = cells.values.flatMap(_.stats.keys).toSet
     /** Total committed bytes, when every partition recorded its size at
       * commit time (tables written since size tracking) — the Iceberg-style
       * statistic that lets the optimizer cost a scan (broadcast decisions)
       * WITHOUT listing a single file. None forces the reader to list.
       */
     def totalBytes: Option[Long] =
-      if (gens.nonEmpty && gens.keySet.forall(sizes.contains))
-        Some(sizes.values.sum)
-      else None
+      if (cells.isEmpty) None else total(_.bytes)
     /** Exact committed row count, when every partition recorded one at
       * commit time (`#rows` manifest lines, read from the parquet footers
       * the commit just wrote). Some(0) for an empty committed table —
@@ -158,46 +176,37 @@ object GenTable {
       * the reader to scan; [[GenTableMetadataAggregate]]-style rewrites
       * must not fire.
       */
-    def totalRows: Option[Long] =
-      if (gens.keySet.forall(rows.contains))
-        Some(gens.keySet.toSeq.map(rows).sum)
-      else None
+    def totalRows: Option[Long] = total(_.rows)
     /** Committed data-file count, when every partition recorded one
       * (`#files` lines) — the input to a METADATA-ONLY compaction
       * decision ([[compactionAdvice]]): at scale, listing a table to
       * decide whether to compact costs more than the decision saves.
       */
-    def totalFiles: Option[Long] =
-      if (gens.keySet.forall(files.contains))
-        Some(gens.keySet.toSeq.map(files).sum)
+    def totalFiles: Option[Long] = total(_.files)
+    private def total(field: Cell => Option[Long]): Option[Long] =
+      if (cells.values.forall(field(_).isDefined))
+        Some(cells.values.map(field(_).get).sum)
       else None
     /** This commit with the `replaced` partitions swapped for what `s`
-      * landed: a landed partition takes the staged generation and the
-      * manifest lines read back from its files; a replaced partition that
-      * landed nothing leaves the manifest. The commit id is the staged
-      * generation even when nothing landed (a rewrite that empties every
-      * partition it touched), so ids stay strictly increasing.
+      * landed: a landed partition takes the staged cell, read back from
+      * its files; a replaced partition that landed nothing leaves the
+      * manifest. The commit id is the staged generation even when nothing
+      * landed (a rewrite that empties every partition it touched), so ids
+      * stay strictly increasing.
       */
     private[sources] def fold(replaced: Iterable[String], s: Staged,
         extraMeta: Map[String, String] = Map.empty): Commit = copy(
-      gens = gens -- replaced ++ s.sizes.keys.map(_ -> s.gen),
+      cells = cells -- replaced ++ s.cells,
       minGen = math.max(minGen, s.gen),
-      stats = stats -- replaced ++ s.stats,
-      meta = meta ++ s.meta ++ extraMeta,
-      sizes = sizes -- replaced ++ s.sizes,
-      rows = rows -- replaced ++ s.rows,
-      files = files -- replaced ++ s.files)
+      meta = meta ++ s.meta ++ extraMeta)
   }
 
-  /** What one [[stageGen]] landed at generation `gen`, per landed
-    * partition: bytes, exact rows, data files and skip bands, all read
-    * back from the written files; `meta` carries the written schema and
-    * the bloom column set with its sizing.
+  /** What one [[stageGen]] landed at generation `gen`: one cell per
+    * landed partition, read back from the written files; `meta` carries
+    * the written schema and the bloom column set with its sizing.
     */
   private[sources] final case class Staged(gen: Long,
-      sizes: Map[String, Long], rows: Map[String, Long],
-      files: Map[String, Long], stats: Map[String, Map[String, (Long, Long)]],
-      meta: Map[String, String])
+      cells: Map[String, Cell], meta: Map[String, String])
 
   /** Reserved meta key carrying the committed schema (see object doc). */
   private val SchemaMetaKey = "table_schema"
@@ -521,7 +530,7 @@ object GenTable {
     *    referencing IMMUTABLE delta shards under `_manifests/` —
     *    KB-sized however many cells the table has;
     *  - each publish writes ONE new gzipped shard holding just the
-    *    cells it changed (full five-map payload per touched key, plus
+    *    cells it changed (the full cell of every touched key, plus
     *    `#drop=` tombstones), then swaps the head — commit IO follows
     *    the churn, never the table;
     *  - the committed state is the in-order FOLD of the shard chain
@@ -565,17 +574,11 @@ object GenTable {
   private[sources] final case class ShardRef(name: String, cells: Long,
       drops: Long)
 
-  /** One shard's payload: the full five-map cell state for every key
-    * the shard touches, plus the keys it removes.
+  /** One shard's payload: the full cell of every key the shard touches,
+    * plus the keys it removes.
     */
-  private final case class ShardData(gens: Map[String, Long],
-      stats: Map[String, Map[String, (Long, Long)]],
-      sizes: Map[String, Long], rows: Map[String, Long],
-      files: Map[String, Long], drops: Set[String]) {
-    def cellKeys: Set[String] =
-      gens.keySet ++ stats.keySet ++ sizes.keySet ++ rows.keySet ++
-        files.keySet
-  }
+  private[sources] final case class ShardData(cells: Map[String, Cell],
+      drops: Set[String])
 
   /** Parsed shards by absolute file path — shard files are immutable
     * (uniquely named per commit, never rewritten), so entries can never
@@ -591,61 +594,107 @@ object GenTable {
   private val foldedCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Seq[String]), Commit]()
 
-  private def renderShard(d: ShardData): Array[Byte] = {
-    val statLines = d.stats.toSeq.sortBy(_._1).flatMap { case (k, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-        s"#stat=$k|${enc(c)}|$mn|$mx"
-      }
-    }
-    val body = (d.gens.toSeq.sortBy(_._1).map { case (k, g) => s"$k=$g" } ++
-      statLines ++
-      d.sizes.toSeq.sortBy(_._1).map { case (k, b) => s"#size=$k|$b" } ++
-      d.rows.toSeq.sortBy(_._1).map { case (k, n) => s"#rows=$k|$n" } ++
-      d.files.toSeq.sortBy(_._1).map { case (k, n) => s"#files=$k|$n" } ++
-      d.drops.toSeq.sorted.map(k => s"#drop=$k"))
-      .mkString("", "\n", "\n")
-    body.getBytes(StandardCharsets.UTF_8)
+  /** The ONE line grammar of heads, archives and shards. A cell is
+    * `<key>=<gen>` plus `#stat=<key>|<col>|<min>|<max>` per band and
+    * `#size=<key>|<bytes>`, `#rows=<key>|<n>`, `#files=<key>|<n>`. Heads
+    * open with `pcol=<cols>` and `#tgen=<commit id>` and carry
+    * `#meta=<k>|<v>` lines (between the bands and the sizes) or, when
+    * sharded, `#shard=<name>|<cells>|<drops>` lines instead of cells;
+    * shards end with `#drop=<key>` tombstones. Each kind is sorted by
+    * key. A partition key never starts with '#' nor holds '=' or '|'
+    * (URL encoding writes `%23`, `%3D`, `%7C`), so a line's kind is its
+    * prefix: unknown `#` lines are ignored (forward compatibility), and
+    * cell lines whose key has no generation line are dropped.
+    */
+  private def renderBody(head: Seq[String], cells: Map[String, Cell],
+      meta: Map[String, String], tail: Seq[String]): Array[Byte] = {
+    val cs = cells.toSeq.sortBy(_._1)
+    def per(kind: String, field: Cell => Option[Long]): Seq[String] =
+      cs.flatMap { case (k, c) => field(c).map(v => s"#$kind=$k|$v") }
+    (head ++ cs.map { case (k, c) => s"$k=${c.gen}" } ++
+      cs.flatMap { case (k, c) => c.stats.toSeq.sortBy(_._1).map {
+        case (sc, (mn, mx)) => s"#stat=$k|${enc(sc)}|$mn|$mx" } } ++
+      meta.toSeq.sortBy(_._1).map { case (k, v) => s"#meta=${enc(k)}|${enc(v)}" } ++
+      per("size", _.bytes) ++ per("rows", _.rows) ++ per("files", _.files) ++
+      tail).mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)
   }
 
-  private def parseShard(body: String): ShardData = {
+  /** A head body: monolithic with an empty `chain`, else sharded (the
+    * cells live in the chain's shards).
+    */
+  private[sources] def renderHead(c: Commit,
+      chain: Seq[ShardRef] = Nil): Array[Byte] =
+    renderBody(Seq(s"pcol=${c.partitionCols.map(enc).mkString(",")}",
+        s"#tgen=${c.tableGen}") ++
+        chain.map(s => s"#shard=${enc(s.name)}|${s.cells}|${s.drops}"),
+      if (chain.isEmpty) c.cells else Map.empty, c.meta, Nil)
+
+  private[sources] def renderShard(d: ShardData): Array[Byte] =
+    renderBody(Nil, d.cells, Map.empty, d.drops.toSeq.sorted.map("#drop=" + _))
+
+  /** Parse any body of the grammar: the state it spells (partition
+    * columns empty for a shard; `#tgen` as `minGen`), its shard chain and
+    * its tombstones.
+    */
+  private def parseBody(body: String): (Commit, Seq[ShardRef], Set[String]) = {
+    var pcols = Seq.empty[String]
+    var tgen = 0L
     val gens = Map.newBuilder[String, Long]
-    val statBuf = Seq.newBuilder[(String, String, Long, Long)]
-    val sizes = Map.newBuilder[String, Long]
-    val rows = Map.newBuilder[String, Long]
-    val files = Map.newBuilder[String, Long]
+    val stats = Seq.newBuilder[(String, (String, (Long, Long)))]
+    val sizes, rows, files = Map.newBuilder[String, Long]
+    val meta = Map.newBuilder[String, String]
+    val shards = Seq.newBuilder[ShardRef]
     val drops = Set.newBuilder[String]
-    body.split('\n').filter(_.nonEmpty).foreach { line =>
-      if (line.startsWith("#stat=")) {
-        val p = line.stripPrefix("#stat=").split('|')
-        require(p.length == 4, s"malformed shard stat line: $line")
-        statBuf += ((p(0), dec(p(1)), p(2).toLong, p(3).toLong))
-      } else if (line.startsWith("#size=")) {
-        val p = line.stripPrefix("#size=").split('|')
-        require(p.length == 2, s"malformed shard size line: $line")
-        sizes += p(0) -> p(1).toLong
-      } else if (line.startsWith("#rows=")) {
-        val p = line.stripPrefix("#rows=").split('|')
-        require(p.length == 2, s"malformed shard rows line: $line")
-        rows += p(0) -> p(1).toLong
-      } else if (line.startsWith("#files=")) {
-        val p = line.stripPrefix("#files=").split('|')
-        require(p.length == 2, s"malformed shard files line: $line")
-        files += p(0) -> p(1).toLong
-      } else if (line.startsWith("#drop=")) {
-        drops += line.stripPrefix("#drop=")
-      } else if (line.startsWith("#") || line.startsWith("pcol=")) {
-        // forward compatibility: unknown annotation lines are ignored
-      } else {
-        val eq = line.lastIndexOf('=')
-        require(eq > 0, s"malformed shard line: $line")
+    body.split('\n').iterator.filter(_.nonEmpty).foreach { line =>
+      val eq = line.indexOf('=')
+      def args(n: Int): Array[String] = {
+        val p = line.substring(eq + 1).split('|')
+        require(p.length == n, s"malformed manifest line: $line")
+        p
+      }
+      if (line.startsWith("pcol="))
+        pcols = line.stripPrefix("pcol=").split(",", -1).toSeq.map(dec)
+      else if (!line.startsWith("#")) {
+        require(eq > 0, s"malformed manifest line: $line")
         gens += line.substring(0, eq) -> line.substring(eq + 1).toLong
+      } else if (eq > 0) line.substring(1, eq) match {
+        case "tgen" => tgen = args(1)(0).toLong
+        case "stat" => val p = args(4)
+          stats += p(0) -> (dec(p(1)) -> ((p(2).toLong, p(3).toLong)))
+        case "size" => val p = args(2); sizes += p(0) -> p(1).toLong
+        case "rows" => val p = args(2); rows += p(0) -> p(1).toLong
+        case "files" => val p = args(2); files += p(0) -> p(1).toLong
+        case "meta" => val p = args(2); meta += dec(p(0)) -> dec(p(1))
+        case "shard" => val p = args(3)
+          shards += ShardRef(dec(p(0)), p(1).toLong, p(2).toLong)
+        case "drop" => drops += line.substring(eq + 1)
+        case _ => // an unknown annotation
       }
     }
-    val stats = statBuf.result().groupBy(_._1).map { case (v, rws) =>
-      v -> rws.map(r => r._2 -> (r._3, r._4)).toMap
+    val bands = stats.result().groupMap(_._1)(_._2).map { case (k, b) => k -> b.toMap }
+    val (sz, rw, fl) = (sizes.result(), rows.result(), files.result())
+    val cells = gens.result().map { case (k, g) =>
+      k -> Cell(g, bands.getOrElse(k, Map.empty), sz.get(k), rw.get(k), fl.get(k))
     }
-    ShardData(gens.result(), stats, sizes.result(), rows.result(),
-      files.result(), drops.result())
+    (Commit(pcols, cells, tgen, meta.result()), shards.result(), drops.result())
+  }
+
+  /** Parse one head or archive body WITHOUT resolving shards: a
+    * monolithic body returns its full state and an empty chain; a sharded
+    * head returns the header/meta-only state (no cells — `#tgen` still
+    * yields the commit id) plus the chain for [[resolveManifest]] to
+    * fold. Callers that need cells must resolve; the light parse is for
+    * the publish OCC check and the vacuum reference sweep.
+    */
+  private[sources] def parseManifest(body: String): (Commit, Seq[ShardRef]) = {
+    val (c, chain, _) = parseBody(body)
+    require(c.partitionCols.nonEmpty, s"malformed manifest: ${body.take(80)}")
+    (c, chain)
+  }
+
+  private[sources] def parseShard(body: String): ShardData = {
+    val (c, _, drops) = parseBody(body)
+    ShardData(c.cells, drops)
   }
 
   private def loadShard(f: FileSystem, root: HPath, name: String): ShardData = {
@@ -661,7 +710,8 @@ object GenTable {
 
   /** The committed state behind a (possibly sharded) manifest body:
     * monolithic bodies return as parsed; sharded heads fold their chain
-    * (cached — the chain is immutable per commit id).
+    * (cached — the chain is immutable per commit id): a later shard's
+    * cell replaces the earlier one whole, and drops remove.
     */
   private def resolveManifest(f: FileSystem, root: HPath,
       body: String): Commit = {
@@ -670,198 +720,23 @@ object GenTable {
     val cacheKey = (root.toString, head.tableGen, shards.map(_.name))
     val hit = foldedCache.get(cacheKey)
     if (hit != null) return hit
-    var gens = Map.empty[String, Long]
-    var stats = Map.empty[String, Map[String, (Long, Long)]]
-    var sizes = Map.empty[String, Long]
-    var rows = Map.empty[String, Long]
-    var files = Map.empty[String, Long]
-    shards.foreach { ref =>
-      val d = loadShard(f, root, ref.name)
-      if (d.drops.nonEmpty) {
-        gens = gens -- d.drops; stats = stats -- d.drops
-        sizes = sizes -- d.drops; rows = rows -- d.drops
-        files = files -- d.drops
-      }
-      // a later shard's cell REPLACES the earlier one per key: clear all
-      // five slots for the touched keys before overlaying, so a cell that
-      // legitimately lost a slot (e.g. stats dropped by a stats-col
-      // change) does not resurrect the old value
-      val touched = d.cellKeys
-      if (touched.nonEmpty) {
-        gens = gens -- touched ++ d.gens
-        stats = stats -- touched ++ d.stats
-        sizes = sizes -- touched ++ d.sizes
-        rows = rows -- touched ++ d.rows
-        files = files -- touched ++ d.files
-      }
-    }
-    val folded = head.copy(gens = gens, stats = stats, sizes = sizes,
-      rows = rows, files = files)
+    val folded = head.copy(cells = shards.foldLeft(Map.empty[String, Cell]) {
+      (cells, ref) =>
+        val d = loadShard(f, root, ref.name)
+        cells -- d.drops ++ d.cells
+    })
     if (foldedCache.size >= 8) foldedCache.clear()
     foldedCache.put(cacheKey, folded)
     folded
   }
 
-  /** The cell state of one key across the five maps (the shard delta
-    * unit). Two commits' cells compare equal iff nothing about the key
-    * changed.
-    */
-  private def cellOf(c: Commit, k: String): (Option[Long],
-      Option[Map[String, (Long, Long)]], Option[Long], Option[Long],
-      Option[Long]) =
-    (c.gens.get(k), c.stats.get(k), c.sizes.get(k), c.rows.get(k),
-      c.files.get(k))
-
   /** The delta shard from `prev` to `next`: every key whose cell changed
-    * carries its full next-state cell; keys that vanished entirely
-    * become tombstones.
+    * carries its full next-state cell; keys that vanished become
+    * tombstones.
     */
-  private def diffShard(prev: Commit, next: Commit): ShardData = {
-    val keys = prev.gens.keySet ++ prev.stats.keySet ++ prev.sizes.keySet ++
-      prev.rows.keySet ++ prev.files.keySet ++
-      next.gens.keySet ++ next.stats.keySet ++ next.sizes.keySet ++
-      next.rows.keySet ++ next.files.keySet
-    val gens = Map.newBuilder[String, Long]
-    val stats = Map.newBuilder[String, Map[String, (Long, Long)]]
-    val sizes = Map.newBuilder[String, Long]
-    val rows = Map.newBuilder[String, Long]
-    val files = Map.newBuilder[String, Long]
-    val drops = Set.newBuilder[String]
-    keys.foreach { k =>
-      val nc = cellOf(next, k)
-      if (cellOf(prev, k) != nc) {
-        if (nc == (None, None, None, None, None)) drops += k
-        else {
-          nc._1.foreach(gens += k -> _)
-          nc._2.foreach(stats += k -> _)
-          nc._3.foreach(sizes += k -> _)
-          nc._4.foreach(rows += k -> _)
-          nc._5.foreach(files += k -> _)
-        }
-      }
-    }
-    ShardData(gens.result(), stats.result(), sizes.result(), rows.result(),
-      files.result(), drops.result())
-  }
-
-  private def fullShard(c: Commit): ShardData =
-    ShardData(c.gens, c.stats, c.sizes, c.rows, c.files, Set.empty)
-
-  /** Render the SHARDED head: header + meta + the shard chain. Cells
-    * live in the shards; `#tgen` carries the commit id (so light parses
-    * — the publish OCC check — never fold).
-    */
-  private def renderShardedHead(commit: Commit,
-      shards: Seq[ShardRef]): Array[Byte] = {
-    val metaLines = commit.meta.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"#meta=${enc(k)}|${enc(v)}"
-    }
-    val shardLines = shards.map(s =>
-      s"#shard=${enc(s.name)}|${s.cells}|${s.drops}")
-    val body = (s"pcol=${commit.partitionCols.map(enc).mkString(",")}" +:
-      s"#tgen=${commit.tableGen}" +: (shardLines ++ metaLines))
-      .mkString("", "\n", "\n")
-    body.getBytes(StandardCharsets.UTF_8)
-  }
-
-  private def render(commit: Commit): Array[Byte] = {
-    // `#tgen`/`#stat` cannot collide with a partition line: URL encoding
-    // never emits '#' (a literal '#' in a value encodes as %23). Keys are
-    // stored in [[partKey]]'s already-encoded form — byte-identical to
-    // the single-column era's enc(value) for one-column tables.
-    val statLines = commit.stats.toSeq.sortBy(_._1).flatMap { case (k, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-        s"#stat=$k|${enc(c)}|$mn|$mx"
-      }
-    }
-    val metaLines = commit.meta.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"#meta=${enc(k)}|${enc(v)}"
-    }
-    val sizeLines = commit.sizes.toSeq.sortBy(_._1).map { case (k, b) =>
-      s"#size=$k|$b"
-    }
-    val rowLines = commit.rows.toSeq.sortBy(_._1).map { case (k, n) =>
-      s"#rows=$k|$n"
-    }
-    val fileLines = commit.files.toSeq.sortBy(_._1).map { case (k, n) =>
-      s"#files=$k|$n"
-    }
-    val body = (s"pcol=${commit.partitionCols.map(enc).mkString(",")}" +:
-      s"#tgen=${commit.tableGen}" +:
-      (commit.gens.toSeq.sortBy(_._1).map { case (k, g) => s"$k=$g" } ++
-        statLines ++ metaLines ++ sizeLines ++ rowLines ++ fileLines))
-      .mkString("", "\n", "\n")
-    body.getBytes(StandardCharsets.UTF_8)
-  }
-
-  /** Parse one manifest body WITHOUT resolving shards: a monolithic
-    * body returns its full state and an empty chain; a sharded head
-    * returns the header/meta-only state (gens empty — `#tgen` still
-    * yields the commit id) plus the chain for [[resolveManifest]] to
-    * fold. Callers that need cells must resolve; the light parse is for
-    * the publish OCC check and the vacuum reference sweep.
-    */
-  private def parseManifest(body: String): (Commit, Seq[ShardRef]) = {
-    val lines = body.split('\n').filter(_.nonEmpty)
-    require(lines.length >= 1 && lines(0).startsWith("pcol="),
-      s"malformed manifest: ${body.take(80)}")
-    val pcols = lines(0).stripPrefix("pcol=").split(",", -1).toSeq.map(dec)
-    var minGen = 0L
-    val statBuf = Seq.newBuilder[(String, String, Long, Long)]
-    val metaBuf = Map.newBuilder[String, String]
-    val sizeBuf = Map.newBuilder[String, Long]
-    val rowBuf = Map.newBuilder[String, Long]
-    val fileBuf = Map.newBuilder[String, Long]
-    val shardBuf = Seq.newBuilder[ShardRef]
-    val gens = (1 until lines.length).flatMap { i =>
-      val line = lines(i)
-      if (line.startsWith("#tgen=")) {
-        minGen = line.stripPrefix("#tgen=").toLong
-        None
-      } else if (line.startsWith("#shard=")) {
-        val parts = line.stripPrefix("#shard=").split('|')
-        require(parts.length == 3, s"malformed shard line: $line")
-        shardBuf += ShardRef(dec(parts(0)), parts(1).toLong, parts(2).toLong)
-        None
-      } else if (line.startsWith("#size=")) {
-        val parts = line.stripPrefix("#size=").split('|')
-        require(parts.length == 2, s"malformed size line: $line")
-        sizeBuf += parts(0) -> parts(1).toLong
-        None
-      } else if (line.startsWith("#rows=")) {
-        val parts = line.stripPrefix("#rows=").split('|')
-        require(parts.length == 2, s"malformed rows line: $line")
-        rowBuf += parts(0) -> parts(1).toLong
-        None
-      } else if (line.startsWith("#files=")) {
-        val parts = line.stripPrefix("#files=").split('|')
-        require(parts.length == 2, s"malformed files line: $line")
-        fileBuf += parts(0) -> parts(1).toLong
-        None
-      } else if (line.startsWith("#stat=")) {
-        val parts = line.stripPrefix("#stat=").split('|')
-        require(parts.length == 4, s"malformed stat line: $line")
-        statBuf += ((parts(0), dec(parts(1)),
-          parts(2).toLong, parts(3).toLong))
-        None
-      } else if (line.startsWith("#meta=")) {
-        // enc() never emits '|' (percent-encoded), so split is unambiguous
-        val parts = line.stripPrefix("#meta=").split('|')
-        require(parts.length == 2, s"malformed meta line: $line")
-        metaBuf += dec(parts(0)) -> dec(parts(1))
-        None
-      } else {
-        val eq = line.lastIndexOf('=')
-        require(eq > 0, s"malformed manifest line: $line")
-        Some(line.substring(0, eq) -> line.substring(eq + 1).toLong)
-      }
-    }.toMap
-    val stats = statBuf.result().groupBy(_._1).map { case (v, rows) =>
-      v -> rows.map(r => r._2 -> (r._3, r._4)).toMap
-    }
-    (Commit(pcols, gens, minGen, stats, metaBuf.result(), sizeBuf.result(),
-      rowBuf.result(), fileBuf.result()), shardBuf.result())
-  }
+  private def diffShard(prev: Commit, next: Commit): ShardData =
+    ShardData(next.cells.filter { case (k, c) => !prev.cells.get(k).contains(c) },
+      prev.cells.keySet -- next.cells.keySet)
 
   // --------------------------------------------------------- publish
 
@@ -918,50 +793,36 @@ object GenTable {
     // the previous state committed and one unreferenced file in
     // `_manifests/` (vacuum's class).
     val curShards = curParsed.map(_._2).getOrElse(Nil)
-    // O(1) cell bound: the key union is at least the largest of the five
-    // maps, which is all the threshold comparison needs (in practice the
-    // maps share their key set — gens is the universe)
-    val cellBound = Seq(commit.gens.size, commit.stats.size,
-      commit.sizes.size, commit.rows.size, commit.files.size).max
     val bytes =
-      if (curShards.isEmpty && cellBound < shardCellThreshold) render(commit)
+      if (curShards.isEmpty && commit.cells.size < shardCellThreshold)
+        renderHead(commit)
       else {
         val prev = curBody.map(resolveManifest(f, root, _)).getOrElse(
-          Commit(commit.partitionCols, Map.empty))
+          Commit(commit.partitionCols))
         val mDir = new HPath(root, ManifestsDirName)
         f.mkdirs(mDir)
-        def writeShardFile(d: ShardData): String = {
+        def writeShard(d: ShardData): ShardRef = {
           val name = f"ms_${commit.tableGen}%020d_" +
             s"${UUID.randomUUID().toString.take(8)}.gz"
           writeBytes(f, new HPath(mDir, name), gzip(renderShard(d)))
-          name
+          ShardRef(name, d.cells.size, d.drops.size)
         }
         val delta = diffShard(prev, commit)
         val chain: Seq[ShardRef] =
-          if (delta.cellKeys.isEmpty && delta.drops.isEmpty) {
-            if (curShards.isEmpty && commit.gens.nonEmpty) {
-              // mono→sharded transition via a CELL-IDENTICAL commit (a
-              // meta-only marker publish, or a crash-retried restore to
-              // the same state) on a table at/past the threshold: the
-              // delta vs the monolithic predecessor is empty, but an
-              // empty chain would render a sharded head with no cells —
-              // the table would read as empty (and a CDC diff would emit
-              // mass deletes). Fold the full state into the transition's
-              // base shard instead.
-              val base = fullShard(commit)
-              Seq(ShardRef(writeShardFile(base), base.cellKeys.size, 0L))
-            } else
-              curShards // meta-only commit: the chain carries forward as-is
-          } else if (curShards.isEmpty || curShards.size >= shardMaxChain) {
+          if (delta.cells.isEmpty && delta.drops.isEmpty && curShards.nonEmpty)
+            curShards // meta-only commit: the chain carries forward as-is
+          else if (curShards.isEmpty || curShards.size >= shardMaxChain)
             // first sharded commit, or the chain is full: fold everything
             // into ONE base shard (amortized O(cells) every maxChain
-            // commits; every other commit is O(churn))
-            val base = fullShard(commit)
-            Seq(ShardRef(writeShardFile(base), base.cellKeys.size, 0L))
-          } else
-            curShards :+ ShardRef(writeShardFile(delta),
-              delta.cellKeys.size, delta.drops.size)
-        renderShardedHead(commit, chain)
+            // commits; every other commit is O(churn)). The first sharded
+            // commit may be CELL-IDENTICAL to its monolithic predecessor (a
+            // meta-only marker publish, or a crash-retried restore, on a
+            // table at/past the threshold): its delta is empty, but an empty
+            // chain would read as an empty table (and a CDC diff would emit
+            // mass deletes), so it too gets the full base shard.
+            Seq(writeShard(ShardData(commit.cells, Set.empty)))
+          else curShards :+ writeShard(delta)
+        renderHead(commit, chain)
       }
     swapIn(f, root, commitP, bytes) // the commit point
     swapIn(f, root, new HPath(archiveDir, f"ct_${commit.tableGen}%020d"),
@@ -1010,8 +871,7 @@ object GenTable {
   def tableStats(dir: String): Option[TableStats] =
     readCommit(dir).map { c =>
       TableStats(c.tableGen, c.gens.size, c.totalBytes, c.totalRows,
-        c.rows.view.filterKeys(c.gens.contains).toMap
-          .map { case (k, n) => partVals(k).mkString(",") -> n },
+        c.rows.map { case (k, n) => partVals(k).mkString(",") -> n },
         c.totalFiles)
     }
 
@@ -1251,17 +1111,6 @@ object GenTable {
   def readIndexed(spark: SparkSession, dir: String): Option[DataFrame] =
     readCommit(dir).flatMap(indexedFrame(spark, dir, _))
 
-  /** [[readIndexed]] pinned to archived commit `commitId` — the
-    * Catalyst-integrated time-travel read behind SQL
-    * `FOR VERSION AS OF` ([[GenTableCatalog]]) and the DataSource
-    * `versionAsOf` option: same manifest-driven pruning, frozen at the
-    * archived state.
-    */
-  def readIndexedAt(spark: SparkSession, dir: String,
-      commitId: Long): Option[DataFrame] =
-    commitAt(dir, commitId)
-      .flatMap(indexedFrame(spark, dir, _, timeTravel = true))
-
   /** A commit is indexable when it has data OR a recorded schema (a
     * meta-only commit — `CREATE TABLE` before the first insert, an empty
     * replace — reads as a schema-correct EMPTY frame, which is what SQL
@@ -1346,10 +1195,10 @@ object GenTable {
   def stage(rows: DataFrame, dir: String, partitionCol: PartitionCols,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomExpectedItems: Long = 50000L): Commit = {
-    val prev = readCommit(dir).getOrElse(Commit(partitionCol.cols, Map.empty))
+    val prev = readCommit(dir).getOrElse(Commit(partitionCol.cols))
     val st = stagePinned(rows, dir, partitionCol, prev, statsCols, bloomCols,
       bloomExpectedItems)
-    prev.fold(st.sizes.keys, st)
+    prev.fold(st.cells.keys, st)
   }
 
   /** Guard for every stale-orphan delete: removing a `gen=N` directory is
@@ -1424,8 +1273,9 @@ object GenTable {
     *  1. guard and sweep orphan `gen=N` directories of the `declared`
     *     partitions ([[requireUncommitted]]), N = `base.tableGen + 1`;
     *  2. write `rows` under generation N, spread one task per declared
-    *     directory — or, with `compactTo = (files, maxRecordsPerFile)`,
-    *     in compaction layout — sorted by `clusterBy` within each task;
+    *     directory (always shuffled when compacting: `compactTo` caps
+    *     each file at that many rows), sorted by `clusterBy` within each
+    *     task;
     *  3. in that same write job, observe the partitions that landed
     *     (`collect_set`: a retried or speculated task re-adds the same
     *     keys) and check them against `declared`: equal when `exact`,
@@ -1447,7 +1297,7 @@ object GenTable {
       base: Commit, declared: Set[String], exact: Boolean,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomExpectedItems: Long = 50000L,
-      compactTo: Option[(Int, Long)] = None,
+      compactTo: Option[Long] = None,
       clusterBy: Seq[String] = Nil): Staged = {
     val (f, root) = fsRoot(dir)
     val schema = rows.schema
@@ -1473,12 +1323,12 @@ object GenTable {
       // opening 31 parquet writers). One hash slot per declared dir: each
       // dir's rows land in one task (one file per dir per batch), and
       // write parallelism follows the batch's dir count at any scale.
-      val slots = compactTo.fold(declared.size)(_._1)
+      // A compaction always shuffles, so each dir's rows meet in one task
+      // whatever files they were read from.
       val withGen = rows.withColumn("gen", lit(gen))
       val laid =
-        if (compactTo.isDefined && clusterBy.isEmpty) withGen.repartition(slots)
-        else if (slots > 1 || clusterBy.nonEmpty)
-          withGen.repartition(slots, pcols.map(col): _*)
+        if (declared.size > 1 || clusterBy.nonEmpty || compactTo.isDefined)
+          withGen.repartition(declared.size, pcols.map(col): _*)
         else withGen
       val obs = org.apache.spark.sql.Observation()
       val out = laid.observe(obs, collect_set(struct(
@@ -1487,7 +1337,7 @@ object GenTable {
       // (partition columns, gen) already holds and it does not re-sort
       val w = (if (clusterBy.isEmpty) out else out.sortWithinPartitions(
         (pcols ++ Seq("gen") ++ clusterBy).map(col): _*)).write
-      compactTo.fold(w)(t => w.option("maxRecordsPerFile", t._2))
+      compactTo.fold(w)(w.option("maxRecordsPerFile", _))
         .mode(SaveMode.Append).partitionBy(pcols :+ "gen": _*).parquet(dir)
       val parts = obs.get("_parts")
         .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
@@ -1549,18 +1399,15 @@ object GenTable {
             }.toMap
           }.toMap
       }
-    Staged(gen, metas.map { case (k, m) => k -> m._1 },
-      metas.map { case (k, m) => k -> m._2 },
-      metas.map { case (k, m) => k -> m._3 },
-      metas.map { case (k, m) =>
-        k -> (m._4 ++ aggBands.getOrElse(k, Map.empty)) }.filter(_._2.nonEmpty),
+    Staged(gen, metas.map { case (k, m) =>
+        k -> m.copy(stats = m.stats ++ aggBands.getOrElse(k, Map.empty)) },
       Map(SchemaMetaKey -> schema.json) ++ (if (bloomTrack.isEmpty) Map.empty
         else Map(BloomColsKey -> bloomTrack.mkString(","),
           BloomItemsKey -> items.toString)))
   }
 
-  /** Bytes AND exact row count of the data files under one generation
-    * directory — recorded in the manifest at commit time (bounded by
+  /** The [[Cell]] of one generation directory: bytes, exact row count and
+    * data files of what landed there — recorded in the manifest at commit time (bounded by
     * partitions-per-batch, and the listing covers only directories this
     * writer just wrote). Bytes let readers cost a full-table scan from
     * the ONE manifest object instead of listing every partition
@@ -1582,10 +1429,9 @@ object GenTable {
     * prove, and the metadata-only aggregate falls back to the scan.
     */
   private def genMeta(f: FileSystem, root: HPath, pcols: Seq[String],
-      k: String, g: Long, track: Seq[(String, DataType)] = Nil)
-      : (Long, Long, Long, Map[String, (Long, Long)]) = {
+      k: String, g: Long, track: Seq[(String, DataType)] = Nil): Cell = {
     val d = genDir(root, pcols, k, g)
-    if (!f.exists(d)) (0L, 0L, 0L, Map.empty)
+    if (!f.exists(d)) Cell(g, Map.empty, Some(0L), Some(0L), Some(0L))
     else {
       val files = f.listStatus(d).filter { s =>
         // data files only — same visibility rule as the scan (a local
@@ -1618,7 +1464,8 @@ object GenTable {
           (math.min(a._1, b._1), math.max(a._2, b._2))
         }.map(c -> _)
       }.toMap
-      (files.map(_.getLen).sum, rowCount, files.length.toLong, stats)
+      Cell(g, stats, Some(files.map(_.getLen).sum), Some(rowCount),
+        Some(files.length.toLong))
     }
   }
 
@@ -1938,7 +1785,7 @@ object GenTable {
     // retry — same-partition writers must be serialized externally
     // (per-partition single-writer), and overlapping conflicts keep the
     // fail-loud contract.
-    var prev = readCommit(dir).getOrElse(Commit(pcols, Map.empty))
+    var prev = readCommit(dir).getOrElse(Commit(pcols))
     var retriesLeft = 3
     var committed = false
     while (!committed) {
@@ -2101,7 +1948,7 @@ object GenTable {
     val frozen = rows.localCheckpoint(true)
     try {
       val prevC = readCommit(dir)
-        .getOrElse(Commit(partitionCol.cols, Map.empty))
+        .getOrElse(Commit(partitionCol.cols))
       val staged = stagePinned(frozen, dir, partitionCol, prevC,
         statsCols, bloomCols, 50000L,
         touchedOpt = Some(touchedKeys(frozen, partitionCol.cols)))
@@ -2109,7 +1956,7 @@ object GenTable {
       // marker) under the staged generation's fresh commit id. Replace
       // semantics: the schema is exactly `rows`' (no union with history —
       // every surviving partition was rewritten from `rows`).
-      Commit(partitionCol.cols, Map.empty).fold(Nil, staged,
+      Commit(partitionCol.cols).fold(Nil, staged,
         Map(SchemaMetaKey -> frozen.schema.json))
     } finally frozen.unpersist()
   }
@@ -2267,7 +2114,7 @@ object GenTable {
     partitionCol.cols.foreach(p => require(schema.fieldNames.contains(p),
       s"partition column '$p' is not in the declared schema " +
         schema.fieldNames.mkString("(", ", ", ")")))
-    publish(dir, Commit(partitionCol.cols, Map.empty, minGen = 1L,
+    publish(dir, Commit(partitionCol.cols, minGen = 1L,
       meta = Map(SchemaMetaKey -> schema.json) ++ extraMeta ++
         opMeta("create")))
   }
@@ -2285,7 +2132,7 @@ object GenTable {
     partitionCol.cols.foreach(p => require(schema.fieldNames.contains(p),
       s"partition column '$p' is not in the declared schema " +
         schema.fieldNames.mkString("(", ", ", ")")))
-    publish(dir, Commit(partitionCol.cols, Map.empty,
+    publish(dir, Commit(partitionCol.cols,
       minGen = prev.tableGen + 1,
       meta = Map(SchemaMetaKey -> schema.json) ++ extraMeta ++
         opMeta("replace")))
@@ -2394,8 +2241,9 @@ object GenTable {
   }
 
   /** Atomic compaction: rewrite every committed partition's rows into
-    * ~`targetRecordsPerFile`-row files at the next generation, then one
-    * manifest swap. Readers see the old file set or the new one, never a
+    * files of at most `targetRecordsPerFile` rows at the next generation
+    * (`ceil(rows / target)` files per partition), then one manifest
+    * swap. Readers see the old file set or the new one, never a
     * mix — the transactional replacement for compact-by-overwrite.
     * Returns (filesBefore, filesAfter) over committed generations.
     *
@@ -2406,20 +2254,18 @@ object GenTable {
     * footer min/max check, the file-level complement of the manifest's
     * partition-level [[readRange]] skip (OPTIMIZE-style clustering; for
     * multi-dimensional locality pass one interleaved key, e.g.
-    * `functions.ZOrder`, instead of several columns). Clustered rewrites
-    * shuffle by the table partition column (not round-robin), so one
-    * task writes each partition's sorted run; skewed partitions bound
-    * task size by their own row count — same bound as the upsert path.
+    * `functions.ZOrder`, instead of several columns). Every rewrite
+    * shuffles by the table partition columns, so one task writes each
+    * partition's run; a skewed partition bounds its task by its own row
+    * count — same bound as the upsert path.
     */
   def compact(spark: SparkSession, dir: String, targetRecordsPerFile: Long,
       clusterBy: Seq[String] = Nil): (Long, Long) = {
     require(targetRecordsPerFile > 0, "targetRecordsPerFile must be positive")
     val c = readCommit(dir).getOrElse(
       throw new IllegalStateException(s"no committed generation under $dir"))
-    val df = read(spark, dir).get
-    // row and file counts come from the manifest's #rows/#files lines; a
-    // count job and a listing serve only manifests that predate them
-    val n = c.totalRows.getOrElse(df.count())
+    // the file count comes from the manifest's #files lines; a listing
+    // serves only manifests that predate them
     val before = c.totalFiles.getOrElse {
       val (fsys, root) = fsRoot(dir)
       c.gens.map { case (k, g) =>
@@ -2427,14 +2273,13 @@ object GenTable {
           .count(_.getName.endsWith(".parquet")).toLong
       }.sum
     }
-    val files = math.max(1L, (n + targetRecordsPerFile - 1) / targetRecordsPerFile)
     // contents are unchanged by compaction; every manifest field (bands
     // and bloom sidecars included) is re-read from the rewritten files
-    val staged = stageGen(df, dir, c.partitionCols, c, c.gens.keySet,
-      exact = true, compactTo = Some((files.toInt, targetRecordsPerFile)),
+    val staged = stageGen(read(spark, dir).get, dir, c.partitionCols, c,
+      c.gens.keySet, exact = true, compactTo = Some(targetRecordsPerFile),
       clusterBy = clusterBy)
     publish(dir, c.fold(c.gens.keys, staged, opMeta("compact")))
-    (before, staged.files.values.sum)
+    (before, staged.cells.values.flatMap(_.files).sum)
   }
 
   /** PARTITION EVOLUTION: atomically re-key the table onto a different
@@ -2472,7 +2317,7 @@ object GenTable {
     try {
       val staged = stageGen(frozen, dir, pcols, c,
         touchedKeys(frozen, pcols).toSet, exact = true, clusterBy = clusterBy)
-      publish(dir, Commit(pcols, Map.empty, meta = c.meta)
+      publish(dir, Commit(pcols, meta = c.meta)
         .fold(Nil, staged, opMeta("repartition")))
       staged.gen
     } finally frozen.unpersist()
@@ -2659,7 +2504,7 @@ object GenTable {
         // read above, so an interleaved bootstrap fails loud at publish
         // instead of being built on silently.
         if (ups.isEmpty) return
-        val base = head.getOrElse(Commit(pcols, Map.empty))
+        val base = head.getOrElse(Commit(pcols))
         val staged = stagePinned(ups, dir, partitionCol, base, Nil, Nil, 50000L)
         publish(dir, base.fold(Nil, staged, opMeta("cdc_apply") ++ extraMeta))
       case Some(c) =>
@@ -3003,7 +2848,7 @@ object GenTable {
   private def changeImages(spark: SparkSession, dir: String, fromId: Long,
       toId: Long, keyCol: String): DataFrame = {
     def resolve(id: Long): Commit = {
-      if (id == 0L) return Commit(Nil, Map.empty)
+      if (id == 0L) return Commit(Nil)
       commitAt(dir, id).getOrElse(
         throw new IllegalArgumentException(
           s"no archived commit $id under $dir (vacuumed?)"))

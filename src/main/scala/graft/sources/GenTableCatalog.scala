@@ -118,7 +118,7 @@ final class GenTableCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** SQL time travel on catalog names: `FOR VERSION AS OF <commit id>`
-    * pins the archived commit ([[GenTable.readIndexedAt]]'s listing) —
+    * pins the archived commit ([[GenTable.frameOf]]'s listing) —
     * the name-based twin of the DataSource `versionAsOf` option.
     */
   override def loadTable(ident: Identifier, version: String): Table = {

@@ -76,7 +76,7 @@ final class GenTableFileIndex(
   private[graft] def tableDir: String = dir
 
   /** True when this index was created by an EXPLICIT time-travel read
-    * (`versionAsOf`/`timestampAsOf`/[[GenTable.readIndexedAt]]). The SQL
+    * (`versionAsOf`/`timestampAsOf`, SQL `FOR VERSION AS OF`). The SQL
     * DML rewrite refuses such targets: the user addressed an archived
     * snapshot, and routing the statement to the table head would
     * silently mutate something else than what they named. (A registered
@@ -270,18 +270,24 @@ object GenTableFileIndex {
     */
   private[sources] def frame(spark: SparkSession, dir: String,
       commit: GenTable.Commit, tableSchema: StructType,
-      timeTravel: Boolean = false): DataFrame = {
+      timeTravel: Boolean): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .baseRelationToDataFrame(
+        relation(spark, dir, commit, tableSchema, timeTravel))
+
+  /** The relation behind [[frame]] and `format("gentable")` reads. */
+  private[sources] def relation(spark: SparkSession, dir: String,
+      commit: GenTable.Commit, tableSchema: StructType,
+      timeTravel: Boolean): HadoopFsRelation = {
     val index = new GenTableFileIndex(spark, dir, commit, tableSchema,
       timeTravel)
-    val relation = HadoopFsRelation(
+    HadoopFsRelation(
       location = index,
       partitionSchema = index.partitionSchema,
       dataSchema = index.dataSchema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat(),
       options = Map.empty)(spark)
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .baseRelationToDataFrame(relation)
   }
 }
 
@@ -594,14 +600,7 @@ final class GenTableSourceProvider extends RelationProvider
                 s"(pre-stamp commits cannot be addressed by time)")))
       }
     }
-    val index = new GenTableFileIndex(spark, dir, commit, schema, travel)
-    HadoopFsRelation(
-      location = index,
-      partitionSchema = index.partitionSchema,
-      dataSchema = index.dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
-      options = Map.empty)(spark)
+    GenTableFileIndex.relation(spark, dir, commit, schema, travel)
   }
 }
 

@@ -442,13 +442,18 @@ class GenTableSpec extends SparkSpec {
 
   test("compact(clusterBy): range scans prune row groups of non-covering files") {
     val dir = tmp()
-    // 4000 keys in one table partition; committed file order is the
-    // window-merge shuffle order, i.e. unclustered
+    // 4000 keys in one table partition, written in hash order (independent
+    // of user_id) as 500-row files: every file spans the id range
     val df = spark.range(4000).select(
         col("id").as("user_id"), lit(0L).as("ts"),
         col("id").cast("double").as("value"))
       .withColumn("bucket", lit(0).cast("int"))
-    GenTable.upsertBatch(df, dir, "user_id", Seq("ts"), "bucket")
+      .orderBy(xxhash64(col("user_id")))
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "500")
+    try GenTable.replaceAll(df, dir, "bucket")
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
 
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -464,7 +469,6 @@ class GenTableSpec extends SparkSpec {
     def rangeQ = GenTable.read(spark, dir).get
       .filter(col("user_id").between(1000, 1199))
 
-    GenTable.compact(spark, dir, 500L) // every 500-row file spans the id range
     assert(rangeQ.count() === 200L)
     val unclustered = scanned(rangeQ)
     GenTable.compact(spark, dir, 500L, clusterBy = Seq("user_id"))

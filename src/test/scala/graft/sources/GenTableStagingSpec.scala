@@ -30,6 +30,18 @@ class GenTableStagingSpec extends SparkSpec {
       .withColumn("x", col("k") * 1.5 - 20.25 + col("ver"))
       .withColumn("n", col("k") * 100 + col("ver"))
 
+  /** Data files per committed partition, by listing its generation dir. */
+  private def listedFiles(dir: String, c: GenTable.Commit): Map[String, Long] =
+    c.gens.map { case (k, g) =>
+      val s = Files.list(Paths.get(dir,
+        GenTable.partRelDir(c.partitionCols, k), s"gen=$g"))
+      try k -> s.filter { p =>
+        val n = p.getFileName.toString
+        !n.startsWith("_") && !n.startsWith(".")
+      }.count()
+      finally s.close()
+    }
+
   /** The invariants every commit must leave behind, checked against the
     * table as read back (independent of how the commit computed them).
     */
@@ -49,16 +61,7 @@ class GenTableStagingSpec extends SparkSpec {
     assert(c.stats === agg.map { case (k, r) => k -> Stats.map(cn =>
       cn -> (r.getAs[Long](s"mn_$cn"), r.getAs[Long](s"mx_$cn"))).toMap },
       s"$op: #stat bands")
-    val listed = c.gens.map { case (k, g) =>
-      val s = Files.list(
-        Paths.get(dir, s"$pcol=${GenTable.partVals(k).head}", s"gen=$g"))
-      try k -> s.filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }.count()
-      finally s.close()
-    }
-    assert(c.files === listed, s"$op: #files")
+    assert(c.files === listedFiles(dir, c), s"$op: #files")
     val (f, root) = GenTable.fsRoot(dir)
     c.gens.foreach { case (k, g) =>
       assert(f.exists(
@@ -153,5 +156,36 @@ class GenTableStagingSpec extends SparkSpec {
     val after = GenTable.readCommit(dir).get
     assert(after === head)
     assert(content === before)
+  }
+
+  test("compaction writes ceil(rows / target) files per partition") {
+    val dir = tempDir("graft_staging_")
+    // 12, 4 and 11 rows in buckets 0, 1 and 2
+    val keys = (0L until 12L).map(_ * 3) ++ (0L until 4L).map(_ * 3 + 1) ++
+      (0L until 11L).map(_ * 3 + 2)
+    GenTable.upsertBatch(keys.toDF("k")
+        .withColumn("bucket", pmod(col("k"), lit(3)).cast("int"))
+        .withColumn("ver", lit(1L)),
+      dir, "k", Seq("ver"), "bucket")
+    GenTable.compact(spark, dir, 3L)
+    val c = GenTable.readCommit(dir).get
+    assert(c.rows === Map("0" -> 12L, "1" -> 4L, "2" -> 11L))
+    assert(c.files === Map("0" -> 4L, "1" -> 2L, "2" -> 4L))
+    assert(c.files === listedFiles(dir, c))
+
+    // one partition of 60 rows in 12 files merges into 2
+    val one = tempDir("graft_staging_")
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "5")
+    try GenTable.upsertBatch((1L to 60L).toDF("k")
+        .withColumn("bucket", lit(0)).withColumn("ver", lit(1L)),
+      one, "k", Seq("ver"), "bucket")
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(GenTable.compact(spark, one, 30L) === ((12L, 2L)))
+    val c1 = GenTable.readCommit(one).get
+    assert(c1.files === Map("0" -> 2L))
+    assert(c1.files === listedFiles(one, c1))
+    assert(GenTable.read(spark, one).get.count() === 60L)
   }
 }
