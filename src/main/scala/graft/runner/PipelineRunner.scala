@@ -1,7 +1,11 @@
 package graft.runner
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,10 +31,12 @@ object PipelineRunner {
   type Stage = (String, (SparkSession, EngineConfig) => DataFrame)
 
   /** Runs stages in order; each stage's result is written to
-    * `outputDir/<stage>` as parquet. Returns per-stage results and writes
-    * `outputDir/manifest.json`. A failed stage stops the run (the remaining
-    * stages are reported as "skipped"), mirroring the state machine's
-    * fail-fast `.sync` task.
+    * `outputDir/<stage>` as parquet. A stage's `rows` are counted inside
+    * its write job (an `Observation` read after the write returns), so
+    * the runner adds no job of its own to a stage. Returns per-stage
+    * results and writes `outputDir/manifest.json`. A failed stage stops
+    * the run (the remaining stages are reported as "skipped"), mirroring
+    * the state machine's fail-fast `.sync` task.
     */
   def run(spark: SparkSession, config: EngineConfig, stages: Seq[Stage]): Seq[StageResult] = {
     Files.createDirectories(Paths.get(config.outputDir))
@@ -40,9 +46,11 @@ object PipelineRunner {
       else {
         val t0 = System.nanoTime()
         try {
-          val out = fn(spark, config)
-          out.write.mode("overwrite").parquet(s"${config.outputDir}/$name")
-          val rows = spark.read.parquet(s"${config.outputDir}/$name").count()
+          val obs = Observation()
+          fn(spark, config).observe(obs, count(lit(1)).as("rows"))
+            .write.mode("overwrite").parquet(s"${config.outputDir}/$name")
+          // only reached once the write succeeded, so the metric is posted
+          val rows = obs.get("rows").asInstanceOf[Long]
           StageResult(name, rows, (System.nanoTime() - t0) / 1000000, "ok")
         } catch {
           case e: Exception =>
@@ -64,6 +72,30 @@ object PipelineRunner {
     Files.writeString(Paths.get(s"${config.outputDir}/manifest.json"),
       s"""{"env":"${esc(config.env)}","stages":$manifest}""")
     results
+  }
+
+  /** A stage's persisted output, read with the schema Spark recorded in
+    * the footer of the stage's first data file (the
+    * `org.apache.spark.sql.parquet.row.metadata` string that schema
+    * inference would read), so opening it submits no Spark job. Every
+    * runner-written stage directory holds at least one data file: Spark
+    * writes an empty one when a stage produced no rows.
+    */
+  def output(spark: SparkSession, cfg: EngineConfig, stage: String): DataFrame = {
+    val dir = new Path(s"${cfg.outputDir}/$stage")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val data = dir.getFileSystem(conf).listStatus(dir).filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+    require(data.nonEmpty, s"stage output $dir holds no data file")
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(data.minBy(_.getPath.getName), conf))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get(ParquetReadSupport.SPARK_METADATA_KEY) finally reader.close()
+    require(json != null, s"stage output $dir has no Spark schema in its footer")
+    spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
+      .parquet(dir.toString)
   }
 
   // -- E1: environment promotion ----------------------------------------------
@@ -123,10 +155,12 @@ object PipelineRunner {
     * (SURVEY.md §2.11) composed end to end: ingest → PII scrub → quality
     * signals (score, Gopher rule verdicts, repetition) → language ID →
     * exact dedup → near-dup dedup → quality gate → clean corpus +
-    * per-language stats. Each stage reads the previous stage's parquet, so
-    * any stage can be re-run or inspected in isolation (the same property
-    * the reference's promote-per-stage CI/CD gives templates). PII is
-    * scrubbed FIRST so no downstream stage ever persists raw identifiers.
+    * per-language stats. Each stage reads its upstream stages' parquet
+    * through [[output]], so any stage can be re-run or inspected in
+    * isolation (the same property the reference's promote-per-stage CI/CD
+    * gives templates), and a stage's row count comes from its own write
+    * (see [[run]]). PII is scrubbed FIRST so no downstream stage ever
+    * persists raw identifiers.
     */
   def corpusPrepStages(nearDupThreshold: Double = 0.9,
       minQuality: Double = 0.3): Seq[Stage] = {
@@ -136,7 +170,7 @@ object PipelineRunner {
         graft.sources.Tables(spark, cfg.inputDir).documents
       },
       "pii_scrub" -> { (spark, cfg) =>
-        val raw = spark.read.parquet(s"${cfg.outputDir}/ingest_documents")
+        val raw = output(spark, cfg, "ingest_documents")
         raw.withColumn("n_redactions",
             graft.functions.Redact.emailCount(col("text")) +
               graft.functions.Redact.phoneCount(col("text")) +
@@ -147,7 +181,7 @@ object PipelineRunner {
           .withColumn("n_chars", length(col("text")).cast("long"))
       },
       "annotate_quality" -> { (spark, cfg) =>
-        val scrubbed = spark.read.parquet(s"${cfg.outputDir}/pii_scrub")
+        val scrubbed = output(spark, cfg, "pii_scrub")
           .withColumn("n_tokens", tokenCount(col("text")))
           .withColumn("quality", qualityScore(col("text"), col("n_chars")))
           .withColumn("lang_guess", languageId(col("text")))
@@ -162,17 +196,17 @@ object PipelineRunner {
       },
       "exact_dedup" -> { (spark, cfg) =>
         graft.operators.Dedup.exactByText(
-          spark.read.parquet(s"${cfg.outputDir}/annotate_quality"), "text", "doc_id")
+          output(spark, cfg, "annotate_quality"), "text", "doc_id")
       },
       "near_dedup" -> { (spark, cfg) =>
         graft.operators.Dedup.dedupNearDups(
-          spark.read.parquet(s"${cfg.outputDir}/exact_dedup"), "text", "doc_id",
+          output(spark, cfg, "exact_dedup"), "text", "doc_id",
           threshold = nearDupThreshold)
       },
       // gate on the composite score plus the repetition rule; the Gopher
       // verdict columns ride along for downstream mixture decisions
       "quality_gate" -> { (spark, cfg) =>
-        spark.read.parquet(s"${cfg.outputDir}/near_dedup")
+        output(spark, cfg, "near_dedup")
           .filter(col("quality") >= minQuality &&
             col("dup_trigram_frac") <= 0.5)
       },
@@ -183,7 +217,7 @@ object PipelineRunner {
       // input downstream (like the Gopher verdicts), and the llr column is
       // the deterministic analogue of GPT-3's stochastic keep probability
       "classifier_annotate" -> { (spark, cfg) =>
-        val gated = spark.read.parquet(s"${cfg.outputDir}/quality_gate")
+        val gated = output(spark, cfg, "quality_gate")
         val m = graft.operators.QualityClassifier.trainNaiveBayes(
           gated, "text", col("source").isin("src0", "src1", "src2", "src3", "src4"))
         gated.join(
@@ -199,7 +233,7 @@ object PipelineRunner {
       // model represents what survived the cheap rules, so the tail is
       // "unlike the acceptable corpus", not "unlike the web"
       "lm_gate" -> { (spark, cfg) =>
-        val gated = spark.read.parquet(s"${cfg.outputDir}/classifier_annotate")
+        val gated = output(spark, cfg, "classifier_annotate")
         val (lm, oov) = graft.operators.LanguageModel.unigramLm(gated, "text")
         gated.join(
           graft.operators.LanguageModel.scoreNll(gated, "text", "doc_id", lm, oov)
@@ -211,7 +245,7 @@ object PipelineRunner {
       // the gated survivors, every doc segmented map-only — the subword
       // stream a trainer actually consumes
       "bpe_tokenize" -> { (spark, cfg) =>
-        val gated = spark.read.parquet(s"${cfg.outputDir}/lm_gate")
+        val gated = output(spark, cfg, "lm_gate")
         val merges = graft.operators.Bpe.learnMerges(gated, "text", numMerges = 100)
         graft.operators.Bpe.segment(gated, "text", "doc_id", merges)
       },
@@ -222,7 +256,7 @@ object PipelineRunner {
       // SEPARATE from bpe_tokenize: the BPE normalizer strips '_', so the
       // two tokenizations are alternative terminal outputs, not a chain
       "phrase_corpus" -> { (spark, cfg) =>
-        val gated = spark.read.parquet(s"${cfg.outputDir}/lm_gate")
+        val gated = output(spark, cfg, "lm_gate")
         val phrases = graft.operators.Phrases.detect(gated, "text", threshold = 1)
         graft.operators.Phrases.rewrite(gated, "text", "doc_id", phrases)
       },
@@ -232,7 +266,7 @@ object PipelineRunner {
       // upstream gates change membership
       "split_assign" -> { (spark, cfg) =>
         graft.operators.Corpus.groupHoldoutSplit(
-          spark.read.parquet(s"${cfg.outputDir}/lm_gate")
+          output(spark, cfg, "lm_gate")
             .withColumn("fp", md5(graft.functions.TextFunctions
               .normalizeText(col("text")).cast("binary"))),
           "doc_id", "fp")
@@ -241,12 +275,12 @@ object PipelineRunner {
       // corpus, and fixed-token-budget shard assignments per language
       "chunk_documents" -> { (spark, cfg) =>
         graft.operators.Corpus.chunkDocuments(
-          spark.read.parquet(s"${cfg.outputDir}/lm_gate"),
+          output(spark, cfg, "lm_gate"),
           "doc_id", "text", chunkTokens = 512, overlapTokens = 64)
       },
       "pack_shards" -> { (spark, cfg) =>
         graft.operators.Corpus.packSequences(
-          spark.read.parquet(s"${cfg.outputDir}/lm_gate")
+          output(spark, cfg, "lm_gate")
             .select(col("doc_id"), col("lang_guess"), col("text")),
           "lang_guess", "doc_id", "text", budgetTokens = 65536L)
       },
@@ -255,7 +289,7 @@ object PipelineRunner {
       // loader reads stages in order, easy-first)
       "curriculum_order" -> { (spark, cfg) =>
         graft.operators.Corpus.curriculumStages(
-          spark.read.parquet(s"${cfg.outputDir}/lm_gate")
+          output(spark, cfg, "lm_gate")
             .select(col("doc_id"), col("n_tokens")),
           "doc_id", "n_tokens", nStages = 4)
       },
@@ -263,15 +297,15 @@ object PipelineRunner {
       // sets stay comparable across pipeline re-runs
       "holdout_sample" -> { (spark, cfg) =>
         graft.operators.Corpus.stratifiedSample(
-          spark.read.parquet(s"${cfg.outputDir}/lm_gate"),
+          output(spark, cfg, "lm_gate"),
           "lang_guess", "doc_id", perStratum = 25)
       },
       // decontaminate the TRAINING corpus against the held-out sample:
       // any doc sharing a 13-gram with the eval slice leaves training
       // (the eval docs themselves leave too, via the id anti-join)
       "train_decontaminated" -> { (spark, cfg) =>
-        val gated = spark.read.parquet(s"${cfg.outputDir}/lm_gate")
-        val holdout = spark.read.parquet(s"${cfg.outputDir}/holdout_sample")
+        val gated = output(spark, cfg, "lm_gate")
+        val holdout = output(spark, cfg, "holdout_sample")
         graft.operators.Corpus.decontaminate(
           gated.join(holdout.select(col("doc_id")), Seq("doc_id"), "left_anti"),
           holdout, "doc_id", "text", n = 13)
@@ -280,16 +314,16 @@ object PipelineRunner {
       // repeated queries then probe them instead of rescanning text)
       "term_index" -> { (spark, cfg) =>
         graft.operators.TextIndex.postings(
-          spark.read.parquet(s"${cfg.outputDir}/lm_gate"), "doc_id", "text")
+          output(spark, cfg, "lm_gate"), "doc_id", "text")
       },
       // fingerprint store for the NEXT run's incremental dedup
       // (Dedup.incrementalExact probes this instead of rescanning history)
       "fingerprint_store" -> { (spark, cfg) =>
         graft.operators.Dedup.fingerprints(
-          spark.read.parquet(s"${cfg.outputDir}/lm_gate"), "text")
+          output(spark, cfg, "lm_gate"), "text")
       },
       "corpus_stats" -> { (spark, cfg) =>
-        spark.read.parquet(s"${cfg.outputDir}/lm_gate")
+        output(spark, cfg, "lm_gate")
           .groupBy(col("lang_guess"))
           .agg(
             count(lit(1)).as("n_docs"),
@@ -314,17 +348,17 @@ object PipelineRunner {
     // machine on a failed step) if any constraint is violated
     "validate_orders" -> { (spark, cfg) =>
       import graft.operators.Validate
-      val batch = spark.read.parquet(s"${cfg.outputDir}/ingest_orders")
-      // materialize the 3-row report ONCE: the gate collect and the
-      // runner's parquet write must not each re-run the batch aggregate
-      val rep = Validate.report(batch, Seq(
+      val rep = Validate.report(output(spark, cfg, "ingest_orders"), Seq(
         Validate.notNull("o_custkey"),
         Validate.unique("o_orderkey"),
         Validate.inRange("o_totalprice", 0.0, 1e9)))
-        .localCheckpoint(true)
-      val bad = rep.filter(!col("pass")).collect()
+      // collect the 3-row report ONCE: the gate and the runner's write both
+      // use the collected rows, so the batch aggregate runs one time. One
+      // slice writes them to one file, in declaration order
+      val rows = rep.collect()
+      val bad = rows.filterNot(_.getAs[Boolean]("pass"))
       require(bad.isEmpty, s"constraint violations: ${bad.mkString("; ")}")
-      rep
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), rep.schema)
     },
     // crawler step: the column-statistics profile of the ingested batch,
     // persisted alongside the data like a Glue-crawler catalog entry.
@@ -332,17 +366,17 @@ object PipelineRunner {
     // constraint report above gates.
     "profile_orders" -> { (spark, cfg) =>
       graft.operators.Validate.profile(
-        spark.read.parquet(s"${cfg.outputDir}/ingest_orders"),
+        output(spark, cfg, "ingest_orders"),
         Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderdate", "o_orderpriority"))
     },
     "enrich_customers" -> { (spark, cfg) =>
       val t = graft.sources.Tables(spark, cfg.inputDir)
-      spark.read.parquet(s"${cfg.outputDir}/ingest_orders")
+      output(spark, cfg, "ingest_orders")
         .join(t.customer, col("o_custkey") === col("c_custkey"))
     },
     "segment_revenue" -> { (spark, cfg) =>
-      spark.read.parquet(s"${cfg.outputDir}/enrich_customers")
+      output(spark, cfg, "enrich_customers")
         .groupBy(col("c_mktsegment"))
         .agg(sum(col("o_totalprice")).as("revenue"), count(lit(1)).as("n_orders"))
     }

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.GenTable
@@ -21,35 +18,6 @@ class GenTableJobCountSpec extends SparkSpec {
   // written files (the bloom sidecar and the timestamp band together)
   private val Budget = Map("upsert" -> 7, "merge" -> 13, "deleteKeys" -> 8,
     "deleteWhere" -> 6, "compact" -> 4)
-
-  /** The Spark jobs `f` submits, picked out of the listener bus by a job
-    * group. The bus is asynchronous but delivers in order, so once a
-    * marker job submitted after `f` arrives, every job of `f` has.
-    */
-  private def jobsOf(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-jobcount-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-          .orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-end" => drained.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "GenTable job count")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "GenTable job count marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus never drained")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def rowsOf(keys: Seq[Long], ver: Long): DataFrame =
     keys.toDF("k")

@@ -6,11 +6,44 @@ import graft.runner.PipelineRunner.{EngineConfig, StageResult}
 
 class PipelineRunnerSpec extends SparkSpec {
 
+  // Spark jobs per canned pipeline at sf0.001: a stage runs its own jobs
+  // only (its row count rides on its write, its upstream reads take their
+  // schema from a footer). Job counts do not move with machine load, so a
+  // budget is an exact upper bound; lower it when a change removes a job.
+  // With a count re-read per stage, schema-inferring upstream reads and a
+  // checkpointed validation report the same pipelines measured
+  // orders_job=37 and corpus_prep=165.
+  private val JobBudget = Map("orders_job" -> 17, "corpus_prep" -> 89)
+
+  /** Runs `stages` into `cfg` and checks their Spark jobs against the
+    * budget of `pipeline`.
+    */
+  private def runWithin(pipeline: String, cfg: EngineConfig,
+      stages: Seq[PipelineRunner.Stage]): Seq[StageResult] = {
+    var results = Seq.empty[StageResult]
+    val jobs = jobsOf { results = PipelineRunner.run(spark, cfg, stages) }
+    info(s"$pipeline jobs=$jobs")
+    assert(jobs <= JobBudget(pipeline),
+      s"$pipeline: $jobs jobs > budget ${JobBudget(pipeline)}")
+    results
+  }
+
+  /** Every stage's reported rows equal a plain re-read's count, and
+    * `output` reads the stage with the schema inference gives.
+    */
+  private def assertReadsBack(cfg: EngineConfig, results: Seq[StageResult]): Unit =
+    results.foreach { r =>
+      val plain = spark.read.parquet(s"${cfg.outputDir}/${r.stage}")
+      assert(r.rows === plain.count(), r.stage)
+      assert(PipelineRunner.output(spark, cfg, r.stage).schema === plain.schema, r.stage)
+    }
+
   test("ordersJob runs all stages and writes a manifest") {
     val out = tempDir("graft_run")
-    val results = PipelineRunner.run(spark,
-      EngineConfig("dev", sf, out), PipelineRunner.ordersJobStages)
+    val cfg = EngineConfig("dev", sf, out)
+    val results = runWithin("orders_job", cfg, PipelineRunner.ordersJobStages)
     assert(results.map(_.status) === Seq("ok", "ok", "ok", "ok", "ok"))
+    assertReadsBack(cfg, results)
     assert(results.last.rows === 5) // five market segments
     val manifest = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$out/manifest.json"))
     assert(manifest.contains("\"env\":\"dev\"") && manifest.contains("segment_revenue"))
@@ -23,9 +56,10 @@ class PipelineRunnerSpec extends SparkSpec {
 
   test("corpus preparation pipeline runs end to end and shrinks monotonically") {
     val out = tempDir("graft_corpus")
-    val results = PipelineRunner.run(spark,
-      EngineConfig("dev", sf, out), PipelineRunner.corpusPrepStages())
+    val cfg = EngineConfig("dev", sf, out)
+    val results = runWithin("corpus_prep", cfg, PipelineRunner.corpusPrepStages())
     assert(results.map(_.status).forall(_ == "ok"), results.mkString(", "))
+    assertReadsBack(cfg, results)
     val byStage = results.map(r => r.stage -> r.rows).toMap
     assert(byStage("ingest_documents") === 500)
     // scrub and annotate are row-preserving
@@ -144,6 +178,62 @@ class PipelineRunnerSpec extends SparkSpec {
     val results = PipelineRunner.run(spark, EngineConfig("dev", sf, out), stages)
     assert(results.map(_.status).head === "ok")
     assert(results(1).status.startsWith("failed"))
+    assert(results(2) === StageResult("never", 0L, 0L, "skipped"))
+  }
+
+  test("a two-stage pipeline of trivial frames submits one job per stage") {
+    val cfg = EngineConfig("dev", sf, tempDir("graft_run_jobs"))
+    var results = Seq.empty[StageResult]
+    val jobs = jobsOf {
+      results = PipelineRunner.run(spark, cfg, Seq(
+        "numbers" -> ((s, _) => s.range(0, 1000, 1, 4).toDF()),
+        "copy" -> ((s, c) => PipelineRunner.output(s, c, "numbers"))))
+    }
+    assert(results.map(r => (r.rows, r.status)) === Seq((1000L, "ok"), (1000L, "ok")))
+    // with a count re-read per stage and a schema-inferring upstream read
+    // the same pipeline submitted 9
+    assert(jobs === 2)
+  }
+
+  test("an empty stage output counts 0 rows, reads back and feeds the next stage") {
+    val cfg = EngineConfig("dev", sf, tempDir("graft_run_empty"))
+    val results = PipelineRunner.run(spark, cfg, Seq(
+      // empty at run time (the scan's rows all fail the filter) ...
+      "no_regions" -> ((s, c) =>
+        graft.sources.Tables(s, c.inputDir).region.filter(col("r_regionkey") < 0)),
+      // ... and empty at plan time (the optimizer drops the scan)
+      "no_nations" -> ((s, c) =>
+        graft.sources.Tables(s, c.inputDir).nation.filter(lit(false))),
+      "region_count" -> ((s, c) =>
+        PipelineRunner.output(s, c, "no_regions").agg(count(lit(1)).as("n"))),
+      "nation_names" -> ((s, c) =>
+        PipelineRunner.output(s, c, "no_nations").select(col("n_name")))))
+    assert(results.map(r => (r.stage, r.rows, r.status)) === Seq(
+      ("no_regions", 0L, "ok"), ("no_nations", 0L, "ok"),
+      ("region_count", 1L, "ok"), ("nation_names", 0L, "ok")))
+    val t = graft.sources.Tables(spark, sf)
+    assert(PipelineRunner.output(spark, cfg, "no_regions").columns === t.region.columns)
+    assert(PipelineRunner.output(spark, cfg, "no_nations").columns === t.nation.columns)
+    assert(PipelineRunner.output(spark, cfg, "region_count").head().getLong(0) === 0L)
+  }
+
+  test("a write that fails while executing marks the stage failed without waiting on its count") {
+    val cfg = EngineConfig("dev", sf, tempDir("graft_run_udf_fail"))
+    val boom = udf((id: Long) => {
+      if (id >= 0) throw new IllegalStateException(s"boom at $id")
+      id
+    })
+    val stages: Seq[PipelineRunner.Stage] = Seq(
+      "numbers" -> ((s, _) => s.range(0, 100, 1, 2).toDF()),
+      "boom" -> ((s, c) => PipelineRunner.output(s, c, "numbers").select(boom(col("id")).as("id"))),
+      "never" -> ((s, c) => PipelineRunner.output(s, c, "boom")))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val results = Await.result(Future(PipelineRunner.run(spark, cfg, stages)), 2.minutes)
+    assert(results.map(_.stage) === Seq("numbers", "boom", "never"))
+    assert(results.head.status === "ok")
+    assert(results(1).status.startsWith("failed"), results(1).status)
     assert(results(2) === StageResult("never", 0L, 0L, "skipped"))
   }
 

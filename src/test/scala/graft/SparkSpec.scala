@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,6 +26,35 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     tempDirs.synchronized { tempDirs += p }
     p.toString
+  }
+
+  /** The Spark jobs `f` submits, picked out of the listener bus by a job
+    * group. The bus is asynchronous but delivers in order, so once a
+    * marker job submitted after `f` arrives, every job of `f` has.
+    */
+  protected def jobsOf(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobcount-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-end" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "job count marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus never drained")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 
   override def afterAll(): Unit = {
