@@ -249,7 +249,7 @@ object Dedup {
 
   /** Connected components over near-dup pairs; returns (id, component)
     * where component is the minimum id reachable. Two paths:
-    * below `localThreshold` pairs a driver-side union-find (near-dup edge
+    * below 5,000,000 pairs a driver-side union-find (near-dup edge
     * sets are output-sized — pairs, not docs — so this is a bounded,
     * justified collect); above it, the distributed
     * [[largeStarSmallStar]] algorithm (Kiveris et al., "Connected
@@ -257,13 +257,13 @@ object Dedup {
     * O(log n) rounds regardless of component diameter — unlike min-label
     * propagation, whose round count is the graph diameter.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      localThreshold: Long = 5000000L, verbose: Boolean = false): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     // Near-dup edge sets are tiny relative to the corpus (pairs, not docs).
     // Below the threshold a driver-side union-find is strictly better than
     // iterative joins: O(E α(E)) once vs an action + 2 joins per round.
-    // Above it, fall through to the distributed min-label propagation.
+    // Above it, fall through to the distributed large-star/small-star.
     import org.apache.spark.sql.types.LongType
+    val localThreshold = 5000000L
     val nPairs = pairs.persist().count()
     // the union-find fast path reads Long ids; other id types (string
     // uuids, ints) take the type-generic distributed path below
@@ -289,7 +289,7 @@ object Dedup {
       pairs.unpersist()
       return spark.createDataset(labels).toDF("id", "component")
     }
-    val result = largeStarSmallStar(pairs, maxIter, verbose)
+    val result = largeStarSmallStar(pairs)
     pairs.unpersist()
     result
   }
@@ -308,8 +308,8 @@ object Dedup {
     * convergence check is one count. Returns (id, component) for every
     * node that appears in `pairs`.
     */
-  def largeStarSmallStar(pairs: DataFrame, maxIter: Int = 25,
-      verbose: Boolean = false): DataFrame = {
+  def largeStarSmallStar(pairs: DataFrame): DataFrame = {
+    val maxIter = 25
     // canonical undirected edges with the LARGER endpoint first: (hi, lo).
     // Each round ends in an EAGER localCheckpoint: unlike cache, it
     // truncates the logical plan, which otherwise compounds per round
@@ -368,11 +368,6 @@ object Dedup {
       val changed = outSig != edgeSig ||
         small.exceptAll(edges).limit(1).count() +
           edges.exceptAll(small).limit(1).count() > 0
-      // per-round probe line: the edge count IS the round's shuffle size
-      // (each round shuffles ~2x edges twice); localCheckpointed, so the
-      // signature is a cached-block scan, not a recompute
-      if (verbose) println(
-        f"[cc] round ${iter + 1}%d edges=${outSig._1}%,d changed=$changed%b")
       edges = small
       edgeSig = outSig
       converged = !changed

@@ -17,9 +17,9 @@ import graft.functions.TextFunctions._
   *    counts, not token occurrences. Document length rides along below
   *    the generator, so no second join against the corpus is needed.
   *  - For a repeated-query serving index, persist postings bucketed by
-  *    `term` (`Ingest.saveAsTable` + bucketBy): every query then probes
-  *    its terms' buckets with zero shuffle — the lakehouse analog of
-  *    per-term posting lists.
+  *    `term` (`write.bucketBy(n, "term").saveAsTable`): every query
+  *    then probes its terms' buckets with zero shuffle — the lakehouse
+  *    analog of per-term posting lists.
   *  - [[bm25TopK]] with a bounded query-term set never builds postings at
   *    all: per-term tf is a codegen'd array scan per row, df/N/avgdl are
   *    one map-side-combined aggregate broadcast back, and the final top-k

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Ingestion & egress beyond parquet (SURVEY.md §2.1 S2–S7).
+/** Ingestion & egress beyond parquet (SURVEY.md §2.1 S2–S6).
   *
   * Posture follows the survey's FHIR analysis (§1.3): explicit schema with
   * PERMISSIVE parse and a `_corrupt_record` column — open-ended nested
@@ -44,26 +44,9 @@ object Ingest {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  /** S6: JSON lines / CSV egress. */
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
+  /** S6: CSV egress. */
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  /** S1-adjacent columnar alternative: ORC with the vectorized reader —
-    * for lakes standardized on ORC instead of parquet; same pushdown and
-    * pruning guarantees.
-    */
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
-
-  /** Raw line ingestion (logs, JSONL pre-splitting): one `value` column. */
-  def readText(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
 
   /** S2-adjacent: XML (native in Spark 4) — FHIR's other wire format.
     * Same permissive posture as JSON.
@@ -83,12 +66,6 @@ object Ingest {
   def writeXml(df: DataFrame, path: String, rowTag: String): Unit =
     df.write.mode(SaveMode.Overwrite).format("xml")
       .option("rowTag", rowTag).save(path)
-
-  /** S7: catalog table (metastore-backed; Derby locally, Glue/HMS on a
-    * cluster — the catalog choice is session config, not code).
-    */
-  def saveAsTable(df: DataFrame, name: String): Unit =
-    df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(name)
 
   /** Schema evolution read (SURVEY §1.3 mode (c)): union the footer
     * schemas of every generation under a path — a column added in a later

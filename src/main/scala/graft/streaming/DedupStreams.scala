@@ -42,12 +42,11 @@ object DedupStreams {
   def nearDupDetectAvailableNow(docs: DataFrame, textCol: String,
       idCol: String, storeDir: String, outDir: String, checkpointDir: String,
       numHashes: Int = 128, bands: Int = 16, minEstJaccard: Double = 0.7,
-      shingleK: Int = 3, verbose: Boolean = false): Unit = {
+      shingleK: Int = 3): Unit = {
     val q = docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
         val spark = batch.sparkSession
         // signatures are read twice (probe + store append): materialize
         // once, release after the batch
@@ -63,8 +62,6 @@ object DedupStreams {
               case e: org.apache.spark.sql.AnalysisException
                   if e.getCondition == "PATH_NOT_FOUND" => None
             }
-          val storeBefore =
-            if (verbose) store.map(_.count()).getOrElse(0L) else 0L
           store.foreach { seen =>
             // foreachBatch is at-least-once: on a replay after a crash
             // between the store write and the checkpoint commit, the store
@@ -89,14 +86,6 @@ object DedupStreams {
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(storeDir)
-          if (verbose) {
-            val det =
-              try spark.read.parquet(s"$outDir/batch_id=$batchId").count()
-              catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-            println(f"[neardup] batch=$batchId%d sigs=${sigs.count()}%,d " +
-              f"store_before=$storeBefore%,d " +
-              f"detections=$det%,d s=${(System.nanoTime() - t0) / 1e9}%.2f")
-          }
         } finally sigs.unpersist()
       }
       .start()

@@ -1,446 +1,30 @@
 package graft.streaming
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.Trigger
 
-/** Structured Streaming over the events table (SURVEY.md §2.9 T1–T9).
+/** The streaming upsert sinks behind the e11/e21 queries (SURVEY.md §2.9
+  * S9).
   *
   * The reference's streaming story is "event arrives → run batch job"
   * (trigger Lambda + Step Functions,
-  * `Hoth/FHIR/cloudformations/lambda-stack.yml:23-35,42-55`). Structured
-  * Streaming generalizes it: the same declarative transforms run
-  * continuously (micro-batch) or as catch-up batches
-  * (`Trigger.AvailableNow` — the exact Lambda-triggered semantics).
+  * `Hoth/FHIR/cloudformations/lambda-stack.yml:23-35,42-55`): one
+  * run-to-completion job per arrival. Each sink here is that shape under
+  * Structured Streaming — a `foreachBatch` merge driven by
+  * `Trigger.AvailableNow`, which drains everything that has arrived and
+  * stops. The checkpoint makes a re-run resume where the last one ended,
+  * and every sink keeps the latest row per key, so a replayed micro-batch
+  * merges to the same state.
   *
-  * Every transform takes a DataFrame so it runs identically on
-  * `MemoryStream` (tests), file streams (production ingestion), or a plain
-  * batch frame. State stores are keyed by the grouping key — at 100 TB the
-  * key (user_id) must be high-cardinality so state shards evenly across
-  * executors; watermarks bound state size by evicting expired windows.
+  *  - [[upsertForeachBatchAvailableNow]]: plain parquet, rewritten by
+  *    dynamic partition overwrite;
+  *  - [[upsertForeachBatchAvailableNowAtomic]]: the same merge through the
+  *    GenTable commit protocol (one manifest swap per micro-batch);
+  *  - [[upsertForeachBatchAvailableNowAtomicWithView]]: the atomic sink
+  *    plus a served count/sum view refreshed after each commit.
   */
 object EventStreams {
-
-  case class Event(event_id: Long, ts: Timestamp, user_id: Long,
-      event_type: String, value: Double, props: String)
-
-  case class SessionState(nEvents: Long, totalValue: Double, lastTs: Long)
-  case class SessionOut(user_id: Long, n_events: Long, total_value: Double)
-
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
-  /** T1+T4: tumbling 1-hour windows with a 2-hour watermark. */
-  def hourlyCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total_value"))
-
-  /** T2: sliding windows (10-minute window, 5-minute slide). */
-  def slidingValue(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
-      .agg(avg(col("value")).as("avg_value"), count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("avg_value"), col("n"))
-
-  /** T3: session windows — 30-minute inactivity gap per user. */
-  def sessionWindows(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("session_value"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("session_value"))
-
-  /** T5: streaming dedup bounded by the watermark. */
-  def dedupEvents(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** T7: stream-static join — enrich the stream with a static dimension. */
-  def enrichWithStatic(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left_outer")
-
-  /** T8: stream-stream join — purchases within 1 hour after a click by the
-    * same user. Both sides watermarked; the time-range condition lets Spark
-    * expire join state.
-    */
-  def purchasesAfterClicks(events: DataFrame): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-      .withWatermark("purchase_ts", "2 hours")
-    purchases.join(
-      clicks,
-      col("p_user") === col("c_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-      .select(col("p_user").as("user_id"), col("click_ts"),
-        col("purchase_ts"), col("purchase_value"))
-  }
-
-  /** T6: custom stateful sessionization via flatMapGroupsWithState with an
-    * event-time timeout — emits a session row when the user goes quiet past
-    * the watermark. The explicit-state twin of `sessionWindows`.
-    */
-  def statefulSessions(events: Dataset[Event]): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          val gapMs = 30L * 60 * 1000
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(userId, s.nEvents, s.totalValue))
-          } else {
-            // fold the batch's events in event-time order, splitting on
-            // gaps WITHIN the batch too — under AvailableNow catch-up a
-            // single micro-batch can span a user's whole history, and the
-            // timeout callback only fires for batches with no input
-            val evs = rows.toSeq.sortBy(_.ts.getTime)
-            val completed = scala.collection.mutable.Buffer.empty[SessionOut]
-            var cur = state.getOption
-            evs.foreach { e =>
-              cur = cur match {
-                case Some(s) if e.ts.getTime - s.lastTs > gapMs =>
-                  completed += SessionOut(userId, s.nEvents, s.totalValue)
-                  Some(SessionState(1L, e.value, e.ts.getTime))
-                case Some(s) =>
-                  Some(SessionState(s.nEvents + 1, s.totalValue + e.value,
-                    math.max(s.lastTs, e.ts.getTime)))
-                case None =>
-                  Some(SessionState(1L, e.value, e.ts.getTime))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastTs + gapMs)
-            }
-            completed.iterator
-          }
-      }
-  }
-
-  /** T6 on the modern API: per-user running spend with a cap alert, via
-    * Spark 4 `transformWithState` (requires the RocksDB state store
-    * provider — see StreamingSpec for the session conf). The typed
-    * ValueState survives across micro-batches; compare `statefulSessions`
-    * for the legacy flatMapGroupsWithState formulation.
-    */
-  def runningSpend(events: Dataset[Event], alertAt: Double): Dataset[(Long, Double, Boolean)] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val provider = events.sparkSession.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass").getOrElse("")
-    require(provider.contains("RocksDB"),
-      "transformWithState requires the RocksDB state store: set " +
-        "spark.sql.streaming.stateStore.providerClass=" +
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new StatefulProcessor[Long, Event, (Long, Double, Boolean)] {
-          @transient private var total: ValueState[Double] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-            total = getHandle.getValueState[Double]("total",
-              Encoders.scalaDouble, TTLConfig.NONE)
-          override def handleInputRows(key: Long, rows: Iterator[Event],
-              timerValues: TimerValues): Iterator[(Long, Double, Boolean)] = {
-            val prev = if (total.exists()) total.get() else 0.0
-            val updated = prev + rows.map(_.value).sum
-            total.update(updated)
-            Iterator.single((key, updated, updated >= alertAt))
-          }
-        },
-        TimeMode.None(),
-        OutputMode.Update())
-  }
-
-  /** T6: streaming SCD2 maintenance via `transformWithState` — the
-    * incremental complement of the batch `e14_scd2_history` rebuild: each
-    * user's CURRENT (event_type, valid_from) lives in typed ValueState,
-    * and a CLOSED validity interval row is emitted the moment the type
-    * changes. Over an in-order change log, the emitted rows equal exactly
-    * the batch derivation's `valid_to IS NOT NULL` rows (pinned in
-    * StreamingSpec); the open interval per user is the state itself.
-    *
-    * Ordering contract: rows are folded in (ts, event_id) order WITHIN a
-    * micro-batch (AvailableNow catch-up can deliver a user's whole
-    * history in one batch), but like any SCD2 maintainer this consumes a
-    * per-key-ordered change log ACROSS batches — a CDC source provides
-    * that; arbitrary late data would need upstream resequencing, not
-    * state-side repair. At scale: state is one small record per user
-    * (RocksDB-backed, millions of keys per executor), output is change
-    * points only.
-    */
-  case class Scd2State(eventType: String, validFrom: Long)
-  case class Scd2Closed(user_id: Long, event_type: String,
-      valid_from: Timestamp, valid_to: Timestamp)
-  def scd2Maintain(events: Dataset[Event]): Dataset[Scd2Closed] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val provider = events.sparkSession.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass").getOrElse("")
-    require(provider.contains("RocksDB"),
-      "transformWithState requires the RocksDB state store provider")
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new StatefulProcessor[Long, Event, Scd2Closed] {
-          @transient private var cur: ValueState[Scd2State] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-            cur = getHandle.getValueState[Scd2State]("cur",
-              Encoders.product[Scd2State], TTLConfig.NONE)
-          override def handleInputRows(key: Long, rows: Iterator[Event],
-              timerValues: TimerValues): Iterator[Scd2Closed] = {
-            val evs = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            val out = scala.collection.mutable.Buffer.empty[Scd2Closed]
-            var state = if (cur.exists()) Some(cur.get()) else None
-            evs.foreach { e =>
-              state match {
-                case Some(s) if s.eventType != e.event_type =>
-                  out += Scd2Closed(key, s.eventType,
-                    new Timestamp(s.validFrom), e.ts)
-                  state = Some(Scd2State(e.event_type, e.ts.getTime))
-                case Some(_) => // same type: interval continues
-                case None =>
-                  state = Some(Scd2State(e.event_type, e.ts.getTime))
-              }
-            }
-            state.foreach(cur.update)
-            out.iterator
-          }
-        },
-        TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  /** T6: streaming transition-pair emission — the incremental complement
-    * of the batch `e19_markov_transitions` matrix. Each user's LAST event
-    * type lives in typed ValueState; every arriving event emits one
-    * (prev_type, next_type) pair against it and advances the state. The
-    * ordering contract is [[scd2Maintain]]'s: rows fold in (ts, event_id)
-    * order within a micro-batch, and the stream is a per-key-ordered
-    * change log across batches. Downstream the matrix is
-    * `pairs.groupBy(prev,next).count` in update mode — pair emission is
-    * append-only, so counts only ever grow and the streaming matrix at
-    * any point equals the batch matrix over the events seen so far
-    * (pinned in StreamingSpec). At scale: one small record per user in
-    * RocksDB state; output is exactly one row per event after each
-    * user's first.
-    */
-  case class LastType(eventType: String)
-  case class TransitionPair(user_id: Long, prev_type: String, next_type: String)
-  def transitionPairs(events: Dataset[Event]): Dataset[TransitionPair] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val provider = events.sparkSession.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass").getOrElse("")
-    require(provider.contains("RocksDB"),
-      "transformWithState requires the RocksDB state store provider")
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new StatefulProcessor[Long, Event, TransitionPair] {
-          @transient private var last: ValueState[LastType] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-            last = getHandle.getValueState[LastType]("last",
-              Encoders.product[LastType], TTLConfig.NONE)
-          override def handleInputRows(key: Long, rows: Iterator[Event],
-              timerValues: TimerValues): Iterator[TransitionPair] = {
-            val evs = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            val out = scala.collection.mutable.Buffer.empty[TransitionPair]
-            var prev = if (last.exists()) Some(last.get().eventType) else None
-            evs.foreach { e =>
-              prev.foreach(p => out += TransitionPair(key, p, e.event_type))
-              prev = Some(e.event_type)
-            }
-            prev.foreach(p => last.update(LastType(p)))
-            out.iterator
-          }
-        },
-        TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  /** T6/J7: STREAMING TEMPORAL as-of join — both sides are streams. Each
-    * event is enriched with the dimension version in effect AT ITS EVENT
-    * TIME (`max rts <= ts` per key), where the dimension itself arrives as
-    * a stream of timestamped versions — the event-time temporal join
-    * (Flink's FOR SYSTEM_TIME AS OF; Spark has no built-in equivalent,
-    * and `enrichWithStatic` only covers a FROZEN dimension).
-    *
-    * Correctness protocol (watermark-driven, out-of-order-safe):
-    * events and versions buffer in keyed state; an event FINALIZES only
-    * once the shared watermark passes its timestamp — after which neither
-    * a late event nor a late dimension version at or before that time can
-    * arrive (both inputs sit under ONE watermark on the unioned stream) —
-    * so the match is decided against the complete version history, not
-    * arrival order. Ripe events flush on the next batch's input or, for
-    * keys that go quiet, on an event-time timer registered one ms past
-    * the current watermark.
-    *
-    * State is BOUNDED: pending events drain at the watermark, and version
-    * history prunes to the newest version at or before the watermark
-    * (older versions can never be the match for any future event) plus
-    * anything newer. Tie at equal (rts): the version with the greater
-    * (dim_value) string wins — deterministic, matching the batch
-    * operators' content-hash-style tie discipline. At scale the state
-    * shards by the join key exactly like the other T6 processors
-    * (RocksDB-backed, bounded per key).
-    *
-    * @param delayThreshold watermark delay on the unioned stream, e.g.
-    *        "10 minutes" — the allowed lateness of BOTH sides. Like every
-    *        watermarked operator, rows older than the watermark are
-    *        DROPPED before they reach the state store: replaying
-    *        historical files requires arrival in rough time order within
-    *        this lateness (a racing, unordered file commit replays the
-    *        timeline out of sequence and the watermark correctly discards
-    *        it — measured in ProbeTemporal, which feeds slices in mtime
-    *        order exactly like a production file feed).
-    */
-  case class DimVersion(user_id: Long, rts: Timestamp, dim_value: String)
-  case class TemporalIn(user_id: Long, ts: Timestamp, side: Int,
-      event_id: Long, value: Double, dim_value: String)
-  case class TemporalEnriched(user_id: Long, event_id: Long, ts: Timestamp,
-      value: Double, dim_value: Option[String])
-  private case class DimVer(rts: Long, v: String)
-  private case class PendEv(ts: Long, eventId: Long, value: Double)
-  def temporalAsOf(events: Dataset[Event], dims: Dataset[DimVersion],
-      delayThreshold: String = "10 minutes"): Dataset[TemporalEnriched] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val provider = events.sparkSession.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass").getOrElse("")
-    require(provider.contains("RocksDB"),
-      "transformWithState requires the RocksDB state store provider")
-    val tagged = events
-      .map(e => TemporalIn(e.user_id, e.ts, 1, e.event_id, e.value, null))
-      .unionByName(dims.map(d =>
-        TemporalIn(d.user_id, d.rts, 0, 0L, 0.0, d.dim_value)))
-      .withWatermark("ts", delayThreshold)
-    tagged
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new StatefulProcessor[Long, TemporalIn, TemporalEnriched] {
-          @transient private var versions: ListState[DimVer] = _
-          @transient private var pending: ListState[PendEv] = _
-          @transient private var timerAt: ValueState[Long] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-            versions = getHandle.getListState[DimVer]("versions",
-              Encoders.product[DimVer], TTLConfig.NONE)
-            pending = getHandle.getListState[PendEv]("pending",
-              Encoders.product[PendEv], TTLConfig.NONE)
-            timerAt = getHandle.getValueState[Long]("timerAt",
-              Encoders.scalaLong, TTLConfig.NONE)
-          }
-          /** Finalize every pending event at or before the watermark
-            * against the buffered version history; prune both buffers.
-            */
-          private def flush(key: Long, wm: Long): Iterator[TemporalEnriched] = {
-            val vers = versions.get().toArray.sortBy(v => (v.rts, v.v))
-            val pend = pending.get().toArray.sortBy(p => (p.ts, p.eventId))
-            val (ripe, rest) = pend.partition(_.ts <= wm)
-            val out = ripe.iterator.map { p =>
-              // latest version at or before the event time; equal-rts
-              // ties resolve to the LAST in (rts, v) order = max v
-              val m = vers.takeWhile(_.rts <= p.ts).lastOption
-              TemporalEnriched(key, p.eventId, new Timestamp(p.ts),
-                p.value, m.map(_.v))
-            }.toArray // materialize BEFORE rewriting state below
-            if (rest.isEmpty) pending.clear() else pending.put(rest)
-            // prune: versions strictly older than the newest one at or
-            // before the watermark can never match a future event
-            val cut = vers.takeWhile(_.rts <= wm).lastOption
-            cut.foreach { c =>
-              val kept = vers.dropWhile(v =>
-                v.rts < c.rts || (v.rts == c.rts && v.v < c.v))
-              if (kept.length != vers.length) versions.put(kept)
-            }
-            out.iterator
-          }
-          override def handleInputRows(key: Long, rows: Iterator[TemporalIn],
-              timerValues: TimerValues): Iterator[TemporalEnriched] = {
-            rows.foreach { r =>
-              if (r.side == 0) versions.appendValue(DimVer(r.ts.getTime, r.dim_value))
-              else pending.appendValue(PendEv(r.ts.getTime, r.event_id, r.value))
-            }
-            val wm = timerValues.getCurrentWatermarkInMs()
-            val out = flush(key, wm)
-            // a key that goes quiet still needs its tail flushed: keep one
-            // timer parked just past the current watermark
-            if (pending.get().nonEmpty) {
-              val at = wm + 1
-              val prev = if (timerAt.exists()) timerAt.get() else -1L
-              if (prev != at) {
-                if (prev >= 0) getHandle.deleteTimer(prev)
-                getHandle.registerTimer(at)
-                timerAt.update(at)
-              }
-            }
-            out
-          }
-          override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-              expiredTimerInfo: ExpiredTimerInfo): Iterator[TemporalEnriched] = {
-            timerAt.clear()
-            val out = flush(key, timerValues.getCurrentWatermarkInMs())
-            if (pending.get().nonEmpty) {
-              val at = timerValues.getCurrentWatermarkInMs() + 1
-              getHandle.registerTimer(at)
-              timerAt.update(at)
-            }
-            out
-          }
-        },
-        TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  // -- Sources & sinks (S8/S9) ----------------------------------------------
-
-  /** S8: file-arrival ingestion — the Structured Streaming analog of the
-    * reference's "S3 object created → trigger" Lambda.
-    */
-  def readEventStream(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 10): DataFrame =
-    spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
-
-  /** S9: partitioned parquet sink with checkpointing; `Trigger.AvailableNow`
-    * reproduces the reference's run-to-completion batch trigger.
-    */
-  def writeParquetAvailableNow(df: DataFrame, outDir: String,
-      checkpointDir: String): Unit =
-    df.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode(OutputMode.Append())
-      .start()
-      .awaitTermination()
 
   /** S9 upsert-style sink via foreachBatch: each micro-batch merges into a
     * keyed parquet table by partition-wise read-union-dedup-rewrite — the
@@ -467,13 +51,12 @@ object EventStreams {
     */
   def upsertForeachBatchAvailableNow(df: DataFrame, outDir: String,
       checkpointDir: String, keyCol: String, orderCols: Seq[String],
-      partitionCol: String, verbose: Boolean = false): Unit =
+      partitionCol: String): Unit =
     df.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val t0 = System.nanoTime()
         val touched = batch.select(col(partitionCol)).distinct()
           .collect().map(_.get(0))
         if (touched.nonEmpty) {
@@ -510,13 +93,6 @@ object EventStreams {
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy(partitionCol)
               .parquet(outDir)
-            // probe observability: per-batch rewrite cost vs touched
-            // partitions is THE scale property of this sink (cost is
-            // bounded by partitions a batch touches, never table size)
-            if (verbose) println(
-              f"[upsert] batch=$batchId touched=${touched.length}%d " +
-                f"merged_rows=${checkpointed.count()}%,d " +
-                f"s=${(System.nanoTime() - t0) / 1e9}%.2f")
           } finally checkpointed.unpersist()
         }
       }
@@ -572,110 +148,6 @@ object EventStreams {
         graft.operators.RollupStore.maintainView(batch.sparkSession,
           outDir, viewDir, keyCol, groupCol, valueCol)
         ()
-      }
-      .start()
-      .awaitTermination()
-
-  /** Streaming rollup maintenance — the incremental complement of the
-    * batch `x07_incremental_rollup` lifecycle: each micro-batch's
-    * [[graft.operators.RollupStore.partials]] fold into the persisted
-    * store via [[graft.operators.RollupStore.merge]]. Unlike the
-    * latest-row-wins upsert sink above, a rollup merge is NOT naturally
-    * idempotent (re-merging a replayed batch would double-count), so the
-    * store is GENERATIONAL: batch `i` writes `storeDir/gen=i` computed
-    * from the newest generation `< i` plus its own partials. A
-    * crash-replayed batch recomputes the SAME generation from the same
-    * predecessor and the same checkpointed input — overwriting its own
-    * directory, never double-merging. Readers take the max generation;
-    * superseded generations are prunable retention, kept here as the
-    * audit trail (each is one store-sized parquet — key-space rows, not
-    * corpus rows).
-    *
-    * Scale shape: per batch one map-side-combined partial aggregate over
-    * the BATCH, one store-sized merge re-aggregate, one store-sized
-    * write. Nothing reprocesses history; the HLL user sketches round-trip
-    * parquet as BinaryType.
-    */
-  def rollupForeachBatchAvailableNow(df: DataFrame, storeDir: String,
-      checkpointDir: String, keys: Seq[String], valueCol: String,
-      userCol: String): Unit =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = new org.apache.hadoop.fs.Path(storeDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prevGen =
-          if (!fs.exists(root)) None
-          else fs.listStatus(root).toSeq.map(_.getPath.getName)
-            .filter(_.startsWith("gen="))
-            .map(_.stripPrefix("gen=").toLong)
-            .filter(_ < batchId)   // a replay must not see its own output
-            .sorted.lastOption
-        val partial = graft.operators.RollupStore
-          .partials(batch, keys, valueCol, userCol)
-        val merged = prevGen match {
-          case Some(g) => graft.operators.RollupStore.merge(keys,
-            Seq(spark.read.parquet(s"$storeDir/gen=$g"), partial))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$storeDir/gen=$batchId")
-      }
-      .start()
-      .awaitTermination()
-
-  /** Streaming exact dedup with UNBOUNDED history: each micro-batch is
-    * deduped against a persisted fingerprint store via
-    * `Dedup.incrementalExact`, survivors land in `outDir`, and their
-    * fingerprints append to the store — so a duplicate arriving YEARS
-    * after the original is still dropped. This is the complement of T5's
-    * `dropDuplicatesWithinWatermark`, whose state (and guarantee) is
-    * bounded by the watermark; here state is the fingerprint table —
-    * one long per unique document ever seen, on storage, not on the heap.
-    *
-    * Failure semantics: the survivor write is IDEMPOTENT — output is
-    * partitioned by batch id with dynamic overwrite, so a crash-replayed
-    * batch replaces its own partition instead of appending duplicates
-    * (the checkpoint re-runs the same batch id, and the fingerprint store
-    * is only consulted, never mutated, before the survivor commit). The
-    * fingerprint append after it is at-least-once: a replay can append
-    * the same fps twice, which costs store bytes but cannot change
-    * results (the anti-join probe is membership, not count).
-    */
-  def dedupForeachBatchAvailableNow(docs: DataFrame, outDir: String,
-      fpDir: String, checkpointDir: String,
-      textCol: String, idCol: String): Unit =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val seen =
-          try spark.read.parquet(fpDir)
-          catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition == "PATH_NOT_FOUND" =>
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("fp",
-                    org.apache.spark.sql.types.LongType))))
-          }
-        val survivors = graft.operators.Dedup
-          .incrementalExact(batch, seen, textCol, idCol)
-          .withColumn("_batch_id", lit(batchId))
-          .localCheckpoint(true)
-        try {
-          if (!survivors.isEmpty) {
-            survivors.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("_batch_id")
-              .parquet(outDir)
-            graft.operators.Dedup.fingerprints(survivors, textCol)
-              .write.mode("append").parquet(fpDir)
-          }
-        } finally survivors.unpersist()
       }
       .start()
       .awaitTermination()

@@ -74,15 +74,6 @@ class IngestSpec extends SparkSpec {
     assert(back.schema === df.schema)
   }
 
-  test("json round trip preserves rows") {
-    val tmp = tempDir("graft_json")
-    val df = graft.sources.Tables(spark, sf).region
-    Ingest.writeJson(df, s"$tmp/region")
-    val back = spark.read.schema(df.schema).json(s"$tmp/region")
-    assert(back.orderBy("r_regionkey").collect().toSeq ===
-      df.orderBy("r_regionkey").collect().toSeq)
-  }
-
   test("partitioned write + dynamic overwrite replaces only touched partitions") {
     val tmp = tempDir("graft_part")
     val t = graft.sources.Tables(spark, sf)
@@ -103,26 +94,6 @@ class IngestSpec extends SparkSpec {
     assert(scan.contains("PartitionFilters") && scan.contains("yr"), scan)
   }
 
-  test("orc round trip preserves rows and pushes filters") {
-    val tmp = tempDir("graft_orc")
-    val df = graft.sources.Tables(spark, sf).orders
-    Ingest.writeOrc(df, s"$tmp/orders")
-    val back = Ingest.readOrc(spark, s"$tmp/orders")
-    assert(back.count() === df.count())
-    val plan = back.filter(col("o_totalprice") > 100000.0)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("o_totalprice"), plan.take(1200))
-  }
-
-  test("text source reads raw lines") {
-    val tmp = java.nio.file.Paths.get(tempDir("graft_txt"))
-    java.nio.file.Files.write(tmp.resolve("log.txt"),
-      java.util.Arrays.asList("line one", "line two", "line three"))
-    val df = Ingest.readText(spark, tmp.toString)
-    assert(df.columns.sameElements(Array("value")))
-    assert(df.count() === 3)
-  }
-
   test("xml round trip on FHIR-shaped observations") {
     val tmp = tempDir("graft_xml")
     import spark.implicits._
@@ -135,14 +106,6 @@ class IngestSpec extends SparkSpec {
     val got = back.select("id", "unit", "value").collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
     assert(got === Set(("o1", "mmHg", 120.5), ("o2", "mmHg", 80.0), ("o3", "F", 98.6)))
-  }
-
-  test("catalog table save + SQL query over it") {
-    spark.sql("DROP TABLE IF EXISTS graft_nation")
-    Ingest.saveAsTable(graft.sources.Tables(spark, sf).nation, "graft_nation")
-    val n = spark.sql("SELECT count(*) AS n FROM graft_nation").head.getLong(0)
-    assert(n === 25)
-    spark.sql("DROP TABLE IF EXISTS graft_nation")
   }
 
   test("schema evolution: additive column reads as null for old files; backfill migrates") {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.SkewJoin
 import graft.sources.Tables
 
 /** Plan-shape regression suite: the physical plans we designed for stay the
@@ -68,19 +67,6 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
-  }
-
-  test("salted skew join returns exactly the plain join's rows") {
-    val t = Tables(spark, sf)
-    val plain = t.lineitem.join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = SkewJoin.saltedInnerJoin(
-      t.lineitem.withColumnRenamed("l_orderkey", "k"),
-      t.orders.withColumnRenamed("o_orderkey", "k"), "k", salts = 8)
-      .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted === plain)
   }
 
   test("dynamic partition pruning fires on a partitioned fact join") {

@@ -12,6 +12,13 @@ class SessionsSpec extends SparkSpec {
     assert(conf("spark.sql.sources.partitionOverwriteMode") === "dynamic")
   }
 
+  test("the test JVM runs generated code only, with no interpreted fallback") {
+    // set in build.sbt's Test / javaOptions: a codegen compile failure
+    // must fail the suite instead of passing on the interpreted path
+    assert(spark.conf.get("spark.sql.codegen.fallback") === "false")
+    assert(spark.conf.get("spark.sql.codegen.factoryMode") === "CODEGEN_ONLY")
+  }
+
   test("GraftExtensions class applies cleanly to SparkSessionExtensions") {
     // the spark.sql.extensions entry point must be instantiable + applicable
     val ext = new org.apache.spark.sql.SparkSessionExtensions

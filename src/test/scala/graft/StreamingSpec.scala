@@ -1,39 +1,11 @@
 package graft
 
-import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.EventStreams
-import graft.streaming.EventStreams.Event
 
 class StreamingSpec extends SparkSpec {
-
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  private def ev(id: Long, t: String, user: Long, typ: String, v: Double) =
-    Event(id, ts(t), user, typ, v, "{}")
-
-  test("hourlyCounts over a memory stream matches the batch result") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val data = Seq(
-      ev(1, "2024-01-01 10:05:00", 1, "click", 1.0),
-      ev(2, "2024-01-01 10:45:00", 2, "click", 2.0),
-      ev(3, "2024-01-01 11:05:00", 1, "view", 3.0))
-    val stream = MemoryStream[Event]
-    stream.addData(data: _*)
-    val q = EventStreams.hourlyCounts(stream.toDF())
-      .writeStream.format("memory").queryName("hourly").outputMode("complete").start()
-    q.processAllAvailable()
-    val got = spark.table("hourly")
-      .select("window_start", "event_type", "n")
-      .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2))).toSet
-    q.stop()
-    assert(got === Set(
-      ("2024-01-01 10:00:00.0", "click", 2L),
-      ("2024-01-01 11:00:00.0", "view", 1L)))
-  }
 
   test("chunkDocuments is stateless and runs unchanged under readStream") {
     import spark.implicits._
@@ -114,292 +86,6 @@ class StreamingSpec extends SparkSpec {
     assert(got(1L)._1 >= 5 && got(1L)._2.contains("[EMAIL]"))
     assert(got(2L) === ((0, "zz")))
     assert(got(3L)._2 === "ping [EMAIL] again")
-  }
-
-  test("dedupEvents drops re-delivered event ids within the watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    stream.addData(
-      ev(1, "2024-01-01 10:00:00", 1, "click", 1.0),
-      ev(1, "2024-01-01 10:00:00", 1, "click", 1.0), // exact redelivery
-      ev(2, "2024-01-01 10:01:00", 1, "view", 2.0))
-    val q = EventStreams.dedupEvents(stream.toDF())
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    q.processAllAvailable()
-    // second micro-batch redelivers id 1 again
-    stream.addData(ev(1, "2024-01-01 10:00:30", 1, "click", 1.0))
-    q.processAllAvailable()
-    val ids = spark.table("dedup").select("event_id").collect().map(_.getLong(0)).toSeq
-    q.stop()
-    assert(ids.sorted === Seq(1L, 2L))
-  }
-
-  test("sessionWindows groups by inactivity gap per user") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    stream.addData(
-      ev(1, "2024-01-01 10:00:00", 1, "click", 1.0),
-      ev(2, "2024-01-01 10:10:00", 1, "click", 2.0), // same session (gap 10m < 30m)
-      ev(3, "2024-01-01 12:00:00", 1, "click", 4.0)) // new session
-    val q = EventStreams.sessionWindows(stream.toDF())
-      .writeStream.format("memory").queryName("sessions").outputMode("complete").start()
-    q.processAllAvailable()
-    val got = spark.table("sessions")
-      .select("user_id", "n_events", "session_value")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    q.stop()
-    assert(got === Set((1L, 2L, 3.0), (1L, 1L, 4.0)))
-  }
-
-  test("stream-static join enriches events with the nation dimension") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "GERMANY"), (2L, "FRANCE")).toDF("user_id", "n_name")
-    val stream = MemoryStream[Event]
-    stream.addData(
-      ev(1, "2024-01-01 10:00:00", 1, "click", 1.0),
-      ev(2, "2024-01-01 10:01:00", 3, "view", 2.0)) // no dim row → null
-    val q = EventStreams.enrichWithStatic(stream.toDF(), dim, "user_id")
-      .writeStream.format("memory").queryName("enriched").outputMode("append").start()
-    q.processAllAvailable()
-    val got = spark.table("enriched").select("event_id", "n_name")
-      .collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
-    q.stop()
-    assert(got === Set((1L, Some("GERMANY")), (2L, None)))
-  }
-
-  test("stream-stream join pairs purchases with preceding clicks within 1 hour") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    stream.addData(
-      ev(1, "2024-01-01 10:00:00", 1, "click", 0.0),
-      ev(2, "2024-01-01 10:30:00", 1, "purchase", 99.0), // within 1h of click
-      ev(3, "2024-01-01 12:30:00", 1, "purchase", 50.0)) // no click within 1h
-    val q = EventStreams.purchasesAfterClicks(stream.toDF())
-      .writeStream.format("memory").queryName("attributed").outputMode("append").start()
-    q.processAllAvailable()
-    val got = spark.table("attributed").select("purchase_value")
-      .collect().map(_.getDouble(0)).toSet
-    q.stop()
-    assert(got === Set(99.0))
-  }
-
-  test("statefulSessions emits a session after event-time timeout") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    val q = EventStreams.statefulSessions(
-      stream.toDS().withWatermark("ts", "10 minutes").as[Event])
-      .writeStream.format("memory").queryName("stateful").outputMode("append").start()
-    stream.addData(
-      ev(1, "2024-01-01 10:00:00", 7, "click", 1.0),
-      ev(2, "2024-01-01 10:05:00", 7, "click", 2.0))
-    q.processAllAvailable()
-    // advance event time far past the 30-minute session timeout + watermark
-    stream.addData(ev(3, "2024-01-01 12:00:00", 8, "view", 9.0))
-    q.processAllAvailable()
-    stream.addData(ev(4, "2024-01-01 13:00:00", 8, "view", 1.0))
-    q.processAllAvailable()
-    val got = spark.table("stateful").as[EventStreams.SessionOut].collect()
-      .map(s => (s.user_id, s.n_events, s.total_value)).toSet
-    q.stop()
-    assert(got.contains((7L, 2L, 3.0)), s"expected user 7 session in $got")
-  }
-
-  test("transformWithState running spend persists across micro-batches (RocksDB)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[Event]
-      val q = EventStreams.runningSpend(stream.toDS(), alertAt = 100.0)
-        .toDF("user_id", "total", "alert")
-        .writeStream.format("memory").queryName("spend").outputMode("update").start()
-      try {
-        stream.addData(ev(1, "2024-01-01 10:00:00", 1, "purchase", 60.0))
-        q.processAllAvailable()
-        stream.addData(ev(2, "2024-01-01 11:00:00", 1, "purchase", 50.0))
-        q.processAllAvailable()
-        val rows = spark.table("spend").collect()
-          .map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2))).toSet
-        assert(rows === Set((1L, 60.0, false), (1L, 110.0, true)),
-          s"state did not persist across batches: $rows")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("rollupForeachBatchAvailableNow: streamed generations equal the batch build") {
-    import spark.implicits._
-    val tmp = tempDir("graft_rollup_")
-    val rows = (1L to 240L)
-      .map(i => (i, s"t${i % 3}", (i % 7).toDouble + 0.5, i % 29))
-      .toDF("event_id", "etype", "value", "user_id")
-    // three time-ordered input files -> three micro-batches
-    rows.withColumn("_b", col("event_id") % 3)
-      .repartitionByRange(3, col("_b")).drop("_b")
-      .write.parquet(s"$tmp/in")
-    EventStreams.rollupForeachBatchAvailableNow(
-      spark.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in"),
-      s"$tmp/store", s"$tmp/ckpt", Seq("etype"), "value", "user_id")
-    val gens = new java.io.File(s"$tmp/store").listFiles()
-      .map(_.getName).filter(_.startsWith("gen=")).sorted
-    assert(gens.length === 3, s"one generation per micro-batch: ${gens.toSeq}")
-    val latest = spark.read.parquet(s"$tmp/store/${gens.last}")
-    val streamed = graft.operators.RollupStore.finalizeStore(latest)
-      .orderBy("etype").collect().map(_.toSeq).toSeq
-    val batch = graft.operators.RollupStore.finalizeStore(
-      graft.operators.RollupStore.partials(rows, Seq("etype"), "value", "user_id"))
-      .orderBy("etype").collect().map(_.toSeq).toSeq
-    assert(streamed === batch,
-      "final generation must equal the one-shot batch build (HLL included)")
-  }
-
-  test("transitionPairs: streaming matrix equals the batch e19 derivation") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[Event]
-      val q = EventStreams.transitionPairs(stream.toDS())
-        .writeStream.format("memory").queryName("trans").outputMode("append").start()
-      try {
-        // batch 1 delivers user 1's first three events OUT of arrival order
-        // (in-batch sort must restore the (ts, event_id) fold order)
-        stream.addData(
-          ev(3, "2024-01-01 10:10:00", 1, "click", 1.0),
-          ev(1, "2024-01-01 10:00:00", 1, "view", 1.0),
-          ev(2, "2024-01-01 10:05:00", 1, "view", 1.0),
-          ev(4, "2024-01-01 10:00:00", 2, "view", 1.0))
-        q.processAllAvailable()
-        // batch 2: state carries each user's last type across batches
-        stream.addData(
-          ev(5, "2024-01-01 11:00:00", 1, "purchase", 1.0),
-          ev(6, "2024-01-01 11:30:00", 2, "error", 1.0))
-        q.processAllAvailable()
-        val got = spark.table("trans")
-          .groupBy("prev_type", "next_type").count()
-          .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-        // batch twin: lag over the full event set
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
-        val batch = Seq(
-          (1L, "2024-01-01 10:00:00", "view", 1L),
-          (1L, "2024-01-01 10:05:00", "view", 2L),
-          (1L, "2024-01-01 10:10:00", "click", 3L),
-          (1L, "2024-01-01 11:00:00", "purchase", 5L),
-          (2L, "2024-01-01 10:00:00", "view", 4L),
-          (2L, "2024-01-01 11:30:00", "error", 6L))
-          .toDF("user_id", "ts_s", "event_type", "event_id")
-          .withColumn("ts", to_timestamp(col("ts_s")))
-          .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-          .filter(col("prev_type").isNotNull)
-          .groupBy(col("prev_type"), col("event_type").as("next_type")).count()
-          .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-        assert(got === batch, s"streaming=$got batch=$batch")
-        assert(got === Set(("view", "view", 1L), ("view", "click", 1L),
-          ("click", "purchase", 1L), ("view", "error", 1L)))
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("scd2Maintain: streaming closed intervals equal the batch e14 derivation") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[Event]
-      val q = EventStreams.scd2Maintain(stream.toDS())
-        .writeStream.format("memory").queryName("scd2").outputMode("append").start()
-      try {
-        // batch 1: user 1 changes type mid-batch; user 2 opens an interval
-        stream.addData(
-          ev(1, "2024-01-01 10:00:00", 1, "view", 1.0),
-          ev(2, "2024-01-01 10:05:00", 1, "view", 1.0),
-          ev(3, "2024-01-01 10:10:00", 1, "click", 1.0),
-          ev(4, "2024-01-01 10:00:00", 2, "view", 1.0))
-        q.processAllAvailable()
-        // batch 2: state persists — user 1 closes 'click'; user 2 closes 'view'
-        stream.addData(
-          ev(5, "2024-01-01 11:00:00", 1, "purchase", 1.0),
-          ev(6, "2024-01-01 11:30:00", 2, "error", 1.0))
-        q.processAllAvailable()
-        val got = spark.table("scd2").as[EventStreams.Scd2Closed].collect()
-          .map(c => (c.user_id, c.event_type, c.valid_from.toString, c.valid_to.toString))
-          .toSet
-        assert(got === Set(
-          (1L, "view", "2024-01-01 10:00:00.0", "2024-01-01 10:10:00.0"),
-          (1L, "click", "2024-01-01 10:10:00.0", "2024-01-01 11:00:00.0"),
-          (2L, "view", "2024-01-01 10:00:00.0", "2024-01-01 11:30:00.0")),
-          s"closed intervals wrong: $got")
-        // equivalence with the batch operator: the same rows through the
-        // e14 logic, keeping only closed intervals
-        val batchRows = Seq(
-          (1L, "2024-01-01 10:00:00", "view", 1L),
-          (1L, "2024-01-01 10:05:00", "view", 2L),
-          (1L, "2024-01-01 10:10:00", "click", 3L),
-          (1L, "2024-01-01 11:00:00", "purchase", 5L),
-          (2L, "2024-01-01 10:00:00", "view", 4L),
-          (2L, "2024-01-01 11:30:00", "error", 6L))
-          .toDF("user_id", "ts_s", "event_type", "event_id")
-          .withColumn("ts", to_timestamp(col("ts_s")))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
-        val batchClosed = batchRows
-          .withColumn("_prev", lag(col("event_type"), 1).over(w))
-          .filter(col("_prev").isNull || col("_prev") =!= col("event_type"))
-          .withColumn("valid_to", lead(col("ts"), 1).over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)))
-          .filter(col("valid_to").isNotNull)
-          .select(col("user_id"), col("event_type"),
-            col("ts").as("valid_from"), col("valid_to"))
-          .as[EventStreams.Scd2Closed].collect()
-          .map(c => (c.user_id, c.event_type, c.valid_from.toString, c.valid_to.toString))
-          .toSet
-        assert(batchClosed === got,
-          s"streaming and batch SCD2 disagree: batch=$batchClosed stream=$got")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("statefulSessions splits sessions on gaps WITHIN one micro-batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    val q = EventStreams.statefulSessions(
-      stream.toDS().withWatermark("ts", "10 minutes").as[Event])
-      .writeStream.format("memory").queryName("inbatch").outputMode("append").start()
-    try {
-      // one batch spanning two sessions (gap 2h > 30m) — catch-up shape
-      stream.addData(
-        ev(1, "2024-01-01 10:00:00", 9, "click", 1.0),
-        ev(2, "2024-01-01 10:10:00", 9, "click", 2.0),
-        ev(3, "2024-01-01 13:00:00", 9, "click", 4.0))
-      q.processAllAvailable()
-      val got = spark.table("inbatch").as[EventStreams.SessionOut].collect()
-        .map(s => (s.user_id, s.n_events, s.total_value)).toSet
-      // first session completed by the in-batch gap; second still open
-      assert(got === Set((9L, 2L, 3.0)), s"got $got")
-    } finally q.stop()
   }
 
   test("streaming near-dup detection probes and grows the persisted signature store") {
@@ -590,109 +276,5 @@ class StreamingSpec extends SparkSpec {
       .select("user_id", "day", "score").collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
     assert(rows === Map(1L -> (("2024-02-05", 7.0)), 2L -> (("2024-01-01", 20.0))))
-  }
-
-  test("file-source stream with AvailableNow writes a parquet sink end to end") {
-    import spark.implicits._
-    val tmp = tempDir("graft_stream")
-    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-    graft.sources.Tables(spark, sf).events.limit(100)
-      .write.parquet(inDir)
-    val stream = EventStreams.readEventStream(spark, inDir, maxFilesPerTrigger = 2)
-    EventStreams.writeParquetAvailableNow(
-      EventStreams.hourlyCounts(stream), outDir, ckpt)
-    val out = spark.read.parquet(outDir)
-    assert(out.columns.toSet === Set("window_start", "event_type", "n", "total_value"))
-    // append-mode windowed agg emits only watermark-closed windows; the
-    // pipeline ran and produced valid parquet — row presence depends on
-    // watermark progress, schema is the contract here.
-    assert(out.count() >= 0)
-  }
-
-  test("streaming dedup against a persisted fingerprint store survives across runs") {
-    import spark.implicits._
-    val tmp = tempDir("graft_fpdedup")
-    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"
-    val fpDir = s"$tmp/fp"; val ckpt = s"$tmp/ckpt"
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    def stream = spark.readStream.schema(schema).parquet(inDir)
-    // run 1: two unique docs plus an in-batch duplicate
-    Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha")).toDF("doc_id", "text")
-      .write.mode("append").parquet(inDir)
-    EventStreams.dedupForeachBatchAvailableNow(stream, outDir, fpDir, ckpt, "text", "doc_id")
-    val afterRun1 = spark.read.parquet(outDir).collect().map(_.getLong(0)).toSet
-    assert(afterRun1 === Set(1L, 2L), "in-batch dup keeps the min id")
-    // run 2 (fresh query, same store): a late duplicate of run 1 + a new doc
-    Seq((10L, "beta"), (11L, "gamma")).toDF("doc_id", "text")
-      .write.mode("append").parquet(inDir)
-    EventStreams.dedupForeachBatchAvailableNow(stream, outDir, fpDir, ckpt, "text", "doc_id")
-    val afterRun2 = spark.read.parquet(outDir).collect().map(_.getLong(0)).toSet
-    assert(afterRun2 === Set(1L, 2L, 11L),
-      "the run-1 duplicate must be dropped by the fingerprint store, not re-admitted")
-    assert(spark.read.parquet(fpDir).count() === 3, "one fingerprint per unique text")
-  }
-
-  test("temporalAsOf: events match the dim version at EVENT time, out of order") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val evStream = MemoryStream[Event]
-      val dimStream = MemoryStream[EventStreams.DimVersion]
-      val q = EventStreams.temporalAsOf(
-        evStream.toDS(), dimStream.toDS(), delayThreshold = "10 minutes")
-        .writeStream.format("memory").queryName("tasof").outputMode("append").start()
-      try {
-        // batch 1: a version and two events for user 1 — nothing ripe yet
-        dimStream.addData(EventStreams.DimVersion(1L, ts("2024-01-01 09:00:00"), "v1"))
-        evStream.addData(
-          ev(2, "2024-01-01 09:30:00", 1, "view", 1.0),
-          ev(1, "2024-01-01 10:00:00", 1, "view", 2.0))
-        q.processAllAvailable()
-        // batch 2: a LATER version arrives AFTER the event it must match
-        // (v2@09:55 beats v1 for the 10:00 event), plus a user-2 event
-        // that advances the shared watermark to 10:50
-        dimStream.addData(EventStreams.DimVersion(1L, ts("2024-01-01 09:55:00"), "v2"))
-        evStream.addData(ev(3, "2024-01-01 11:00:00", 2, "view", 3.0))
-        q.processAllAvailable()
-        // batch 3: advance the watermark past user 2's event; it has no
-        // version history at all -> enriched with None
-        evStream.addData(ev(4, "2024-01-01 12:30:00", 2, "view", 4.0))
-        q.processAllAvailable()
-        val got = spark.table("tasof").collect()
-          .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(4)))).toSet
-        assert(got === Set(
-          (1L, 2L, Some("v1")), // 09:30 event: only v1@09:00 in effect
-          (1L, 1L, Some("v2")), // 10:00 event: v2@09:55 ARRIVED LATER but wins
-          (2L, 3L, None)),      // no version history for user 2
-          s"temporal matches wrong: $got")
-        // event 4 (12:30) is still inside the watermark window: pending
-        assert(!got.exists(_._2 == 4L), "unfinalized event must not emit")
-        // equivalence with the BATCH as-of operator: every finalized event
-        // carries exactly what AsOfJoin.backward derives over the same data
-        val evBatch = Seq(
-          ev(2, "2024-01-01 09:30:00", 1, "view", 1.0),
-          ev(1, "2024-01-01 10:00:00", 1, "view", 2.0),
-          ev(3, "2024-01-01 11:00:00", 2, "view", 3.0)).toDF()
-        val dimBatch = Seq(
-          EventStreams.DimVersion(1L, ts("2024-01-01 09:00:00"), "v1"),
-          EventStreams.DimVersion(1L, ts("2024-01-01 09:55:00"), "v2")).toDF()
-        val batchRows = graft.operators.AsOfJoin.backward(
-          evBatch, dimBatch.withColumnRenamed("user_id", "u2")
-            .withColumnRenamed("u2", "user_id"),
-          Seq("user_id"), "ts", "rts", Seq(("dim_value", "dim_value")))
-          .collect().map(r => (r.getAs[Long]("user_id"),
-            r.getAs[Long]("event_id"), Option(r.getAs[String]("dim_value")))).toSet
-        assert(got === batchRows,
-          s"streaming temporal as-of diverges from the batch operator: $got vs $batchRows")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
   }
 }
