@@ -189,7 +189,7 @@ object Bench {
     finalEmitted = true
     println(line)
     // The driver captures a bounded tail of stdout, which truncates the
-    // head of the per-query map on a 218-query suite; the artifact file
+    // head of the per-query map on a 215-query suite; the artifact file
     // carries the full line for every round's regression table.
     persist(line)
     spark.stop()

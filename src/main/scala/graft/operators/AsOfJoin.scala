@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,6 +24,9 @@ import org.apache.spark.sql.functions._
   * exactly-simultaneous right row is visible to the left row (inclusive <=).
   * Right rows whose value column is itself null are skipped by
   * `last(ignoreNulls)` — document values as non-null or pre-coalesce them.
+  * Each carried column is carried on its own, so with null values the
+  * columns of one output row can come from different right rows; with
+  * non-null values they all come from the one matched row.
   * When several right rows share the same (key, time), the winner is decided
   * by a content hash of the carried value columns (backward keeps the
   * max-hash row, forward the min-hash row) — an arbitrary but DETERMINISTIC
@@ -100,137 +103,6 @@ object AsOfJoin {
       .drop("_salt")
   }
 
-  /** Skew-resilient [[backwardMerge]] — [[backwardSalted]]'s construction
-    * over the custom exec: the merge demands exact co-partitioning on the
-    * keys (`ClusteredDistribution`), so a hot key serializes one
-    * partition's two-pointer sweep and AQE cannot split a custom exec the
-    * way it splits a SortMergeJoin. Salting the left into `salts`
-    * sub-streams and replicating the right bounds the per-partition sweep
-    * at ~1/salts of the hot key's left rows; the deterministic hash salt
-    * and the identical tie rules keep the result exactly
-    * [[backwardMerge]]'s (driver-gated under e05's oracle as e18).
-    */
-  def backwardMergeSalted(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTime: String,
-      rightTime: String,
-      rightVals: Seq[(String, String)],
-      salts: Int,
-      toleranceSeconds: Option[Double] = None
-  ): DataFrame = {
-    require(salts > 0, "salts must be positive")
-    require(!left.columns.contains("_salt") && !right.columns.contains("_salt"),
-      "backwardMergeSalted reserves the column name _salt; rename it on the input")
-    val saltedLeft = left.withColumn("_salt",
-      pmod(hash(col(leftTime) +: keys.map(col): _*), lit(salts)))
-    val saltedRight = right.withColumn("_salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    mergePlanned(saltedLeft, saltedRight, keys :+ "_salt", leftTime, rightTime,
-      rightVals, toleranceSeconds, forwardDir = false)
-      .drop("_salt")
-  }
-
-  /** [[backward]] planned through the custom whole-operator Catalyst
-    * extension ([[graft.plans.AsOfJoinPlan]] → `AsOfMergeJoinExec`):
-    * co-partition + per-side sort + single-pass two-pointer merge, instead
-    * of the composed union + carry-forward window. Equal to [[backward]]
-    * on every gated input (driver-gated under e05's oracle as e15;
-    * tie/tolerance/null-time equivalence spec-pinned); on degenerate
-    * inputs it follows pandas `merge_asof` instead of window quirks — the
-    * matched right row carries WHOLE (no per-column ignoreNulls
-    * stitching) and a null left time never matches — see the operator
-    * scaladoc in `plans/AsOfMergeJoin.scala` for the full contract, which
-    * also covers the integer-micros tolerance boundary. Strategy
-    * registration is delegated to
-    * `GraftExtensions.registerAsOfStrategy` (synchronized, idempotent).
-    *
-    * PICK THIS PATH when carrying several right columns: measured at 10M
-    * events (ProbeAsOf, SCALE.md §18), it is within 1.14× of [[backward]]
-    * on one carried column and 1.6×/5.6× FASTER at 4/16 columns — the
-    * composed window pays one null-padded union exchange plus a carry
-    * window per column, and past ~64 carried columns fails to plan
-    * outright (driver OOM in constraint propagation).
-    */
-  def backwardMerge(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTime: String,
-      rightTime: String,
-      rightVals: Seq[(String, String)],
-      toleranceSeconds: Option[Double] = None
-  ): DataFrame =
-    mergePlanned(left, right, keys, leftTime, rightTime, rightVals,
-      toleranceSeconds, forwardDir = false)
-
-  /** [[forward]] through the custom plan — the mirror of [[backwardMerge]]:
-    * earliest right at or after the left time, match window
-    * `[t, t + tolerance]`, equal-(key,time) ties resolve to the MIN-hash
-    * row (the composed first()-over-following-frame winner). Forward
-    * needs NO candidate state: strictly-past rights are useless for every
-    * later left row (consumed), and the match is the un-consumed head.
-    * Same deliberate degenerate-input divergences as backwardMerge.
-    */
-  def forwardMerge(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTime: String,
-      rightTime: String,
-      rightVals: Seq[(String, String)],
-      toleranceSeconds: Option[Double] = None
-  ): DataFrame =
-    mergePlanned(left, right, keys, leftTime, rightTime, rightVals,
-      toleranceSeconds, forwardDir = true)
-
-  private def mergePlanned(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTime: String,
-      rightTime: String,
-      rightVals: Seq[(String, String)],
-      toleranceSeconds: Option[Double],
-      forwardDir: Boolean
-  ): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    val spark = left.sparkSession
-    graft.plans.GraftExtensions.registerAsOfStrategy(spark)
-    // normalize the time columns through TimestampType at the DataFrame
-    // level (NTZ-robust, same as the composed path's epochSec) so the
-    // physical sweep always compares epoch micros. The temp names are
-    // collision-proofed against the input schemas: a fixed name would
-    // silently REPLACE (and then drop) a caller column that happens to
-    // share it.
-    def fresh(base: String, taken: Array[String]): String =
-      Iterator.from(0).map(i => if (i == 0) base else s"${base}_$i")
-        .find(n => !taken.contains(n)).get
-    val ltName = fresh("_asof_lt", left.columns)
-    val rtName = fresh("_asof_rt", right.columns)
-    val l2 = left.withColumn(ltName, col(leftTime).cast("timestamp"))
-    val r2 = right.withColumn(rtName, col(rightTime).cast("timestamp"))
-    def ex(c: org.apache.spark.sql.Column) =
-      GraftSqlShim.expr(c)
-    val valExprs = rightVals.map { case (src, _) => ex(r2.col(src)) }
-    // output attributes carried explicitly (never as Aliases — the
-    // analyzer's CleanupAliases would strip them from a custom node)
-    val valAttrs = rightVals.zip(valExprs).map { case ((_, alias), e) =>
-      AttributeReference(alias, e.dataType, nullable = true)()
-    }
-    val node = graft.plans.AsOfJoinPlan(
-      l2.queryExecution.analyzed, r2.queryExecution.analyzed,
-      keys.map(k => ex(l2.col(k))), keys.map(k => ex(r2.col(k))),
-      ex(l2.col(ltName)), ex(r2.col(rtName)),
-      valExprs, valAttrs, toleranceSeconds.map(t => (t * 1e6).toLong),
-      forwardDir,
-      // tie hash takes the RAW right-time column — composed-`_tb` parity
-      // even when the time column isn't TimestampType yet
-      tieTime = Some(ex(r2.col(rightTime))))
-    GraftSqlShim.ofRows(spark, node).drop(ltName)
-  }
-
   private def asof(
       left: DataFrame,
       right: DataFrame,
@@ -250,8 +122,8 @@ object AsOfJoin {
     val carriedVals = rightVals :+ (rightTime -> "_rt_matched")
     // the union/window composition owns these working names; a caller
     // column sharing one would be silently replaced — fail loudly instead
-    // (the merge-planned path generates collision-proof names; here the
-    // names participate in unionByName resolution, so they must be fixed)
+    // (the names participate in unionByName resolution, so they must be
+    // fixed rather than generated)
     val reserved = Seq("_t", "_side", "_tb") ++
       carriedVals.map { case (_, alias) => s"_rv_$alias" }
     val clash = (left.columns ++ right.columns).toSeq.intersect(reserved)

@@ -7,12 +7,24 @@ import org.apache.spark.sql.functions.call_function
 import graft.functions.{CosineSimilarity, Int8Cosine, Int8Pack, UnicodeNormalize, VectorDot}
 
 /** Engine extensions, injected via the public `SparkSessionExtensions` hook
-  * (SURVEY.md §2.10 X4, §4): native functions beyond Spark's built-ins.
+  * (SURVEY.md §2.10 X4, §4):
+  *  - native functions beyond Spark's built-ins (`cosine_sim`,
+  *    `vector_dot`, `int8_pack`, `int8_cosine`, `bloom_agg`,
+  *    `bloom_might_contain`, `unicode_normalize`, `pq_encode`,
+  *    `pq_adc_table`);
+  *  - the lake's SQL table functions (`gentable_history`,
+  *    `gentable_changes`, `gentable_fsck` — see [[GenTableTvf]]);
+  *  - one optimizer rule, [[GenTableMetadataAggregate]] (whole-table
+  *    aggregates over a GenTable answered from its manifest);
+  *  - one resolution rule, [[GenTableDml]] (SQL DELETE/UPDATE/MERGE/INSERT
+  *    over registered GenTable views).
   *
   * Two ways in:
   *  - config: `spark.sql.extensions=graft.plans.GraftExtensions` at session
-  *    build time (cluster deployments);
-  *  - `GraftExtensions.register(spark)` on a live session (tests, notebooks).
+  *    build time (cluster deployments) — everything above;
+  *  - `GraftExtensions.register(spark)` on a live session (tests,
+  *    notebooks) — everything but [[GenTableDml]], which needs the
+  *    analyzer hook only the config path has.
   *
   * After either, `cosine_sim(a, b)` resolves in SQL and via
   * `GraftExtensions.cosineSim(colA, colB)` on the DataFrame API.
@@ -31,8 +43,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL table functions for the lake's operational plane (history /
     // CDC diff / disk audit as relations — see GenTableTvf)
     GraftExtensions.tableFunctions.foreach(ext.injectTableFunction)
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => AsOfPushdown)
     ext.injectOptimizerRule(_ => GenTableMetadataAggregate)
     // SQL DML (DELETE/UPDATE/MERGE) over registered GenTable views —
     // a RESOLUTION rule (it must claim the plan before the v2-only
@@ -185,40 +195,27 @@ object GraftExtensions {
       new ExpressionInfo(GenTableTvf.getClass.getName, "gentable_fsck"),
       GenTableTvf.fsck _))
 
-  /** Idempotent registration on a live session. */
-  /** Runtime twin of the config-path `injectPlannerStrategy` /
-    * `injectOptimizerRule`: adds [[AsOfJoinStrategy]] to the live
-    * session's experimental strategies and [[AsOfPushdown]] to its extra
-    * optimizations. Synchronized on the session — both are
-    * session-global mutable state and a bare check-then-append would
-    * race.
+  /** Runtime twin of the config-path `injectOptimizerRule`: adds
+    * [[GenTableMetadataAggregate]] to the live session's extra
+    * optimizations unless it is already there. Synchronized on the
+    * session — the list is session-global mutable state and a bare
+    * check-then-append would race.
     */
-  def registerAsOfStrategy(spark: SparkSession): Unit = spark.synchronized {
-    val exp = spark.experimental
-    // planner.strategies / optimizer.extendedOperatorOptimizationRules
-    // already fold in BOTH registration paths — the experimental lists
-    // and the extension-injected ones — so a session built with
-    // GraftExtensions is seen here and not double-registered (the
-    // strategy/rule would otherwise run twice per plan)
-    val strategyIn = spark.sessionState.planner.strategies
-      .contains(AsOfJoinStrategy) ||
-      exp.extraStrategies.contains(AsOfJoinStrategy)
-    if (!strategyIn)
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-    val ruleIn = spark.sessionState.optimizer.extendedOperatorOptimizationRules
-      .contains(AsOfPushdown) ||
-      exp.extraOptimizations.contains(AsOfPushdown)
-    if (!ruleIn)
-      exp.extraOptimizations = exp.extraOptimizations :+ AsOfPushdown
-    val metaAggIn = spark.sessionState.optimizer
-      .extendedOperatorOptimizationRules.contains(GenTableMetadataAggregate) ||
-      exp.extraOptimizations.contains(GenTableMetadataAggregate)
-    if (!metaAggIn)
-      exp.extraOptimizations = exp.extraOptimizations :+ GenTableMetadataAggregate
-  }
+  private def registerMetadataAggregate(spark: SparkSession): Unit =
+    spark.synchronized {
+      val exp = spark.experimental
+      // injected by the config path, or appended by an earlier call:
+      // either way a second copy would run the rule twice per plan
+      val in = spark.sessionState.optimizer.extendedOperatorOptimizationRules
+        .contains(GenTableMetadataAggregate) ||
+        exp.extraOptimizations.contains(GenTableMetadataAggregate)
+      if (!in)
+        exp.extraOptimizations = exp.extraOptimizations :+ GenTableMetadataAggregate
+    }
 
+  /** Registration on a live session; safe to call more than once. */
   def register(spark: SparkSession): Unit = {
-    registerAsOfStrategy(spark)
+    registerMetadataAggregate(spark)
     tableFunctions.foreach { case (id, _, builder) =>
       spark.sessionState.tableFunctionRegistry
         .createOrReplaceTempFunction(id.funcName, builder, "built-in")

@@ -130,51 +130,13 @@ object EventQueries extends QueryPack {
       )
     },
 
-    // -- J7 FORWARD via the custom plan — same inputs and oracle as e07
-    //    (bounded-MIN subquery with 1h tolerance): the peek-head forward
-    //    sweep must be indistinguishable from the composed
-    //    first()-over-following-frame.
-    "e16_asof_forward_merge" -> { (spark, dir) =>
-      val t = Tables(spark, dir)
-      val clicks = t.events.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = t.events.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("purchase_ts"))
-      AsOfJoin.forwardMerge(
-        clicks, purchases,
-        keys = Seq("user_id"),
-        leftTime = "ts", rightTime = "purchase_ts",
-        rightVals = Seq(("purchase_ts", "next_purchase_ts")),
-        toleranceSeconds = Some(3600.0)
-      )
-    },
-
-    // -- J7 via the CUSTOM whole-operator plan (X4 tier c): AsOfJoinPlan →
-    //    AsOfJoinStrategy → AsOfMergeJoinExec — co-partitioned per-side
-    //    sorts + a two-pointer merge, no union-window. Same inputs and
-    //    oracle as e05: the custom physical operator must be
-    //    indistinguishable from the composed one.
-    "e15_asof_merge" -> { (spark, dir) =>
-      val t = Tables(spark, dir)
-      val purchases = t.events.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clicks = t.events.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"))
-      AsOfJoin.backwardMerge(
-        purchases, clicks,
-        keys = Seq("user_id"),
-        leftTime = "ts", rightTime = "click_ts",
-        rightVals = Seq(("click_ts", "last_click_ts"))
-      )
-    },
-
-    // -- J7 custom plan, MULTI-VALUE payload: the shape the merge exec
-    //    exists for (ProbeAsOf: composed union-window degrades with
-    //    carried width, merge is near-flat — SCALE.md §18). Carries THREE
-    //    columns of the matched click — time, value, event_id — in one
-    //    whole-row carry; the oracle re-derives the matched row with a
-    //    correlated LATERAL top-1 (tie-free: (user_id, ts) is unique among
-    //    clicks at every fixture scale, asserted before this was gated).
+    // -- J7 as-of join, MULTI-VALUE carry: three columns of the matched
+    //    click — time, value, event_id. The composed operator carries each
+    //    column with its own last(ignoreNulls); no click has a null value,
+    //    event_id or ts, so all three come from the one matched click. The
+    //    oracle re-derives that click whole with a correlated LATERAL top-1
+    //    (tie-free: (user_id, ts) is unique among clicks at every fixture
+    //    scale).
     "e17_asof_merge_multi" -> { (spark, dir) =>
       val t = Tables(spark, dir)
       val purchases = t.events.filter(col("event_type") === "purchase")
@@ -182,32 +144,12 @@ object EventQueries extends QueryPack {
       val clicks = t.events.filter(col("event_type") === "click")
         .select(col("user_id"), col("ts").as("click_ts"),
           col("value").as("cv"), col("event_id").as("ce"))
-      AsOfJoin.backwardMerge(
+      AsOfJoin.backward(
         purchases, clicks,
         keys = Seq("user_id"),
         leftTime = "ts", rightTime = "click_ts",
         rightVals = Seq(("click_ts", "last_click_ts"),
           ("cv", "click_value"), ("ce", "click_event_id"))
-      )
-    },
-
-    // -- J7 custom plan, SALTED skew path: the merge exec demands exact
-    //    key co-partitioning, so a hot key serializes one partition's
-    //    sweep (AQE can't split a custom exec); the salt bounds it. Same
-    //    inputs and oracle as e05 — the skew path must be
-    //    indistinguishable, exactly like e13 proves for the composed path.
-    "e18_asof_merge_salted" -> { (spark, dir) =>
-      val t = Tables(spark, dir)
-      val purchases = t.events.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clicks = t.events.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"))
-      AsOfJoin.backwardMergeSalted(
-        purchases, clicks,
-        keys = Seq("user_id"),
-        leftTime = "ts", rightTime = "click_ts",
-        rightVals = Seq(("click_ts", "last_click_ts")),
-        salts = 4
       )
     },
 
@@ -1484,14 +1426,6 @@ object EventQueries extends QueryPack {
         |   WHERE c.user_id = p.user_id AND c.event_type = 'click'
         |     AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)) AS last_click_ts
         |FROM events p WHERE p.event_type = 'purchase'""".stripMargin,
-    // identical oracle to e05: the custom physical operator must be
-    // indistinguishable
-    "e15_asof_merge" ->
-      """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts, p.value,
-        |  (SELECT max(CAST(c.ts AS TIMESTAMP)) FROM events c
-        |   WHERE c.user_id = p.user_id AND c.event_type = 'click'
-        |     AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)) AS last_click_ts
-        |FROM events p WHERE p.event_type = 'purchase'""".stripMargin,
     // the multi-value carry: the matched click re-derived whole-row by a
     // correlated LATERAL top-1 (ORDER BY ts DESC LIMIT 1 — tie-free on
     // this fixture, see the query comment)
@@ -1506,14 +1440,6 @@ object EventQueries extends QueryPack {
         |  WHERE c.user_id = p.user_id AND c.event_type = 'click'
         |    AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)
         |  ORDER BY CAST(c.ts AS TIMESTAMP) DESC LIMIT 1) c ON TRUE""".stripMargin,
-    // identical oracle to e05: the salted MERGE path must be
-    // indistinguishable (the e13 proof applied to the custom exec)
-    "e18_asof_merge_salted" ->
-      """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts, p.value,
-        |  (SELECT max(CAST(c.ts AS TIMESTAMP)) FROM events c
-        |   WHERE c.user_id = p.user_id AND c.event_type = 'click'
-        |     AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)) AS last_click_ts
-        |FROM events p WHERE p.event_type = 'purchase'""".stripMargin,
     // identical oracle to e05: the salted operator must be indistinguishable
     "e13_asof_salted" ->
       """SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts, p.value,
@@ -1522,16 +1448,6 @@ object EventQueries extends QueryPack {
         |     AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)) AS last_click_ts
         |FROM events p WHERE p.event_type = 'purchase'""".stripMargin,
     "e07_asof_forward" ->
-      """SELECT c.event_id, c.user_id, CAST(c.ts AS TIMESTAMP) AS ts,
-        |  (SELECT min(CAST(p.ts AS TIMESTAMP)) FROM events p
-        |   WHERE p.user_id = c.user_id AND p.event_type = 'purchase'
-        |     AND epoch(CAST(p.ts AS TIMESTAMP)) >= epoch(CAST(c.ts AS TIMESTAMP))
-        |     AND epoch(CAST(p.ts AS TIMESTAMP)) - epoch(CAST(c.ts AS TIMESTAMP)) <= 3600.0
-        |  ) AS next_purchase_ts
-        |FROM events c WHERE c.event_type = 'click'""".stripMargin,
-    // identical oracle to e07: the custom forward plan must be
-    // indistinguishable
-    "e16_asof_forward_merge" ->
       """SELECT c.event_id, c.user_id, CAST(c.ts AS TIMESTAMP) AS ts,
         |  (SELECT min(CAST(p.ts AS TIMESTAMP)) FROM events p
         |   WHERE p.user_id = c.user_id AND p.event_type = 'purchase'

@@ -2,13 +2,6 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The one `private[sql]` doorway a planner extension needs: wrapping a
-  * custom [[LogicalPlan]] node back into a user-facing DataFrame.
-  * `Dataset.ofRows` is package-private by design (Spark expects extensions
-  * to live under this package for it — the convention every published
-  * Spark connector/extension follows), so this shim is the entire surface
-  * we take from it: one forwarding call, no other internals touched.
-  */
 /** Public face of the `private[sql]` streaming-fallback trait
   * ([[connector.catalog.V2TableWithV1Fallback]]) — the dispatch hook
   * Spark's analyzer (`RelationResolution`) and `DataStreamWriter.toTable`
@@ -21,6 +14,13 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 trait GraftV1FallbackTable extends connector.catalog.V2TableWithV1Fallback
 
 object GraftSqlShim {
+  /** A resolved [[LogicalPlan]] wrapped back into a user-facing DataFrame.
+    * `Dataset.ofRows` is package-private by design (Spark expects
+    * extensions to live under this package for it), so this forwarding
+    * call is the doorway. It serves [[graft.plans.GenTableDml]] only: the
+    * `INSERT` and `MERGE INTO` commands run their analyzed source query
+    * through the DataFrame API.
+    */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 

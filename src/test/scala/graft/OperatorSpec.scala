@@ -90,6 +90,121 @@ class OperatorSpec extends SparkSpec {
     assert(plainTol !== plain) // tolerance actually bites on this data
   }
 
+  private def asofCanon(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) -> Option(r.getAs[String]("v"))).toMap
+
+  test("AsOfJoin.backward edge semantics: ties, null right times, unmatched keys") {
+    import spark.implicits._
+    val left = Seq(
+      (1L, 10L, "2024-01-01 10:00:00"),
+      (2L, 10L, "2024-01-01 09:00:00"), // before every right row
+      (3L, 20L, "2024-01-01 10:00:00"), // key with no right rows
+      (4L, 30L, "2024-01-01 10:00:00")
+    ).toDF("id", "k", "ts").withColumn("ts", col("ts").cast("timestamp"))
+    val right = Seq(
+      (10L, "2024-01-01 10:00:00", "a"), // tie at left 1's time
+      (10L, "2024-01-01 10:00:00", "b"), // tie — the content hash decides
+      (10L, "2024-01-01 09:30:00", "c"),
+      (30L, null, "z") // null right time: "-infinity" — matches without
+                       // tolerance, never within one
+    ).toDF("k", "rts", "v").withColumn("rts", col("rts").cast("timestamp"))
+    val out = asofCanon(AsOfJoin.backward(left, right, Seq("k"), "ts", "rts",
+      Seq(("v", "v"))))
+    assert(out(2L).isEmpty, "left row before all right rows matches nothing")
+    assert(out(3L).isEmpty, "unmatched key yields null")
+    assert(out(4L) === Some("z"), "null right time acts as -infinity")
+    assert(out(1L).nonEmpty && Set("a", "b").contains(out(1L).get))
+    val tol = asofCanon(AsOfJoin.backward(left, right, Seq("k"), "ts", "rts",
+      Seq(("v", "v")), toleranceSeconds = Some(1e9)))
+    assert(tol(4L).isEmpty, "null-time match is outside every tolerance")
+    assert(tol(1L) === out(1L))
+  }
+
+  test("AsOfJoin.forward edge semantics: inclusive >=, shared next right, none after") {
+    import spark.implicits._
+    val left = Seq(
+      (1L, 10L, "2024-01-01 10:00:00"), // tie with a right row at the same time
+      (2L, 10L, "2024-01-01 09:00:00"), // shares left 1's next right
+      (3L, 10L, "2024-01-01 23:00:00")  // after every right: no match
+    ).toDF("id", "k", "ts").withColumn("ts", col("ts").cast("timestamp"))
+    val right = Seq(
+      (10L, "2024-01-01 10:00:00", "a"),
+      (10L, "2024-01-01 10:00:00", "b"), // tie — min-hash winner
+      (10L, "2024-01-01 12:00:00", "late")
+    ).toDF("k", "rts", "v").withColumn("rts", col("rts").cast("timestamp"))
+    val out = asofCanon(AsOfJoin.forward(left, right, Seq("k"), "ts", "rts",
+      Seq(("v", "v"))))
+    assert(out(1L).nonEmpty && Set("a", "b").contains(out(1L).get),
+      "simultaneous right row is visible (inclusive >=)")
+    assert(out(2L) === out(1L), "an earlier left matches the same next right")
+    assert(out(3L).isEmpty, "left after all rights matches nothing")
+  }
+
+  test("AsOfJoin.backward on degenerate inputs: per-column carry, nulls-first times") {
+    import spark.implicits._
+    val left = Seq((1L, 10L, Some("2024-01-01 12:00:00")),
+      (2L, 20L, None))
+      .toDF("id", "k", "ts").withColumn("ts", col("ts").cast("timestamp"))
+    val right = Seq(
+      (10L, Some("2024-01-01 10:00:00"), Some("x")),
+      (10L, Some("2024-01-01 11:00:00"), None), // later match, null value
+      (20L, None, Some("z")) // null right time for the null-left-time key
+    ).toDF("k", "rts", "v").withColumn("rts", col("rts").cast("timestamp"))
+    val out = asofCanon(AsOfJoin.backward(left, right, Seq("k"), "ts", "rts",
+      Seq(("v", "v"))))
+    // last(ignoreNulls) skips the null value of the later match
+    assert(out(1L) === Some("x"), "the carry stitches past a null value")
+    // null times sort first, so a null left time sees a null right time
+    assert(out(2L) === Some("z"), "nulls-first frame matches null to null")
+  }
+
+  test("AsOfJoin.backward over string + multi-column keys, including NULL keys") {
+    import spark.implicits._
+    val left = Seq(
+      (1L, Some("alice"), 1L, "2024-01-01 10:00:00"),
+      (2L, Some("alice"), 2L, "2024-01-01 10:00:00"), // same k1, other k2
+      (3L, Some("bob"), 1L, "2024-01-01 12:00:00"),
+      (4L, None, 1L, "2024-01-01 12:00:00"), // NULL string key
+      (5L, Some("carol"), 9L, "2024-01-01 12:00:00")) // unmatched
+      .toDF("id", "k1", "k2", "ts").withColumn("ts", col("ts").cast("timestamp"))
+    val right = Seq(
+      (Some("alice"), 1L, "2024-01-01 09:00:00", "a1"),
+      (Some("alice"), 1L, "2024-01-01 09:30:00", "a2"), // later: wins for id 1
+      (Some("alice"), 2L, "2024-01-01 09:00:00", "b"),
+      (Some("bob"), 1L, "2024-01-01 11:00:00", "c"),
+      (None, 1L, "2024-01-01 11:30:00", "n")) // NULL key matches NULL key
+      .toDF("k1", "k2", "rts", "v").withColumn("rts", col("rts").cast("timestamp"))
+    val m = asofCanon(AsOfJoin.backward(
+      left, right, Seq("k1", "k2"), "ts", "rts", Seq(("v", "v"))))
+    assert(m(1L) === Some("a2") && m(2L) === Some("b") && m(3L) === Some("c"))
+    assert(m(4L) === Some("n"), "null keys must group together")
+    assert(m(5L).isEmpty)
+  }
+
+  test("AsOfJoin backward and forward are deterministic across partitionings") {
+    val t = graft.sources.Tables(spark, sf)
+    val purchases = t.events.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val clicks = t.events.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    def run(parts: Int, forwardDir: Boolean) = {
+      val (l, r) = (purchases.repartition(parts),
+        clicks.withColumnRenamed("event_id", "click_id")
+          .withColumnRenamed("ts", "click_ts").repartition(parts + 3))
+      val vals = Seq(("click_id", "click_id"))
+      val out =
+        if (forwardDir) AsOfJoin.forward(l, r, Seq("user_id"), "ts", "click_ts", vals)
+        else AsOfJoin.backward(l, r, Seq("user_id"), "ts", "click_ts", vals)
+      out.collect().map(row => row.getLong(0) -> Option(row.getAs[Any]("click_id")))
+        .toMap
+    }
+    for (fwd <- Seq(false, true)) {
+      val two = run(2, fwd)
+      assert(two.values.exists(_.nonEmpty), s"forward=$fwd matched nothing")
+      assert(run(11, fwd) === two, s"forward=$fwd")
+    }
+  }
+
   test("Sessionize.byGap splits on gaps strictly greater than the threshold") {
     import spark.implicits._
     val ev = Seq(

@@ -355,93 +355,6 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("as-of merge: left-only filter and projection push through to the scan") {
-    import org.apache.spark.sql.functions.col
-    // Catalyst's built-in pushdown skips custom nodes — AsOfPushdown is
-    // what carries a left-side predicate/projection below AsOfJoinPlan,
-    // where FileSourceStrategy folds them into the parquet scan. Without
-    // it this plan reads every user's events and all columns.
-    val tmp = tempDir("graft_asofpush")
-    val t = Tables(spark, sf)
-    t.events.select("event_id", "user_id", "ts", "event_type", "value")
-      .write.parquet(s"$tmp/events")
-    t.events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("u2"), col("ts").as("rts"),
-        col("value").as("ref_value"), col("event_type").as("ref_type"))
-      .write.parquet(s"$tmp/dim")
-    val left = spark.read.parquet(s"$tmp/events")
-    val dim = spark.read.parquet(s"$tmp/dim").withColumnRenamed("u2", "user_id")
-    val out = graft.operators.AsOfJoin.backwardMerge(
-      left, dim, Seq("user_id"), "ts", "rts",
-      Seq(("ref_value", "ref_value"), ("ref_type", "ref_type")))
-      .filter(col("user_id") < 100)
-      .select("event_id", "user_id", "ref_value")
-    out.collect()
-    val p = out.queryExecution.executedPlan.toString
-    val leftScan = p.linesIterator
-      .filter(l => l.contains("Scan parquet") && l.contains("events"))
-      .mkString("\n")
-    assert(leftScan.contains("LessThan(user_id,100)"),
-      s"left predicate must reach PushedFilters on the events scan:\n$leftScan")
-    assert(!leftScan.contains("event_type"),
-      s"unused left columns must be pruned from the events ReadSchema:\n$leftScan")
-    // and the rewrite is sound: same rows as filtering/projecting the
-    // composed path's result
-    val expected = graft.operators.AsOfJoin.backward(
-      left, dim, Seq("user_id"), "ts", "rts",
-      Seq(("ref_value", "ref_value"), ("ref_type", "ref_type")))
-      .filter(col("user_id") < 100)
-      .select("event_id", "user_id", "ref_value")
-    assert(out.exceptAll(expected).isEmpty && expected.exceptAll(out).isEmpty)
-  }
-
-  test("as-of merge on bucketed tables runs with ZERO exchange; composed cannot") {
-    // the custom exec's co-location story at 100 TB: its
-    // ClusteredDistribution(requireAllClusterKeys) is satisfied by tables
-    // bucketed on the join key, so enrich-at-rest over pre-bucketed event
-    // and reference tables is exchange-FREE (only partition-local sorts).
-    // The composed union-window can never do this: Union destroys the
-    // children's partitioning, so its window always pays a shuffle —
-    // a structural advantage of the custom tier, pinned here.
-    spark.sql("DROP TABLE IF EXISTS b_asof_events")
-    spark.sql("DROP TABLE IF EXISTS b_asof_dim")
-    Seq("b_asof_events", "b_asof_dim").foreach { t =>
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
-    }
-    val t = Tables(spark, sf)
-    t.events.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      .write.bucketBy(8, "user_id").sortBy("user_id")
-      .mode("overwrite").saveAsTable("b_asof_events")
-    t.events.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"))
-      .write.bucketBy(8, "user_id").sortBy("user_id")
-      .mode("overwrite").saveAsTable("b_asof_dim")
-    try {
-      val merged = graft.operators.AsOfJoin.backwardMerge(
-        spark.table("b_asof_events"), spark.table("b_asof_dim"),
-        Seq("user_id"), "ts", "click_ts", Seq(("click_ts", "last_click_ts")))
-      merged.collect()
-      val p = merged.queryExecution.executedPlan.toString
-      assert(p.contains("AsOfMergeJoin"), p.take(2000))
-      assert(!p.contains("Exchange"),
-        s"bucketed as-of merge must not shuffle either side:\n${p.take(2500)}")
-      val composed = graft.operators.AsOfJoin.backward(
-        spark.table("b_asof_events"), spark.table("b_asof_dim"),
-        Seq("user_id"), "ts", "click_ts", Seq(("click_ts", "last_click_ts")))
-      composed.collect()
-      assert(composed.queryExecution.executedPlan.toString.contains("Exchange"),
-        "expected the union-window path to shuffle even on bucketed inputs " +
-          "(if this ever stops holding, the co-location contrast above is stale)")
-      // same rows either way
-      assert(merged.exceptAll(composed).isEmpty && composed.exceptAll(merged).isEmpty)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS b_asof_events")
-      spark.sql("DROP TABLE IF EXISTS b_asof_dim")
-    }
-  }
-
   test("v04 exact profile: no Expand, per-column arms with pruned scans") {
     // r17 shape: ExactDistinct runs one two-level aggregate per column —
     // no Expand (rows x |cols|+1) multi-distinct rewrite, and each union

@@ -131,14 +131,14 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("as-of: merge exec == composed window over random tie-heavy inputs") {
+  test("as-of: composed window matches a driver-side model over random tie-heavy inputs") {
     import spark.implicits._
+    import graft.operators.AsOfJoin
     // TINY key/time domains force heavy collisions: many rows per key,
     // many equal-(key, time) right groups — the regime where the
-    // content-hash tie-break actually decides winners. Right values stay
-    // non-null and left times non-null, the two documented degenerate
-    // divergences between the paths (AsOfMergeJoin scaladoc); everything
-    // else, including ties, must match bit-for-bit.
+    // content-hash tie-break actually decides winners. Right values and
+    // left times stay non-null (AsOfJoin's documented degenerate cases
+    // are pinned in OperatorSpec).
     val genRows = Gen.zip(
       Gen.listOfN(40, Gen.zip(Gen.choose(0L, 3L), Gen.choose(0L, 5L))),
       Gen.listOfN(25, Gen.zip(Gen.choose(0L, 3L), Gen.choose(0L, 5L),
@@ -154,16 +154,44 @@ class PropertySpec extends SparkSpec {
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.select("id", "v").collect()
           .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-      val composed = canon(graft.operators.AsOfJoin.backward(
-        left, right, Seq("k"), "ts", "rts", Seq(("v", "v")), tol))
-      val merged = canon(graft.operators.AsOfJoin.backwardMerge(
-        left, right, Seq("k"), "ts", "rts", Seq(("v", "v")), tol))
-      assert(merged === composed, s"backward diverged (tol=$tol)")
-      val composedF = canon(graft.operators.AsOfJoin.forward(
-        left, right, Seq("k"), "ts", "rts", Seq(("v", "v")), tol))
-      val mergedF = canon(graft.operators.AsOfJoin.forwardMerge(
-        left, right, Seq("k"), "ts", "rts", Seq(("v", "v")), tol))
-      assert(mergedF === composedF, s"forward diverged (tol=$tol)")
+      // the model: the matched right time is the max (backward) / min
+      // (forward) right time of the key on the correct side of t, within
+      // tolerance; the value must be one of those at that (key, time)
+      val valuesAt = rightRaw.groupBy { case (k, t, _) => (k, t) }
+        .map { case (kt, rs) => kt -> rs.map { case (_, _, v) => s"v$v" }.toSet }
+      def model(forwardDir: Boolean): Map[Long, Option[Set[String]]] =
+        leftRaw.zipWithIndex.map { case ((k, t), i) =>
+          val times = rightRaw.collect { case (`k`, rt, _)
+            if (if (forwardDir) rt >= t else rt <= t) &&
+              tol.forall(math.abs(rt - t) <= _) => rt }
+          val matched =
+            if (times.isEmpty) None
+            else Some(if (forwardDir) times.min else times.max)
+          i.toLong -> matched.map(rt => valuesAt((k, rt)))
+        }.toMap
+      for (forwardDir <- Seq(false, true)) {
+        def run(l: org.apache.spark.sql.DataFrame,
+            r: org.apache.spark.sql.DataFrame) = canon(
+          if (forwardDir) AsOfJoin.forward(l, r, Seq("k"), "ts", "rts",
+            Seq(("v", "v")), tol)
+          else AsOfJoin.backward(l, r, Seq("k"), "ts", "rts",
+            Seq(("v", "v")), tol))
+        val got = run(left, right)
+        val expect = model(forwardDir)
+        val dir = if (forwardDir) "forward" else "backward"
+        assert(got.keySet === expect.keySet, s"$dir lost left rows (tol=$tol)")
+        expect.foreach { case (id, allowed) =>
+          assert(got(id).isEmpty === allowed.isEmpty,
+            s"$dir id=$id matched=${got(id)} expected=$allowed (tol=$tol)")
+          allowed.foreach(vs => assert(vs.contains(got(id).get),
+            s"$dir id=$id took ${got(id)}, not a value at the matched time $vs"))
+        }
+        // the tie winner is a content hash, not an accident of layout
+        assert(run(left.repartition(2), right.repartition(5)) === got,
+          s"$dir changed under repartition(2)/(5) (tol=$tol)")
+        assert(run(left.repartition(7), right.repartition(3)) === got,
+          s"$dir changed under repartition(7)/(3) (tol=$tol)")
+      }
     }
   }
 

@@ -19,6 +19,20 @@ class SessionsSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.codegen.factoryMode") === "CODEGEN_ONLY")
   }
 
+  test("register() twice keeps GenTableMetadataAggregate in the optimizer once") {
+    import graft.plans.{GenTableMetadataAggregate, GraftExtensions}
+    // Sessions.local builds with the config path; register() on top of it
+    // must see the injected rule and not append a second copy
+    assert(spark.conf.get("spark.sql.extensions") === "graft.plans.GraftExtensions")
+    GraftExtensions.register(spark)
+    GraftExtensions.register(spark)
+    // the two lists the optimizer draws extension rules from: the
+    // injected rules and the session's experimental extra optimizations
+    val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules ++
+      spark.experimental.extraOptimizations
+    assert(rules.count(_ == GenTableMetadataAggregate) === 1, rules.mkString(", "))
+  }
+
   test("GraftExtensions class applies cleanly to SparkSessionExtensions") {
     // the spark.sql.extensions entry point must be instantiable + applicable
     val ext = new org.apache.spark.sql.SparkSessionExtensions
