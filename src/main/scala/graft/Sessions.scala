@@ -47,8 +47,8 @@ object Sessions {
       // every revisit — ~1.5-3.5 s each; see SCALE.md §9)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       // build-time extension injection: the SQL DML resolution rule
-      // (GenTableDml) has no post-hoc registration path — everything
-      // else register() below re-adds idempotently
+      // (GenTableDml) has no post-hoc registration path; register()
+      // below finds everything else already there and adds nothing
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

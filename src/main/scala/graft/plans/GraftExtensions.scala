@@ -31,15 +31,7 @@ import graft.functions.{CosineSimilarity, Int8Cosine, Int8Pack, UnicodeNormalize
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.cosineSimDescriptor)
-    ext.injectFunction(GraftExtensions.vectorDotDescriptor)
-    ext.injectFunction(GraftExtensions.int8PackDescriptor)
-    ext.injectFunction(GraftExtensions.int8CosineDescriptor)
-    ext.injectFunction(GraftExtensions.bloomAggDescriptor)
-    ext.injectFunction(GraftExtensions.bloomMightContainDescriptor)
-    ext.injectFunction(GraftExtensions.unicodeNormalizeDescriptor)
-    ext.injectFunction(GraftExtensions.pqEncodeDescriptor)
-    ext.injectFunction(GraftExtensions.pqAdcTableDescriptor)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     // SQL table functions for the lake's operational plane (history /
     // CDC diff / disk audit as relations — see GenTableTvf)
     GraftExtensions.tableFunctions.foreach(ext.injectTableFunction)
@@ -182,6 +174,11 @@ object GraftExtensions {
       graft.functions.PqAdcTable(vec, flat, m, ksub)
     })
 
+  private val functions = Seq(cosineSimDescriptor, vectorDotDescriptor,
+    int8PackDescriptor, int8CosineDescriptor, bloomAggDescriptor,
+    bloomMightContainDescriptor, unicodeNormalizeDescriptor, pqEncodeDescriptor,
+    pqAdcTableDescriptor)
+
   private val tableFunctions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] = Seq(
@@ -195,67 +192,29 @@ object GraftExtensions {
       new ExpressionInfo(GenTableTvf.getClass.getName, "gentable_fsck"),
       GenTableTvf.fsck _))
 
-  /** Runtime twin of the config-path `injectOptimizerRule`: adds
-    * [[GenTableMetadataAggregate]] to the live session's extra
-    * optimizations unless it is already there. Synchronized on the
-    * session — the list is session-global mutable state and a bare
-    * check-then-append would race.
+  /** Registration on a live session; safe to call more than once. Adds
+    * only what the session lacks: on a session built with the extension,
+    * or after an earlier call, it replaces nothing, so a query planned on
+    * another thread never sees a function swapped under it. Synchronized
+    * on the session: the registries and the optimizer's rule list are
+    * session-global, and a bare check-then-add would race.
     */
-  private def registerMetadataAggregate(spark: SparkSession): Unit =
-    spark.synchronized {
-      val exp = spark.experimental
-      // injected by the config path, or appended by an earlier call:
-      // either way a second copy would run the rule twice per plan
-      val in = spark.sessionState.optimizer.extendedOperatorOptimizationRules
-        .contains(GenTableMetadataAggregate) ||
-        exp.extraOptimizations.contains(GenTableMetadataAggregate)
-      if (!in)
-        exp.extraOptimizations = exp.extraOptimizations :+ GenTableMetadataAggregate
+  def register(spark: SparkSession): Unit = spark.synchronized {
+    // the runtime twin of the config path's injectOptimizerRule; a second
+    // copy of the rule would run twice per plan
+    val exp = spark.experimental
+    if (!spark.sessionState.optimizer.extendedOperatorOptimizationRules
+        .contains(GenTableMetadataAggregate) &&
+        !exp.extraOptimizations.contains(GenTableMetadataAggregate))
+      exp.extraOptimizations = exp.extraOptimizations :+ GenTableMetadataAggregate
+    val tables = spark.sessionState.tableFunctionRegistry
+    tableFunctions.foreach { case (id, info, builder) =>
+      if (!tables.functionExists(id)) tables.registerFunction(id, info, builder)
     }
-
-  /** Registration on a live session; safe to call more than once. */
-  def register(spark: SparkSession): Unit = {
-    registerMetadataAggregate(spark)
-    tableFunctions.foreach { case (id, _, builder) =>
-      spark.sessionState.tableFunctionRegistry
-        .createOrReplaceTempFunction(id.funcName, builder, "built-in")
+    val scalars = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, builder) =>
+      if (!scalars.functionExists(id)) scalars.registerFunction(id, info, builder)
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      children => cosineSimDescriptor._3(children),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dot",
-      children => vectorDotDescriptor._3(children),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_pack",
-      children => int8PackDescriptor._3(children),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_cosine",
-      children => int8CosineDescriptor._3(children),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      children => bloomAggDescriptor._3(children),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      children => bloomMightContainDescriptor._3(children),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unicode_normalize",
-      children => unicodeNormalizeDescriptor._3(children),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode",
-      children => pqEncodeDescriptor._3(children),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_adc_table",
-      children => pqAdcTableDescriptor._3(children),
-      "built-in")
   }
 
   /** Column-API access to the native expressions (requires `register`). */

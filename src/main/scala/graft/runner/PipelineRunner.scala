@@ -1,10 +1,13 @@
 package graft.runner
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CompletableFuture, ConcurrentLinkedQueue, CountDownLatch, Executors}
+import scala.util.control.ControlThrowable
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,7 +16,7 @@ import org.apache.spark.sql.types._
   * reference's control plane:
   *
   *  - E2 (Step Functions `${Env}-etl-workflow` running `${Env}-orders-job`,
-  *    `Hoth/FHIR/cloudformations/lambda-stack.yml:42-55`): `run` sequences
+  *    `Hoth/FHIR/cloudformations/lambda-stack.yml:42-55`): `run` runs
   *    named stages to completion, failing fast like
   *    `glue:startJobRun.sync`, and writes a structured run manifest where
   *    the reference would publish to SNS.
@@ -30,36 +33,96 @@ object PipelineRunner {
 
   type Stage = (String, (SparkSession, EngineConfig) => DataFrame)
 
-  /** Runs stages in order; each stage's result is written to
-    * `outputDir/<stage>` as parquet. A stage's `rows` are counted inside
-    * its write job (an `Observation` read after the write returns), so
-    * the runner adds no job of its own to a stage. Returns per-stage
-    * results and writes `outputDir/manifest.json`. A failed stage stops
-    * the run (the remaining stages are reported as "skipped"), mirroring
-    * the state machine's fail-fast `.sync` task.
+  /** Runs a pipeline to completion, failing fast like the state machine's
+    * `.sync` task, and writes `outputDir/manifest.json`. Each stage's frame
+    * is written to `outputDir/<stage>` as parquet. Its `rows` are counted
+    * inside its write job (an `Observation` read after the write returns),
+    * so the runner adds no Spark job of its own.
+    *
+    * Stages run at once, one daemon thread each. Every thread carries the
+    * caller's Spark local properties (job group, description, scheduler
+    * pool) and active session, so the jobs a stage submits are attributed
+    * as if the caller had submitted them. The runner sets no job group.
+    *  - Start order: the stages' threads start in declaration order; stage
+    *    k+1 starts once stage k's function has made its first [[output]]
+    *    call or has returned. Stage functions are thus entered one at a
+    *    time, in order. No stage starts once one has failed, so a stage
+    *    that fails while building its frame stops the run before the next
+    *    stage starts.
+    *  - Reads: a stage reads another stage's output only through
+    *    [[output]], which waits for an earlier stage's write (see there).
+    *    A raw `spark.read` of `outputDir/<stage>` may run before that stage
+    *    has written.
+    *  - Statuses are those a one-at-a-time run reports: each stage up to
+    *    the first failure in declaration order reports its own status
+    *    ("ok" or "failed: <exception class>"); every stage after it is
+    *    "skipped" with 0 rows and 0 ms, whatever it did. Once all stage
+    *    threads have ended, the output directory of every skipped stage
+    *    that wrote in this run is deleted, so nothing behind a failed gate
+    *    is published.
+    *  - `millis` is a stage's wall from its thread's start to the end of
+    *    its write, including the time it waited on upstream stages.
+    *
+    * Returns after every stage thread has ended; a failing run waits for
+    * stages already running. A stage that throws a non-`Exception`
+    * `Throwable` counts as a failure, and `run` rethrows it at the end.
+    *
+    * Session state the stages share: Spark runs jobs from concurrent
+    * threads of one session, but a stage that changes session state does
+    * so for every stage. In the operators stages run, such changes keep to
+    * three patterns. `Corpus`'s bloom builds raise
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` and restore it
+    * under one lock; the bracket only ever raises the cap, so a query
+    * planned concurrently inside it sees a higher cap, never a lower one.
+    * `GraftExtensions.register` adds only what the session lacks, so it
+    * swaps no function under a concurrent plan. A persist/unpersist pair
+    * over a plan that another running stage also caches shares one cache
+    * entry; the first unpersist makes the other recompute, with the same
+    * result.
     */
   def run(spark: SparkSession, config: EngineConfig, stages: Seq[Stage]): Seq[StageResult] = {
+    val names = stages.map(_._1).toIndexedSeq
+    require(names.distinct.size == names.size,
+      s"stage names must be distinct: ${names.mkString(", ")}")
     Files.createDirectories(Paths.get(config.outputDir))
-    var failed = false
-    val results = stages.map { case (name, fn) =>
-      if (failed) StageResult(name, 0L, 0L, "skipped")
-      else {
-        val t0 = System.nanoTime()
-        try {
-          val obs = Observation()
-          fn(spark, config).observe(obs, count(lit(1)).as("rows"))
-            .write.mode("overwrite").parquet(s"${config.outputDir}/$name")
-          // only reached once the write succeeded, so the metric is posted
-          val rows = obs.get("rows").asInstanceOf[Long]
-          StageResult(name, rows, (System.nanoTime() - t0) / 1000000, "ok")
-        } catch {
-          case e: Exception =>
-            failed = true
-            StageResult(name, 0L, (System.nanoTime() - t0) / 1000000,
-              s"failed: ${e.getClass.getSimpleName}")
+    val live = new Running(config.outputDir, names)
+    val threads = new ConcurrentLinkedQueue[Thread]
+    val pool = Executors.newFixedThreadPool(math.max(names.size, 1), { (task: Runnable) =>
+      val t = new Thread(task, "PipelineRunner-stage")
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    })
+    try {
+      var k = 0
+      while (k < names.size && !live.failed) {
+        val (name, fn) = stages(k)
+        val me = k
+        SQLExecution.withThreadLocalCaptured(
+            spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool) {
+          Thread.currentThread.setName(s"PipelineRunner-$name")
+          live.outcome(me).complete(runStage(spark, config, live, me, fn))
+          live.entered(me).countDown()
         }
+        live.entered(k).await()
+        k += 1
       }
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
     }
+    def skipped(k: Int) = StageResult(names(k), 0L, 0L, "skipped")
+    val own = names.indices.map(k =>
+      if (live.outcome(k).isDone) live.outcome(k).join() else skipped(k))
+    val firstFailure = own.indexWhere(_.status.startsWith("failed"))
+    val results = names.indices.map(k =>
+      if (firstFailure >= 0 && k > firstFailure) skipped(k) else own(k))
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (k <- names.indices if results(k).status == "skipped" && live.wrote(k)) {
+      val dir = new Path(s"${config.outputDir}/${names(k)}")
+      dir.getFileSystem(conf).delete(dir, true)
+    }
+    live.fatal.foreach(e => throw e)
     def esc(v: String): String = v.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -74,14 +137,84 @@ object PipelineRunner {
     results
   }
 
+  /** One `run` in flight: per stage, in declaration order, whether its
+    * function has been entered far enough for the next stage to start,
+    * its own outcome (before `run`'s status rule), and whether it
+    * began its write.
+    */
+  private final class Running(val outputDir: String, val names: IndexedSeq[String]) {
+    val entered: IndexedSeq[CountDownLatch] = names.map(_ => new CountDownLatch(1))
+    val outcome: IndexedSeq[CompletableFuture[StageResult]] =
+      names.map(_ => new CompletableFuture[StageResult])
+    val wrote: Array[Boolean] = new Array[Boolean](names.size)
+    @volatile var failed = false
+    @volatile var fatal: Option[Throwable] = None
+  }
+
+  /** The stage a runner thread is running, for [[output]]. */
+  private val current = new ThreadLocal[(Running, Int)]
+
+  /** Thrown by [[output]] when the stage it waited on did not write: the
+    * caller ends "skipped". A control throwable, so a stage's own
+    * `NonFatal` handlers let it pass.
+    */
+  private final class UpstreamNotWritten extends ControlThrowable
+
+  private def runStage(spark: SparkSession, config: EngineConfig, r: Running, k: Int,
+      fn: (SparkSession, EngineConfig) => DataFrame): StageResult = {
+    val name = r.names(k)
+    val t0 = System.nanoTime()
+    def failed(e: Throwable) = {
+      r.failed = true
+      StageResult(name, 0L, (System.nanoTime() - t0) / 1000000,
+        s"failed: ${e.getClass.getSimpleName}")
+    }
+    current.set((r, k))
+    try {
+      val obs = Observation()
+      val df = fn(spark, config).observe(obs, count(lit(1)).as("rows"))
+      r.entered(k).countDown()
+      r.wrote(k) = true
+      df.write.mode("overwrite").parquet(s"${config.outputDir}/$name")
+      // only reached once the write succeeded, so the metric is posted
+      StageResult(name, obs.get("rows").asInstanceOf[Long],
+        (System.nanoTime() - t0) / 1000000, "ok")
+    } catch {
+      case _: UpstreamNotWritten => StageResult(name, 0L, 0L, "skipped")
+      case e: Exception => failed(e)
+      case e: Throwable => r.fatal = Some(e); failed(e)
+    } finally current.remove()
+  }
+
   /** A stage's persisted output, read with the schema Spark recorded in
     * the footer of the stage's first data file (the
     * `org.apache.spark.sql.parquet.row.metadata` string that schema
     * inference would read), so opening it submits no Spark job. Every
     * runner-written stage directory holds at least one data file: Spark
     * writes an empty one when a stage produced no rows.
+    *
+    * Called by a stage of a running [[run]] into the same `outputDir`,
+    * for a stage declared before the caller, it first blocks until that
+    * stage has written; if that stage did not succeed, the caller ends
+    * "skipped". Any other read (the caller itself, a later stage, a stage
+    * not in the run, or a call from outside a run) reads at once, so
+    * waits never form a cycle and a forward read still fails on a
+    * directory that holds no data file. The first call of a stage lets
+    * the next stage start.
     */
-  def output(spark: SparkSession, cfg: EngineConfig, stage: String): DataFrame = {
+  def output(spark: SparkSession, cfg: EngineConfig, stage: String): DataFrame =
+    current.get match {
+      case (r, me) if r.outputDir == cfg.outputDir =>
+        val up = r.names.indexOf(stage)
+        if (up >= 0 && up < me) {
+          r.entered(me).countDown()
+          if (r.outcome(up).join().status != "ok") throw new UpstreamNotWritten
+          read(spark, cfg, stage)
+        } else try read(spark, cfg, stage) finally r.entered(me).countDown()
+      case _ => read(spark, cfg, stage)
+    }
+
+  private def read(spark: SparkSession, cfg: EngineConfig, stage: String): DataFrame = {
     val dir = new Path(s"${cfg.outputDir}/$stage")
     val conf = spark.sparkContext.hadoopConfiguration
     val data = dir.getFileSystem(conf).listStatus(dir).filter { s =>

@@ -143,14 +143,14 @@ class PipelineRunnerSpec extends SparkSpec {
       "ingest" -> { (s, cfg) => s.read.parquet(s"${cfg.inputDir}/batch") },
       "validate" -> { (s, cfg) =>
         import graft.operators.Validate
-        val rep = Validate.report(s.read.parquet(s"${cfg.outputDir}/ingest"),
+        val rep = Validate.report(PipelineRunner.output(s, cfg, "ingest"),
           Seq(Validate.notNull("o_custkey"))).localCheckpoint(true)
         val bad = rep.filter(!col("pass")).collect()
         require(bad.isEmpty, s"constraint violations: ${bad.mkString("; ")}")
         rep
       },
       "aggregate" -> { (s, cfg) =>
-        s.read.parquet(s"${cfg.outputDir}/ingest")
+        PipelineRunner.output(s, cfg, "ingest")
           .agg(sum(col("o_totalprice")).as("total"))
       })
     val r = PipelineRunner.promote(spark,
@@ -158,10 +158,11 @@ class PipelineRunnerSpec extends SparkSpec {
       EngineConfig("test", sf01, fullOut), stages)
     assert(!r.promoted)
     assert(r.full.isEmpty)
-    assert(r.smoke.map(_.status) match {
-      case Seq("ok", failed, "skipped") => failed.startsWith("failed")
-      case _ => false
-    }, r.smoke.mkString(", "))
+    // the constraint's require is what failed, not a read of the ingest
+    assert(r.smoke.map(_.status) ===
+      Seq("ok", "failed: IllegalArgumentException", "skipped"), r.smoke.mkString(", "))
+    // nothing behind the failed gate is published, even if it ran
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$smokeOut/aggregate")))
     // the full environment was never touched: no stage output, no manifest
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$fullOut/manifest.json")))
@@ -235,6 +236,83 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(results.head.status === "ok")
     assert(results(1).status.startsWith("failed"), results(1).status)
     assert(results(2) === StageResult("never", 0L, 0L, "skipped"))
+  }
+
+  test("independent stages run at once: both meet at one barrier") {
+    val cfg = EngineConfig("dev", sf, tempDir("graft_run_barrier"))
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    def meet(name: String): PipelineRunner.Stage = name -> { (s, c) =>
+      val in = PipelineRunner.output(s, c, "numbers")
+      // a sequential runner enters the second stage only after the first
+      // returned, so the first would time out here
+      barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      in
+    }
+    val results = PipelineRunner.run(spark, cfg, Seq(
+      "numbers" -> ((s, _) => s.range(0, 10, 1, 2).toDF()), meet("left"), meet("right")))
+    assert(results.map(r => (r.stage, r.rows, r.status)) === Seq(
+      ("numbers", 10L, "ok"), ("left", 10L, "ok"), ("right", 10L, "ok")))
+  }
+
+  test("a stage after a failed write is skipped and its output removed, even if it wrote") {
+    val cfg = EngineConfig("dev", sf, tempDir("graft_run_unpublish"))
+    val boom = udf((id: Long) => {
+      // give the independent stage below time to finish its write first
+      Thread.sleep(2000)
+      if (id >= 0) throw new IllegalStateException(s"boom at $id")
+      id
+    })
+    val stages: Seq[PipelineRunner.Stage] = Seq(
+      "numbers" -> ((s, _) => s.range(0, 4, 1, 1).toDF()),
+      "boom" -> ((s, c) => PipelineRunner.output(s, c, "numbers").select(boom(col("id")).as("id"))),
+      "independent" -> ((s, c) => PipelineRunner.output(s, c, "numbers")))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val results = Await.result(Future(PipelineRunner.run(spark, cfg, stages)), 2.minutes)
+    assert(results.head.status === "ok")
+    assert(results(1).status.startsWith("failed"), results(1).status)
+    assert(results(2) === StageResult("independent", 0L, 0L, "skipped"))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"${cfg.outputDir}/independent")))
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"${cfg.outputDir}/numbers")))
+  }
+
+  test("a read of a later stage fails at once and the run still ends") {
+    val cfg = EngineConfig("dev", sf, tempDir("graft_run_forward"))
+    val stages: Seq[PipelineRunner.Stage] = Seq(
+      "first" -> ((s, _) => s.range(0, 10, 1, 1).toDF()),
+      // reads a stage declared after it: no wait, the directory is absent
+      "early" -> ((s, c) => PipelineRunner.output(s, c, "late")),
+      "late" -> ((s, c) => PipelineRunner.output(s, c, "first")),
+      "after" -> ((s, c) => PipelineRunner.output(s, c, "early")))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val results = Await.result(Future(PipelineRunner.run(spark, cfg, stages)), 2.minutes)
+    assert(results.head.status === "ok")
+    assert(results(1).status.startsWith("failed"), results(1).status)
+    assert(results.drop(2) === Seq(
+      StageResult("late", 0L, 0L, "skipped"), StageResult("after", 0L, 0L, "skipped")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"${cfg.outputDir}/late")))
+  }
+
+  test("run returns only after its stage threads, all daemons, have ended") {
+    val cfg = EngineConfig("dev", sf, tempDir("graft_run_threads"))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
+    def probe(name: String, from: Option[String]): PipelineRunner.Stage = name -> { (s, c) =>
+      seen.add(Thread.currentThread)
+      from.map(PipelineRunner.output(s, c, _)).getOrElse(s.range(0, 5, 1, 1).toDF())
+    }
+    val results = PipelineRunner.run(spark, cfg, Seq(
+      probe("t_source", None), probe("t_copy", Some("t_source")),
+      probe("t_other", Some("t_source"))))
+    assert(results.forall(_.status == "ok"), results.mkString(", "))
+    import scala.jdk.CollectionConverters._
+    val threads = seen.asScala.toSeq
+    assert(threads.size === 3 && threads.distinct.size === 3)
+    assert(!threads.contains(Thread.currentThread))
+    assert(threads.forall(_.isDaemon))
+    assert(threads.forall(!_.isAlive), threads.filter(_.isAlive).map(_.getName))
   }
 
   test("parseTriggers decodes the Lambda-shaped event payload") {

@@ -33,6 +33,20 @@ class SessionsSpec extends SparkSpec {
     assert(rules.count(_ == GenTableMetadataAggregate) === 1, rules.mkString(", "))
   }
 
+  test("register() on a session that holds the functions replaces none of them") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier("cosine_sim")
+    // a replacement registers a fresh ExpressionInfo (and logs a WARN)
+    def entry = (registry.lookupFunction(id), registry.lookupFunctionBuilder(id))
+    val (info, builder) = entry
+    assert(info.isDefined && builder.isDefined)
+    graft.plans.GraftExtensions.register(spark)
+    val (infoAfter, builderAfter) = entry
+    assert(infoAfter.exists(_ eq info.get), "register() replaced cosine_sim")
+    assert(builderAfter.exists(_ eq builder.get), "register() replaced cosine_sim's builder")
+  }
+
   test("GraftExtensions class applies cleanly to SparkSessionExtensions") {
     // the spark.sql.extensions entry point must be instantiable + applicable
     val ext = new org.apache.spark.sql.SparkSessionExtensions
